@@ -1736,9 +1736,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      partition_by=())
         rep = t.rollback(0)
         assert rep['orphaned'] == [1], rep
-        snap = t.append(ev.filter(F.pmod('event_id', F.lit(3)) == 2),
-                        partition_by=())
-        assert snap['snapshot_id'] == 2 and snap['parent'] == 0, snap
+        t.append(ev.filter(F.pmod('event_id', F.lit(3)) == 2), partition_by=())
+        lineage = [s['snapshot_id'] for s in t.history()]
+        assert lineage == [0, 2], lineage
         return t.read(spark).select(
             'event_id', 'ts', 'user_id', 'event_type',
             F.round('value', 6).alias('value'))

@@ -68,12 +68,6 @@ def compute_theta_hat(h_hat_matrix, lambda_scaled_identity, h_hat_vector):
     return np.linalg.solve(h_hat_matrix + lambda_scaled_identity, h_hat_vector)
 
 
-def j_of_theta(alpha, g_xref_theta, g_xtest_theta):
-    return ((alpha / 2.0) * np.mean(g_xref_theta ** 2)
-            + ((1 - alpha) / 2.0) * np.mean(g_xtest_theta ** 2)
-            - np.mean(g_xref_theta))
-
-
 def g_of_x_theta(kernel_matrix_samples, theta_hat):
     return theta_hat.T @ kernel_matrix_samples
 

@@ -417,22 +417,6 @@ def learn_bpe_merges_windowed(df: DataFrame, n_rounds: int = 18,
     return merges, rep
 
 
-def bpe_merges_windowed(df: DataFrame, n_rounds: int = 18, batch: int = 64,
-                        candidates: int = 2048, window: int = 4,
-                        text_col: str = 'text',
-                        mode: str = 'rank') -> DataFrame:
-    """The windowed learned merge table as a DataFrame — the contract-query
-    face of :func:`learn_bpe_merges_windowed`."""
-    spark = df.sparkSession
-    merges, rep = learn_bpe_merges_windowed(
-        df, n_rounds=n_rounds, batch=batch, candidates=candidates,
-        window=window, text_col=text_col, mode=mode)
-    rep.unpersist()
-    return spark.createDataFrame(
-        [(m['merge_rank'], m['lhs'], m['rhs'], m['merged'], m['pair_count'])
-         for m in merges], MERGE_SCHEMA)
-
-
 def bpe_tokenize_windowed(df: DataFrame, merges=None, window_reprs=None,
                           n_rounds: int = 18, batch: int = 64,
                           candidates: int = 2048, window: int = 4,

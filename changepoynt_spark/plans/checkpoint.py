@@ -19,7 +19,7 @@ at 10^12 scale: the bucket count is the unit of work AND of failure.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from changepoynt_spark import __version__ as KERNEL_VERSION
@@ -32,18 +32,6 @@ BUCKET_COL = 'doc_bucket'
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(BUCKET_COL,
                          F.pmod(F.xxhash64('doc_id'), F.lit(n_buckets)).cast('int'))
-
-
-def bucket_fingerprint(df: DataFrame) -> dict:
-    """Order-independent fingerprint of a bucket's input: bitwise XOR of
-    per-doc hashes plus counts (cheap one-pass aggregate; XOR cannot
-    overflow, unlike a sum under ANSI arithmetic)."""
-    row = df.agg(
-        F.count('*').alias('docs'),
-        F.sum('n_tok').alias('tokens'),
-        F.expr('bit_xor(xxhash64(doc_id, tokens, n_tok))').alias('hashxor')).first()
-    return {'docs': int(row['docs'] or 0), 'tokens': int(row['tokens'] or 0),
-            'hashxor': int(row['hashxor'] or 0)}
 
 
 def all_bucket_fingerprints(bucketed: DataFrame, n_buckets: int) -> dict:
@@ -119,20 +107,17 @@ class RollupCheckpointJob:
             sub = bucketed.filter(F.col(BUCKET_COL) == b)
             blocks = score_rollup(sub.drop(BUCKET_COL), algorithm=self.algorithm,
                                   params=self.params, output='blocks')
-            blocks = blocks.withColumn(BUCKET_COL, F.lit(b))
-            watermark = blocks.agg(F.max('block_start')).first()[0]
+            # the watermark rides the write job as an Observation metric: a
+            # separate max() action would score the whole bucket twice
+            obs = Observation()
+            blocks = (blocks.withColumn(BUCKET_COL, F.lit(b))
+                      .observe(obs, F.max('block_start').alias('wm')))
             stale = done.get(b)  # reprocessing a changed bucket replaces its snapshot
             self.table.append(
                 blocks, partition_by=('source', BUCKET_COL, 'tier'),
                 invalidates=[stale['snapshot_id']] if stale else (),
-                properties={
-                    'bucket': b,
-                    'fingerprint': fp,
-                    'watermark': str(watermark),
-                    'algorithm': self.algorithm,
-                    'params': repr(sorted(self.params.items())),
-                    'kernel_version': KERNEL_VERSION,
-                })
+                properties={'bucket': b, 'fingerprint': fp, **self._props_current()},
+                properties_fn=lambda obs=obs: {'watermark': str(obs.get['wm'])})
             processed.append(b)
         return {'processed': processed, 'skipped': skipped,
                 'remaining': [p[0] for p in pending[len(processed):]]}

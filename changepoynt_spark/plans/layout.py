@@ -59,56 +59,3 @@ def read_time_range(spark: SparkSession, path: str, start: str, end: str,
             .filter((F.col('p_date') >= F.to_date(F.lit(start)))
                     & (F.col('p_date') <= F.to_date(F.lit(end)))
                     & (F.col(ts_col) >= lo) & (F.col(ts_col) <= hi)))
-
-
-def _zvalue(col_a, col_b, bits: int = 16):
-    """Interleave the low ``bits`` of two non-negative int columns into a
-    Z-curve value (Morton order) with pure bit expressions."""
-    z = F.lit(0).cast('long')
-    for i in range(bits):
-        bit_a = F.shiftright(col_a, i).bitwiseAND(F.lit(1))
-        bit_b = F.shiftright(col_b, i).bitwiseAND(F.lit(1))
-        z = z.bitwiseOR(F.shiftleft(bit_a, 2 * i + 1)) \
-             .bitwiseOR(F.shiftleft(bit_b, 2 * i))
-    return z
-
-
-def write_zordered(df: DataFrame, path: str, col_a: str, col_b: str,
-                   n_files: int = 16, bits: int = 16) -> None:
-    """Write df Z-ORDER clustered on (col_a, col_b): each column is
-    rank-bucketed to ``bits`` bits, the buckets are Morton-interleaved, and
-    files are range-partitioned by the Z value.
-
-    A single-column sort gives perfect file skipping on ONE dimension and
-    none on the other; Z-ordering gives every file a narrow min/max range
-    on BOTH columns, so parquet row-group/file pruning works for
-    predicates on either (or both) — the reason Iceberg/Delta ship
-    rewrite-with-zorder for multi-dim time-series tables (series key x
-    time here).  Columns are min/max-scaled into the grid with ONE tiny
-    aggregate broadcast back (a global rank/ntile would funnel the table
-    through one partition — not a write path for 100 TB; for heavily
-    skewed columns substitute approx-quantile cut points, same shape)."""
-    n_buckets = 1 << bits
-
-    def num(c):
-        # NTZ timestamps cannot cast straight to double; route via TIMESTAMP
-        dt = dict(df.dtypes)[c]
-        col = F.col(c)
-        if dt.startswith('timestamp'):
-            col = F.unix_micros(col.cast('timestamp'))
-        return col.cast('double')
-    stats = df.agg(F.min(num(col_a)).alias('_a0'), F.max(num(col_a)).alias('_a1'),
-                   F.min(num(col_b)).alias('_b0'), F.max(num(col_b)).alias('_b1'))
-    z = df.crossJoin(F.broadcast(stats))
-    scale = lambda c, lo, hi: F.least(  # noqa: E731
-        F.lit(n_buckets - 1),
-        F.floor((num(c) - F.col(lo)) / (F.col(hi) - F.col(lo) + F.lit(1e-12))
-                * n_buckets)).cast('long')
-    z = (z.withColumn('_za', scale(col_a, '_a0', '_a1'))
-          .withColumn('_zb', scale(col_b, '_b0', '_b1'))
-          .drop('_a0', '_a1', '_b0', '_b1'))
-    z = z.withColumn('_z', _zvalue(F.col('_za'), F.col('_zb'), bits))
-    (z.repartitionByRange(n_files, '_z')
-      .sortWithinPartitions('_z')
-      .drop('_za', '_zb', '_z')
-      .write.mode('overwrite').parquet(path))

@@ -202,13 +202,10 @@ class ContinuousAggregate:
         Walks the tier lineage newest-first so compaction snapshots (which
         re-record the watermark they preserve) and refresh snapshots both
         count."""
-        sid = self.tier.current_snapshot_id()
-        while sid >= 0:
-            snap = self.tier.snapshot(sid)
+        for snap in self.tier.lineage():
             props = snap['manifest']['properties']
             if WATERMARK_PROP in props:
                 return int(props[WATERMARK_PROP])
-            sid = snap.get('parent', -1)
         return -1
 
     # -- refresh -----------------------------------------------------------
@@ -326,9 +323,7 @@ class ContinuousAggregate:
         read path at ~auto_compact_snapshots of them)."""
         import datetime
         best = None
-        sid = self.tier.current_snapshot_id()
-        while sid >= 0:
-            snap = self.tier.snapshot(sid)
+        for snap in self.tier.lineage():
             props = snap['manifest']['properties']
             w = props.get('rollup_watermark')
             if w and w != 'None':
@@ -336,7 +331,6 @@ class ContinuousAggregate:
                 best = d if best is None or d > best else best
                 if props.get('operation') == 'tier-compact':
                     break       # summarizes the whole lineage below it
-            sid = snap.get('parent', -1)
         return best
 
     # -- read / maintain -----------------------------------------------------
@@ -430,23 +424,21 @@ class ContinuousAggregate:
         gracefully: the walk runs to the root and the cache re-pins."""
         tip = self.tier.current_snapshot_id()
         cached_tip, cached_best = self._stream_bid_cache
-        best = None
-        sid = tip
-        while sid >= 0 and sid != cached_tip:
-            snap = self.tier.snapshot(sid)
+        found = []
+        for snap in self.tier.lineage(tip):
+            if snap['snapshot_id'] == cached_tip:
+                found.append(cached_best)
+                break
             props = snap['manifest']['properties']
             b = props.get('stream_batch_id')
             if b is not None:
-                b = int(b)
-                best = b if best is None or b > best else best
+                found.append(int(b))
                 if props.get('operation') == 'tier-compact':
                     # compaction re-records the max id it preserves: every
                     # id below is <= this summary, so a COLD walk (fresh
                     # process, empty cache) is bounded too
                     break
-            sid = snap.get('parent', -1)
-        if sid == cached_tip and cached_best is not None:
-            best = cached_best if best is None else max(best, cached_best)
+        best = max((b for b in found if b is not None), default=None)
         self._stream_bid_cache = (tip, best)
         return best
 

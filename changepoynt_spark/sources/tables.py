@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
+from collections import OrderedDict
 from typing import Optional
 
 import pandas as pd  # module-level: PEP-563 udf type hints resolve here
@@ -433,6 +435,12 @@ def _partition_eq(pv: str, val):
 _MAINTENANCE_OPS = frozenset({'compact', 'tier-compact', 'expire', 'delete',
                               'delete-cow', 'refresh-full'})
 
+# committed snapshot metadata file name: metadata/snapshot-<id>.json
+_SNAPSHOT_FILE = re.compile(r'snapshot-(\d+)\.json$')
+
+# parsed-manifest cache bound per table handle (LRU beyond it)
+_SNAP_CACHE_MAX = 4096
+
 # executor-side cache: a snapshot's manifest is IMMUTABLE once its json is
 # committed, so (meta_dir, sid) -> operation can be cached forever
 _SNAP_OP_CACHE: dict = {}
@@ -520,8 +528,10 @@ class IcebergishTable:
         # manifest per process instead of one parse per walk per manifest —
         # with bloom-carrying manifests that parse is the dominant metadata
         # cost.  The (mtime_ns, size) signature keeps the cache honest
-        # against out-of-band edits (tests hand-rewrite manifests).
-        self._snap_cache: dict = {}
+        # against out-of-band edits (tests hand-rewrite manifests).  LRU
+        # past _SNAP_CACHE_MAX entries, so a walk longer than the bound
+        # evicts only the coldest manifests, not the whole hot set.
+        self._snap_cache: OrderedDict = OrderedDict()
 
     # -- snapshot bookkeeping ------------------------------------------------
 
@@ -548,23 +558,30 @@ class IcebergishTable:
         sig = (st.st_mtime_ns, st.st_size)
         hit = self._snap_cache.get(sid)
         if hit is not None and hit[0] == sig:
+            self._snap_cache.move_to_end(sid)
             return hit[1]
         with open(path) as f:
             snap = json.load(f)
-        if len(self._snap_cache) >= 4096:     # bound memory on huge lineages
-            self._snap_cache.clear()
         self._snap_cache[sid] = (sig, snap)
+        self._snap_cache.move_to_end(sid)
+        if len(self._snap_cache) > _SNAP_CACHE_MAX:
+            self._snap_cache.popitem(last=False)
         return snap
+
+    def lineage(self, snapshot_id: int = None):
+        """Snapshots from ``snapshot_id`` (default: current) back to the
+        root, newest first, following ``parent`` pointers (-1 = root).
+        The one place that knows the lineage format: callers apply their
+        own stop rule by breaking out of the iteration."""
+        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
+        while sid >= 0:
+            snap = self.snapshot(sid)
+            yield snap
+            sid = snap.get('parent', -1)
 
     def history(self) -> list:
         """Snapshot lineage, oldest first."""
-        out = []
-        sid = self.current_snapshot_id()
-        while sid >= 0:
-            snap = self.snapshot(sid)
-            out.append(snap)
-            sid = snap.get('parent', -1)
-        return out[::-1]
+        return list(self.lineage())[::-1]
 
     def snapshot_as_of(self, ts_ms: int) -> int:
         """Latest lineage snapshot committed at or before ``ts_ms`` — the
@@ -582,15 +599,12 @@ class IcebergishTable:
         (Iceberg rollback): pure metadata, one atomic version-hint flip —
         no data is touched at any scale.  The abandoned descendants stay on
         disk as unreachable orphans (their ids are never reused:
-        :meth:`_next_sid` scans every snapshot file, reachable or not), so
-        a post-rollback append FORKS the lineage cleanly and a later
+        new ids come from every snapshot file on disk, reachable or not),
+        so a post-rollback append FORKS the lineage cleanly and a later
         :meth:`vacuum` reclaims the orphans' files."""
         cur = self.current_snapshot_id()
         assert cur >= 0, f'table {self.root} has no snapshots'
-        chain, sid = [], cur
-        while sid >= 0:
-            chain.append(sid)
-            sid = self.snapshot(sid).get('parent', -1)
+        chain = [s['snapshot_id'] for s in self.lineage(cur)]
         if snapshot_id not in chain:
             raise ValueError(
                 f'snapshot {snapshot_id} is not an ancestor of the current '
@@ -603,19 +617,19 @@ class IcebergishTable:
 
     # -- write / read ----------------------------------------------------------
 
+    def _snapshot_ids_on_disk(self) -> list:
+        """Ids of every snapshot json in ``metadata/``, reachable or not."""
+        if not os.path.isdir(self.meta_dir):
+            return []
+        return [int(m.group(1)) for m in map(_SNAPSHOT_FILE.match,
+                                             os.listdir(self.meta_dir)) if m]
+
     def _next_sid(self) -> int:
         """Next unused snapshot id: max of the version hint and every
         snapshot json on disk.  A crashed multi-snapshot commit (upsert)
         leaves unreachable snapshot files past the hint; ids must skip
         them or the next append would collide with an orphan's data dir."""
-        import re
-        mx = self.current_snapshot_id()
-        if os.path.isdir(self.meta_dir):
-            for name in os.listdir(self.meta_dir):
-                m = re.match(r'snapshot-(\d+)\.json$', name)
-                if m:
-                    mx = max(mx, int(m.group(1)))
-        return mx + 1
+        return max([self.current_snapshot_id(), *self._snapshot_ids_on_disk()]) + 1
 
     def append(self, df: DataFrame, partition_by=('source',), properties: dict = None,
                invalidates=(), cluster_by=None, zorder_by=None, n_files: int = None,
@@ -708,21 +722,29 @@ class IcebergishTable:
                         entry['blooms'] = {c: b for c, b in blooms.items()
                                            if b is not None}
                     files.append(entry)
-        # exact row count from the parquet footers already parsed for the
-        # manifest stats — the re-read .count() this replaces was a second
-        # full scan of every written byte, per append (guide §1/§6: the
-        # write is the only data pass; metadata answers metadata questions)
-        n_rows = sum(e['rows'] for e in files)
-        inv = sorted(int(i) for i in invalidates)
         props = dict(properties or {})
         if properties_fn is not None:
             # post-write property hook: lets callers derive manifest
             # properties from Observation metrics collected DURING the data
             # write (one job instead of a separate pre-commit aggregate)
             props.update(properties_fn() or {})
+        return self._commit(sid, parent, invalidates, props, df.schema.jsonValue(),
+                            partition_by, files, advance_hint=_advance_hint)
+
+    def _commit(self, sid: int, parent: int, invalidates, properties: dict,
+                schema, partition_spec, entries: list,
+                advance_hint: bool = True) -> dict:
+        """The one commit path: every snapshot json of this table is
+        published here — data appends (``entries`` = the written files) and
+        data-less manifest surgery (``entries=[]``, no snap dir) alike.
+        Applies the lineage-barrier rule, writes ``snapshot-<sid>.json``
+        via a temp file + atomic rename, then (unless ``advance_hint`` is
+        False: staged / multi-snapshot commits) flips the version hint."""
+        inv = sorted(int(i) for i in invalidates)
+        props = dict(properties)
         if parent >= 0 and set(inv) >= set(self._live_snapshots(parent)):
             # this commit supersedes EVERY live ancestor (compaction /
-            # full-refresh overwrite): record it so lineage walks
+            # full-refresh overwrite / expiry): record it so lineage walks
             # (_live_snapshots) stop here instead of visiting every
             # snapshot ever committed — bounds per-refresh/per-micro-batch
             # metadata reads at O(snapshots since the last barrier).  (A
@@ -733,11 +755,13 @@ class IcebergishTable:
             'parent': parent,
             'invalidates': inv,
             'timestamp_ms': int(time.time() * 1000),
-            'schema': df.schema.jsonValue(),
-            'partition_spec': list(partition_by or []),
+            'schema': schema,
+            'partition_spec': list(partition_spec or []),
             'manifest': {
-                'entries': files,
-                'row_count': n_rows,
+                'entries': entries,
+                # exact row count from the parquet footers already parsed
+                # for the manifest stats — never a re-read of the data
+                'row_count': sum(e['rows'] for e in entries),
                 'properties': props,
             },
         }
@@ -747,11 +771,12 @@ class IcebergishTable:
         os.replace(tmp, os.path.join(self.meta_dir, f'snapshot-{sid}.json'))
         # version hint last: a crash before this line leaves the table at the
         # previous snapshot (the new files are unreachable -> atomic commit)
-        if _advance_hint:
+        if advance_hint:
             self._advance_hint(sid)
         return snap
 
     def _advance_hint(self, sid: int) -> None:
+        """The one writer of ``version-hint.txt`` (atomic rename)."""
         tmp_hint = self._hint_path() + '.tmp'
         with open(tmp_hint, 'w') as f:
             f.write(str(sid))
@@ -767,8 +792,8 @@ class IcebergishTable:
         atomic pointer) moves ONCE, straight to the data snapshot: a reader
         sees either the pre-merge table or the fully-merged one, never the
         keys-deleted-but-not-reinserted intermediate.  A crash mid-commit
-        leaves only unreachable metadata; :meth:`_next_sid` skips the
-        orphans on the next commit.
+        leaves only unreachable metadata; new snapshot ids skip every
+        snapshot file on disk, so the next commit never reuses an orphan's.
 
         Cost is O(|df|) — the delete component is key tuples, the insert is
         ``df`` itself; nothing existing is rewritten (compaction
@@ -798,8 +823,8 @@ class IcebergishTable:
         old table; the audit job reads the staged snapshot by id
         (``read(spark, snapshot_id=staged['snapshot_id'])``) and decides.
         :meth:`publish` fast-forwards the hint atomically; an abandoned
-        stage is just unreachable metadata (``_next_sid`` skips it, and no
-        reader can reach its files).  Accepts everything :meth:`append`
+        stage is just unreachable metadata (new snapshot ids skip it, and
+        no reader can reach its files).  Accepts everything :meth:`append`
         does (cluster_by/zorder_by/invalidates/...).
 
         The snapshot is marked ``wap.staged`` so maintenance :meth:`vacuum`
@@ -820,16 +845,17 @@ class IcebergishTable:
         raises and the caller re-stages on the new tip; nothing is ever
         half-published."""
         cur = self.current_snapshot_id()
-        sid = snapshot_id
         chained = []
-        while sid >= 0 and sid != cur:
-            chained.append(sid)
-            sid = self.snapshot(sid).get('parent', -1)
-        if sid != cur:
-            raise ValueError(
-                f'staged snapshot {snapshot_id} does not chain to the '
-                f'current snapshot {cur} (concurrent commit landed after '
-                f'staging); re-stage on the new tip')
+        for snap in self.lineage(snapshot_id):
+            if snap['snapshot_id'] == cur:
+                break
+            chained.append(snap['snapshot_id'])
+        else:
+            if cur >= 0:
+                raise ValueError(
+                    f'staged snapshot {snapshot_id} does not chain to the '
+                    f'current snapshot {cur} (concurrent commit landed after '
+                    f'staging); re-stage on the new tip')
         # refuse to publish data that no longer exists (e.g. a forced
         # vacuum(retain_staged=False) reclaimed it): publishing would
         # succeed on metadata alone and read() would silently drop the
@@ -912,10 +938,8 @@ class IcebergishTable:
         """Snapshot ids whose data files are visible at ``snapshot_id``
         (lineage minus everything the lineage invalidates)."""
         dead, chain = set(), []
-        cur = snapshot_id
-        while cur >= 0:
-            snap = self.snapshot(cur)
-            chain.append(cur)
+        for snap in self.lineage(snapshot_id):
+            chain.append(snap['snapshot_id'])
             dead.update(snap.get('invalidates', []))
             if snap['manifest']['properties'].get('lineage_barrier'):
                 # this snapshot invalidated every then-live ancestor, so
@@ -923,7 +947,6 @@ class IcebergishTable:
                 # always-on refresh/stream loops at O(snapshots since the
                 # last compaction) metadata reads instead of O(history))
                 break
-            cur = snap.get('parent', -1)
         return [c for c in chain if c not in dead]
 
     def _snapshot_op(self, sid: int):
@@ -1017,47 +1040,75 @@ class IcebergishTable:
         merge-on-read deletes on the rewritten snapshots are applied during
         the rewrite (the rewritten rows get a new, higher sequence number,
         which would otherwise detach them from older delete files)."""
-        from pyspark.sql import functions as F
         preds = list(predicates)
+        rep = self._rewrite_where(spark, preds, {
+            'operation': 'delete-cow',
+            'predicates': [[c, op, [_norm_stat(x) for x in v]
+                            if op == 'in' else _norm_stat(v)]
+                           for c, op, v in preds]})
+        return {k: rep[k] for k in ('dropped_snapshots', 'rewritten_snapshots')}
+
+    def _rewrite_where(self, spark: SparkSession, preds, properties: dict) -> dict:
+        """Copy-on-write core of :meth:`delete_where` and
+        :meth:`expire_before`: remove the rows matching the conjunctive
+        ``preds`` from the current table in ONE atomic snapshot.
+
+        Live data snapshots are classified by manifest stats alone:
+        provably disjoint (or row-less) ones are untouched, ones the stats
+        prove all-matching are dropped metadata-only, the rest STRADDLE and
+        are rewritten to their rows where the predicate is not TRUE (a NULL
+        predicate keeps the row).  Pending merge-on-read deletes on the
+        straddlers are applied during the rewrite — the rewritten rows get
+        a new, higher sequence number, which would otherwise detach them
+        from older delete files.  Equality-delete snapshots are never
+        candidates: they stay live for their surviving targets.  Returns
+        the dropped/rewritten snapshot ids and their bytes."""
+        from pyspark.sql import functions as F
         cur = self.current_snapshot_id()
         assert cur >= 0, f'table {self.root} has no snapshots'
         data_live, del_live = self._split_live(cur)
         drop_whole, straddle = [], []
+        dropped_bytes = rewritten_bytes = 0
         for c in data_live:
+            # empty files (0 footer rows) carry no stats and no data: they
+            # must not force a snapshot into 'straddling'
             entries = [e for e in self.snapshot(c)['manifest']['entries']
                        if e.get('rows') != 0]
-            if not entries:
-                continue
             if not any(self._entry_matches(e, preds) for e in entries):
-                continue                                  # provably disjoint
+                continue                          # disjoint or row-less
+            nbytes = sum(e['bytes'] for e in entries)
             if all(self._entry_all_match(e, preds) for e in entries):
                 drop_whole.append(c)
+                dropped_bytes += nbytes
             else:
                 straddle.append(c)
+                rewritten_bytes += nbytes
+        rep = {'dropped_snapshots': sorted(drop_whole),
+               'rewritten_snapshots': sorted(straddle),
+               'dropped_bytes': dropped_bytes, 'rewritten_bytes': rewritten_bytes}
         if not drop_whole and not straddle:
-            return {'dropped_snapshots': [], 'rewritten_snapshots': []}
-        props = {'operation': 'delete-cow',
-                 'predicates': [[c, op, [_norm_stat(x) for x in v]
-                                 if op == 'in' else _norm_stat(v)]
-                                for c, op, v in preds],
-                 'dropped_snapshots': len(drop_whole),
+            return rep
+        props = {**properties, 'dropped_snapshots': len(drop_whole),
                  'rewritten_snapshots': len(straddle)}
         if straddle:
             surv = None
             for c in straddle:
-                part = (spark.read.parquet(os.path.join(self.data_dir, f'snap-{c}'))
-                        .withColumn('_seq', F.lit(c).cast('int')))
+                part = spark.read.parquet(os.path.join(self.data_dir, f'snap-{c}'))
+                if del_live:
+                    part = part.withColumn('_seq', F.lit(c).cast('int'))
                 surv = part if surv is None else surv.unionByName(
                     part, allowMissingColumns=True)
-            surv = self._apply_deletes(spark, surv, del_live).drop('_seq')
+            if del_live:
+                surv = self._apply_deletes(spark, surv, del_live).drop('_seq')
             surv = surv.filter(~F.coalesce(self._predicate_expr(preds), F.lit(False)))
-            spec = self._data_spec(cur)
-            self.append(surv, partition_by=spec,
+            self.append(surv, partition_by=self._data_spec(cur),
                         invalidates=drop_whole + straddle, properties=props)
         else:
-            self._commit_metadata_snapshot(drop_whole, props)
-        return {'dropped_snapshots': sorted(drop_whole),
-                'rewritten_snapshots': sorted(straddle)}
+            # every target dropped whole: data-less manifest surgery
+            prev = self.snapshot(cur)
+            self._commit(self._next_sid(), cur, drop_whole, props, prev['schema'],
+                         prev.get('partition_spec', []), [])
+        return rep
 
     @staticmethod
     def _entry_all_match(entry: dict, predicates) -> bool:
@@ -1294,38 +1345,6 @@ class IcebergishTable:
             out = self._apply_deletes(spark, out, dels).drop('_seq')
         return out.filter(expr) if with_residual else out
 
-    def _commit_metadata_snapshot(self, invalidates, properties: dict) -> dict:
-        """Commit a DATA-LESS snapshot (entries=[], no snap dir): pure
-        manifest surgery, e.g. retiring expired snapshots.  Readers skip it
-        (read() unions only existing dirs)."""
-        os.makedirs(self.meta_dir, exist_ok=True)
-        parent = self.current_snapshot_id()
-        sid = self._next_sid()
-        prev = self.snapshot(parent) if parent >= 0 else None
-        inv = sorted(int(i) for i in invalidates)
-        props = dict(properties or {})
-        if parent >= 0 and set(inv) >= set(self._live_snapshots(parent)):
-            props['lineage_barrier'] = True   # same rule as append()
-        snap = {
-            'snapshot_id': sid,
-            'parent': parent,
-            'invalidates': inv,
-            'timestamp_ms': int(time.time() * 1000),
-            'schema': prev['schema'] if prev else None,
-            'partition_spec': prev.get('partition_spec', []) if prev else [],
-            'manifest': {'entries': [], 'row_count': 0,
-                         'properties': props},
-        }
-        tmp = os.path.join(self.meta_dir, f'.snapshot-{sid}.json.tmp')
-        with open(tmp, 'w') as f:
-            json.dump(snap, f, indent=1)
-        os.replace(tmp, os.path.join(self.meta_dir, f'snapshot-{sid}.json'))
-        tmp_hint = self._hint_path() + '.tmp'
-        with open(tmp_hint, 'w') as f:
-            f.write(str(sid))
-        os.replace(tmp_hint, self._hint_path())
-        return snap
-
     def expire_before(self, spark: SparkSession, cutoff, ts_col: str = 'ts') -> dict:
         """Retention expiry by MANIFEST STATS: logically drop every live
         snapshot whose files' max(``ts_col``) all predate ``cutoff`` —
@@ -1337,64 +1356,18 @@ class IcebergishTable:
         ``ts_col`` are conservatively treated as straddling (rewritten via
         the exact filter — never silently dropped).  Committed as ONE
         atomic snapshot invalidating the expired + rewritten set;
-        :meth:`vacuum` reclaims the bytes."""
+        :meth:`vacuum` reclaims the bytes.
+
+        This is :meth:`delete_where` of ``ts_col < cutoff`` with the
+        ``'expire'`` operation (which :meth:`read_delta` can tolerate), so
+        it follows the same null rule: a row whose ``ts_col`` is NULL is
+        not older than the cutoff and is KEPT — whether its snapshot is
+        untouched or rewritten.  A snapshot holding null timestamps is
+        therefore never dropped whole; its old rows go by rewrite."""
         cut = _norm_stat(cutoff)
         assert cut is not None, f'unsupported cutoff type {type(cutoff)}'
-        cur = self.current_snapshot_id()
-        assert cur >= 0, f'table {self.root} has no snapshots'
-        drop_whole, straddle = [], []
-        dropped_bytes = rewritten_bytes = 0
-        # equality-delete snapshots hold key tuples with no ts stats: they
-        # are never expiry candidates and stay live (their targets among the
-        # surviving snapshots still need them; targets among the dropped
-        # ones become no-ops)
-        data_live, del_live = self._split_live(cur)
-        for c in data_live:
-            # empty files (0 footer rows) carry no stats and no data: they
-            # must not force a rewritten snapshot back into 'straddling'
-            entries = [e for e in self.snapshot(c)['manifest']['entries']
-                       if e.get('rows') != 0]
-            if not entries:
-                continue                     # row-less snapshot: untouched
-            stats = [e.get('stats', {}).get(ts_col) for e in entries]
-            nbytes = sum(e['bytes'] for e in entries)
-            if entries and all(s and s['max'] < cut for s in stats):
-                drop_whole.append(c)
-                dropped_bytes += nbytes
-            elif entries and all(s and s['min'] >= cut for s in stats):
-                continue                                  # untouched
-            else:
-                straddle.append(c)
-                rewritten_bytes += nbytes
-        if not drop_whole and not straddle:
-            return {'dropped_snapshots': [], 'rewritten_snapshots': [],
-                    'dropped_bytes': 0, 'rewritten_bytes': 0}
-        props = {'operation': 'expire', 'cutoff': cut, 'ts_col': ts_col,
-                 'dropped_snapshots': len(drop_whole),
-                 'rewritten_snapshots': len(straddle)}
-        if straddle:
-            from pyspark.sql import functions as F
-            surv = None
-            for c in straddle:
-                part = spark.read.parquet(os.path.join(self.data_dir, f'snap-{c}'))
-                # the rewrite gets a NEW (higher) sequence number, which
-                # would detach older merge-on-read deletes from these rows —
-                # so materialize the pending deletes during the rewrite
-                if del_live:
-                    part = part.withColumn('_seq', F.lit(c).cast('int'))
-                surv = part if surv is None else surv.unionByName(
-                    part, allowMissingColumns=True)
-            if del_live:
-                surv = self._apply_deletes(spark, surv, del_live).drop('_seq')
-            surv = surv.filter(F.col(ts_col) >= F.lit(cutoff))
-            spec = self._data_spec(cur)
-            self.append(surv, partition_by=spec,
-                        invalidates=drop_whole + straddle, properties=props)
-        else:
-            self._commit_metadata_snapshot(drop_whole, props)
-        return {'dropped_snapshots': sorted(drop_whole),
-                'rewritten_snapshots': sorted(straddle),
-                'dropped_bytes': dropped_bytes, 'rewritten_bytes': rewritten_bytes}
+        return self._rewrite_where(spark, [(ts_col, '<', cutoff)], {
+            'operation': 'expire', 'cutoff': cut, 'ts_col': ts_col})
 
     def properties_by_snapshot(self) -> dict:
         return {s['snapshot_id']: s['manifest']['properties'] for s in self.history()}
@@ -1414,28 +1387,19 @@ class IcebergishTable:
         treated as orphans; pass ``retain_staged=False`` to reclaim
         abandoned stages (a later publish of one then raises instead of
         silently publishing missing data)."""
-        import re
         import shutil
         dead, reachable = set(), set()
-        cur = self.current_snapshot_id()
-        while cur >= 0:
-            snap = self.snapshot(cur)
-            reachable.add(cur)
+        for snap in self.lineage():
+            reachable.add(snap['snapshot_id'])
             dead.update(snap.get('invalidates', []))
-            cur = snap.get('parent', -1)
-        if os.path.isdir(self.meta_dir):
-            for name in os.listdir(self.meta_dir):
-                m = re.match(r'snapshot-(\d+)\.json$', name)
-                if not m or int(m.group(1)) in reachable:
-                    continue
-                sid = int(m.group(1))
-                if retain_staged and sid not in dead:
-                    snap = self.snapshot(sid)
-                    props = (snap or {}).get('manifest', {}).get(
-                        'properties', {})
-                    if props.get('wap.staged') == 'true':
-                        continue            # live WAP stage, not an orphan
-                dead.add(sid)               # orphaned fork / crash debris
+        for sid in self._snapshot_ids_on_disk():
+            if sid in reachable:
+                continue
+            if retain_staged and sid not in dead:
+                props = self.snapshot(sid)['manifest']['properties']
+                if props.get('wap.staged') == 'true':
+                    continue                # live WAP stage, not an orphan
+            dead.add(sid)                   # orphaned fork / crash debris
         removed = []
         for sid in sorted(dead):
             d = os.path.join(self.data_dir, f'snap-{sid}')
@@ -1463,14 +1427,7 @@ class IcebergishTable:
         import math
         cur = self.current_snapshot_id()
         assert cur >= 0, f'table {self.root} has no snapshots to compact'
-        dead, chain = set(), []
-        sid = cur
-        while sid >= 0:
-            snap = self.snapshot(sid)
-            chain.append(sid)
-            dead.update(snap.get('invalidates', []))
-            sid = snap.get('parent', -1)
-        live = [c for c in chain if c not in dead]
+        live = self._live_snapshots(cur)
         live_bytes = 0
         n_files = 0
         for c in live:

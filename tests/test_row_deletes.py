@@ -350,3 +350,58 @@ def test_fully_expired_table_reads_empty_and_refresh_noops(spark, events,
     assert ca.refreshed_through() == t.current_snapshot_id()
     # the tier's history is intact (downsample-then-drop invariant)
     assert ca.read(spark).count() == n_tier or rep['mode'] == 'full'
+
+
+def test_expire_before_keeps_null_ts_rows(spark, tmp_path):
+    """expire_before follows delete_where's null rule: a NULL ts is not
+    older than the cutoff, so its row survives whether its snapshot is
+    rewritten (all-old or straddling) or untouched."""
+    d = datetime.datetime
+    t = IcebergishTable(str(tmp_path / 'nullts'))
+    for rows in ([(1, d(2024, 1, 1)), (2, d(2024, 1, 2)), (3, None)],      # all old
+                 [(4, d(2024, 1, 10)), (5, d(2024, 1, 20)), (6, None)],    # straddles
+                 [(7, d(2024, 1, 16)), (8, d(2024, 1, 17)), (9, None)]):   # all new
+        t.append(spark.createDataFrame(rows, 'id int, ts timestamp').coalesce(1),
+                 partition_by=())
+    rep = t.expire_before(spark, d(2024, 1, 15), ts_col='ts')
+    assert rep['dropped_snapshots'] == [] and rep['rewritten_snapshots'] == [0, 1]
+    assert 2 in t._live_snapshots(t.current_snapshot_id())       # untouched
+    assert sorted(r['id'] for r in t.read(spark).collect()) == [3, 5, 6, 7, 8, 9]
+
+
+def test_metadata_only_commit_sets_barrier_and_hint_like_a_data_commit(
+        spark, events, tmp_path):
+    """A data-less commit (every target dropped whole) goes through the same
+    commit path as a data commit: same lineage-barrier rule, same hint flip."""
+    def two_slices(name):
+        t = IcebergishTable(str(tmp_path / name))
+        t.append(events.filter(F.dayofmonth('ts') <= 10), partition_by=())
+        t.append(events.filter(F.dayofmonth('ts') > 10), partition_by=())
+        return t
+
+    data = two_slices('data')
+    data.compact(spark)                   # data commit superseding everything
+    meta = two_slices('meta')
+    rep = meta.delete_where(spark, [('ts', '<', datetime.datetime(2100, 1, 1))])
+    assert rep == {'dropped_snapshots': [0, 1], 'rewritten_snapshots': []}
+    for t in (data, meta):
+        snap = t.snapshot()
+        with open(t._hint_path()) as f:
+            assert f.read() == '2'
+        assert snap['snapshot_id'] == 2 and snap['parent'] == 1
+        assert snap['invalidates'] == [0, 1]
+        assert snap['manifest']['properties']['lineage_barrier'] is True
+        assert t._live_snapshots(2) == [2]
+    assert meta.snapshot()['manifest']['entries'] == []
+    assert meta.snapshot()['manifest']['row_count'] == 0
+    assert meta.read(spark).count() == 0
+    # superseding only part of the live set: no barrier on either path
+    partial = two_slices('partial')
+    partial.delete_where(spark, [('ts', '<', datetime.datetime(2024, 1, 11))])
+    rewrite = two_slices('rewrite')
+    rewrite.delete_where(spark, [('ts', '<', datetime.datetime(2024, 1, 5))])
+    for t in (partial, rewrite):
+        assert t.current_snapshot_id() == 2
+        assert 'lineage_barrier' not in t.snapshot()['manifest']['properties']
+    assert partial.snapshot()['manifest']['entries'] == []
+    assert rewrite.snapshot()['manifest']['entries'] != []

@@ -182,3 +182,89 @@ def test_compaction_packs_files_preserves_rows_and_time_travel(spark, tokens, tm
     assert t.vacuum() == [0, 1, 2, 3]
     assert len(live_files()) == 1
     assert t.read(spark).count() == len(before)
+
+
+def test_checkpoint_run_scores_each_bucket_once(spark, tokens, tmp_path):
+    """Besides the one fingerprint aggregate, RollupCheckpointJob.run starts
+    exactly one job per bucket — the scoring write itself; the watermark
+    rides that write, so no second scoring pass runs."""
+    job = RollupCheckpointJob(str(tmp_path / 'once'), n_buckets=2,
+                              algorithm='moving_window', params={'window_length': 8})
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    append, groups = job.table.append, []
+
+    def append_in_own_group(*a, **kw):
+        groups.append(f'append-{len(groups)}')
+        sc.setJobGroup(groups[-1], 'checkpoint append')
+        try:
+            return append(*a, **kw)
+        finally:
+            sc.setJobGroup('run', 'checkpoint run')
+    job.table.append = append_in_own_group
+    sc.setJobGroup('run', 'checkpoint run')
+    try:
+        res = job.run(spark, tokens)
+    finally:
+        sc.setJobGroup(None, None)
+    assert res['processed'] == [0, 1] and len(groups) == 2
+    assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [1, 1]
+    # outside the appends: only the fingerprint aggregate (2 jobs under AQE)
+    assert len(tracker.getJobIdsForGroup('run')) <= 2
+
+
+def test_checkpoint_watermark_is_max_block_start_of_committed_rows(
+        spark, tokens, tmp_path):
+    import os
+    longest = tokens.orderBy(F.desc('n_tok')).first()['doc_id']
+    one_doc = tokens.filter(F.col('doc_id') == longest)
+    job = RollupCheckpointJob(str(tmp_path / 'wm'), n_buckets=2,
+                              algorithm='moving_window', params={'window_length': 8})
+    assert job.run(spark, one_doc)['processed'] == [0, 1]
+    full, empty = [], []
+    for snap in job.table.history():
+        wm = snap['manifest']['properties']['watermark']
+        if snap['manifest']['row_count'] == 0:
+            empty.append(wm)
+            continue
+        rows = spark.read.parquet(
+            os.path.join(job.table.data_dir, f"snap-{snap['snapshot_id']}"))
+        full.append((wm, str(rows.agg(F.max('block_start')).first()[0])))
+    # one doc: one bucket holds its blocks, the other committed empty
+    assert len(full) == 1 and full[0][0] == full[0][1] != 'None', full
+    assert empty == ['None']
+
+
+def test_snapshot_cache_is_lru_over_long_lineages(tmp_path, monkeypatch):
+    """Sliding lineage walks over a table longer than the cache bound: LRU
+    eviction drops only the coldest manifest, so each walk parses just the
+    one snapshot it has not seen (a clear-everything bound re-parsed the
+    whole window every few walks)."""
+    import itertools
+    import json
+    import os
+    from changepoynt_spark.sources import tables
+    t = IcebergishTable(str(tmp_path / 'long'))
+    os.makedirs(t.meta_dir)
+    n, window = tables._SNAP_CACHE_MAX + 64, tables._SNAP_CACHE_MAX - 8
+    for sid in range(n):
+        with open(os.path.join(t.meta_dir, f'snapshot-{sid}.json'), 'w') as f:
+            json.dump({'snapshot_id': sid, 'parent': sid - 1,
+                       'manifest': {'properties': {}}}, f)
+    parsed = []
+
+    def counting_open(path, *a, **kw):
+        parsed.append(path)
+        return open(path, *a, **kw)
+    monkeypatch.setattr(tables, 'open', counting_open, raising=False)
+    assert len(list(t.lineage(window - 1))) == window          # warm the cache
+    assert len(parsed) == window
+    del parsed[:]
+    visits = 0
+    for tip in range(window, n):
+        walk = [s['snapshot_id'] for s in itertools.islice(t.lineage(tip), window)]
+        assert walk == list(range(tip, tip - window, -1))
+        visits += window
+    assert len(parsed) == n - window                   # one new manifest per walk
+    assert 1 - len(parsed) / visits > 0.999
+    assert len(t._snap_cache) == tables._SNAP_CACHE_MAX
