@@ -19,8 +19,9 @@ NotImplementedError and tests asserting the raise:
   one — the reference class is unconstructible; behavioral parity here is
   the same constructor-time failure.  Its actual contribution (batching
   the per-step Hankel/SVD work) IS implemented, CPU-side, in
-  kernels/sst.py:182 (_transform_ika_batched and the batched rsvd/dense
-  paths) and kernels/block.py.
+  kernels/sst.py (_transform_ika, which also runs the power chains of a
+  batch of series in lockstep, and the batched rsvd/dense paths) and
+  kernels/block.py.
 """
 from __future__ import annotations
 

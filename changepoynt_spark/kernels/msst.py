@@ -18,7 +18,7 @@ import numpy as np
 from changepoynt_spark.kernels import normalization
 from changepoynt_spark.kernels import sst as cpsst
 from changepoynt_spark.kernels.base import SingularSubspaceAlgorithm
-from changepoynt_spark.kernels.block import BlockFastHankel
+from changepoynt_spark.kernels.block import BlockFastHankel, batched_block_hankels
 
 
 class MSST(SingularSubspaceAlgorithm):
@@ -67,7 +67,8 @@ class MSST(SingularSubspaceAlgorithm):
     def compute_offset(self) -> int:
         return self.n_windows // 2 + self.lag
 
-    def transform(self, time_series: np.ndarray) -> np.ndarray:
+    def _prepare(self, time_series: np.ndarray) -> np.ndarray:
+        """Input checks and the per-channel [1, 2] min-max scaling (a copy)."""
         assert time_series.ndim > 1, 'Time series needs to be an N-D array. Currently it is 1-D.'
         starting_point = self.covered_regions()[0]
         assert starting_point < time_series.shape[0], 'The time series is too short to score any points.'
@@ -76,30 +77,50 @@ class MSST(SingularSubspaceAlgorithm):
             for idx in range(time_series.shape[1]):
                 time_series[:, idx] = normalization.min_max_scaling(time_series[:, idx], 1, 2,
                                                                     inplace=True)
+        return time_series
+
+    def transform_ika(self, series: list, seeds: list = None) -> list:
+        """IKA scores of every series, as ``SST.transform_ika``: one lockstep
+        power chain over the block-Hankel trajectories of all series with
+        the same channel count (with ``seeds=None``, group by group)."""
+        assert self.method == 'ika'
+        series = [self._prepare(ts) for ts in series]
+        scores = [None] * len(series)
+        for channels in dict.fromkeys(ts.shape[1] for ts in series):
+            group = [j for j, ts in enumerate(series) if ts.shape[1] == channels]
+            group_scores = cpsst._transform_ika(
+                builders=[partial(batched_block_hankels, series[j],
+                                  window_size=self.window_length, rank=self.n_windows)
+                          for j in group],
+                lengths=[series[j].shape[0] for j in group],
+                seeds=None if seeds is None else [seeds[j] for j in group],
+                start_idx=self.covered_regions()[0], offset=self.compute_offset(),
+                lag=self.lag, scoring_step=self.scoring_step, rank=self.rank,
+                lanczos_rank=self.lanczos_rank, row_dim=self.window_length * channels)
+            for j, score in zip(group, group_scores):
+                scores[j] = score
+        return scores
+
+    def transform(self, time_series: np.ndarray) -> np.ndarray:
         # step-batched execution over dense block-Hankel stacks (the
         # reference always uses its implicit block form, msst.py:207-209;
         # dense-vs-implicit differ only in float rounding and the engine's
         # goldens are defined by this batched path)
-        from changepoynt_spark.kernels.block import batched_block_hankels
-        from changepoynt_spark.kernels.sst import (_transform_dense_batched,
-                                                   _transform_ika_batched,
-                                                   _transform_rsvd_batched)
-        c = time_series.shape[1]
-        builder = lambda ends: batched_block_hankels(time_series, ends,
-                                                     self.window_length, self.n_windows)
-        common = dict(time_series=time_series[:, 0], start_idx=starting_point,
+        if self.method == 'ika':
+            return self.transform_ika([time_series])[0]
+        time_series = self._prepare(time_series)
+        builder = partial(batched_block_hankels, time_series, window_size=self.window_length,
+                          rank=self.n_windows)
+        common = dict(time_series=time_series[:, 0], start_idx=self.covered_regions()[0],
                       offset=self.compute_offset(), window_length=self.window_length,
                       n_windows=self.n_windows, lag=self.lag, scoring_step=self.scoring_step,
                       mitigate_offset=False, hankel_builder=builder,
-                      row_dim=self.window_length * c)
-        if self.method == 'ika':
-            return _transform_ika_batched(rank=self.rank, lanczos_rank=self.lanczos_rank,
-                                          **common)
+                      row_dim=self.window_length * time_series.shape[1])
         if self.method == 'rsvd':
-            return _transform_rsvd_batched(rank=self.rank, randomized_rank=self.random_rank,
-                                           **common)
-        return _transform_dense_batched(method=self.method, rank=self.rank,
-                                        randomized_rank=self.random_rank, **common)
+            return cpsst._transform_rsvd_batched(rank=self.rank, randomized_rank=self.random_rank,
+                                                 **common)
+        return cpsst._transform_dense_batched(method=self.method, rank=self.rank,
+                                              randomized_rank=self.random_rank, **common)
 
 
 def _transform(time_series: np.ndarray, start_idx: int, offset: int, window_length: int,

@@ -92,15 +92,39 @@ class SST(SingularSubspaceAlgorithm):
     def compute_offset(self) -> int:
         return self.n_windows // 2 + self.lag
 
-    def transform(self, time_series: np.ndarray) -> np.ndarray:
+    def _prepare(self, time_series: np.ndarray) -> np.ndarray:
+        """Input checks and the [1, 2] min-max scaling (always a copy)."""
         assert time_series.ndim == 1, 'Time series needs to be an 1D array.'
         starting_point = self.covered_regions()[0]
         assert starting_point < time_series.shape[0], 'The time series is too short to score any points.'
         if self.scale:
-            time_series = normalization.min_max_scaling(time_series, min_val=1.0, max_val=2.0,
-                                                        inplace=False)
-        else:
-            time_series = time_series.copy()
+            return normalization.min_max_scaling(time_series, min_val=1.0, max_val=2.0,
+                                                 inplace=False)
+        return time_series.copy()
+
+    def transform_ika(self, series: list, seeds: list = None) -> list:
+        """IKA scores of every series in ``series``, each bit-identical to
+        ``np.random.seed(seeds[j])`` followed by its own ``transform`` (with
+        ``seeds=None`` the series draw from the current stream in order).
+        All power chains run in one lockstep (``_transform_ika``)."""
+        assert self.method == 'ika' and not self.use_fast_hankel
+        series = [self._prepare(ts) for ts in series]
+        return _transform_ika(
+            builders=[partial(_batched_hankels, ts, window_length=self.window_length,
+                              n_windows=self.n_windows, mitigate_offset=self.mitigate_offset)
+                      for ts in series],
+            lengths=[ts.shape[0] for ts in series], seeds=seeds,
+            start_idx=self.covered_regions()[0], offset=self.compute_offset(), lag=self.lag,
+            scoring_step=self.scoring_step, rank=self.rank, lanczos_rank=self.lanczos_rank,
+            row_dim=self.window_length)
+
+    def transform(self, time_series: np.ndarray) -> np.ndarray:
+        if self.method == 'ika' and not self.use_fast_hankel:
+            # a batch of one: identical RNG stream and score semantics to
+            # the per-step loop, with the step-batched heavy phases
+            return self.transform_ika([time_series])[0]
+        time_series = self._prepare(time_series)
+        starting_point = self.covered_regions()[0]
         if self.method in ('naive', 'naive updated', 'weighted', 'symmetric', 'svd') \
                 and not self.use_fast_hankel:
             # batched execution for the dense feedback-free methods (and the
@@ -120,17 +144,6 @@ class SST(SingularSubspaceAlgorithm):
                 offset=self.compute_offset(), window_length=self.window_length,
                 n_windows=self.n_windows, lag=self.lag, scoring_step=self.scoring_step,
                 rank=self.rank, randomized_rank=self.random_rank,
-                mitigate_offset=self.mitigate_offset)
-        if self.method == 'ika' and not self.use_fast_hankel:
-            # batched execution path: identical RNG stream and score
-            # semantics, ~6x fewer python/numpy dispatches per step (the
-            # CPU-side analogue of the reference's TESST step batching,
-            # torch_esst.py:96-124)
-            return _transform_ika_batched(
-                time_series=time_series, start_idx=starting_point,
-                offset=self.compute_offset(), window_length=self.window_length,
-                n_windows=self.n_windows, lag=self.lag, scoring_step=self.scoring_step,
-                rank=self.rank, lanczos_rank=self.lanczos_rank,
                 mitigate_offset=self.mitigate_offset)
         scoring_function = self.methods[self.method]
         hankel_function = self.hankel_construction[self.use_fast_hankel]
@@ -180,99 +193,203 @@ def _batched_hankels(time_series: np.ndarray, ends: np.ndarray, window_length: i
     return hb
 
 
-def _transform_ika_batched(time_series: np.ndarray, start_idx: int, offset: int,
-                           window_length: int, n_windows: int, lag: int, scoring_step: int,
-                           rank: int, lanczos_rank: int, mitigate_offset: bool,
-                           hankel_builder=None, row_dim: int = None) -> np.ndarray:
-    """IKA-SST with step-batched heavy phases.
+def _contiguous(idx: np.ndarray):
+    """A basic slice for an increasing run of consecutive indices (a view
+    where fancy indexing would gather a copy), else ``idx`` itself."""
+    if idx[-1] - idx[0] == idx.size - 1:
+        return slice(int(idx[0]), int(idx[-1]) + 1)
+    return idx
 
-    Same math as the per-step loop (gram -> 5-iter power method with the
-    feedback chain -> Lanczos -> top-rank tridiagonal eigvecs -> score
-    1 - sum(eigvecs[0, :r]^2)) and the exact same RNG draw order (x0 seed,
-    then one feedback-noise draw per step).  Gram construction, Lanczos and
-    the tridiagonal eigendecomposition are vectorized across steps; only the
-    power-method feedback chain is inherently sequential.
+
+def _power_chain(grams: np.ndarray, idx, x0: np.ndarray, noise: np.ndarray,
+                 out: np.ndarray) -> np.ndarray:
+    """One series' power-method feedback chain (IKA and the 'svd' hybrid):
+    step i runs 5 power iterations on ``grams[idx[i]]`` from the previous
+    step's eigvec plus ``1e-3 * noise[i]`` and writes the dominant eigvec to
+    ``out[i]``.  Returns the start vector of the step after the last.
+
+    All ops are 1-D (dgemv + raw-ufunc reductions): bit-identical to the
+    column-vector forms of the per-step loop (asserted in tests) at a
+    fraction of the numpy dispatch overhead.  This chain is ~70-75% of a
+    single series' IKA CPU (the headline kernel, window 30), which is why
+    ``_transform_ika`` runs the chains of a batch in lockstep."""
+    dot, sqrt = np.dot, math.sqrt
+    for i, g in enumerate(idx):
+        c2 = grams[g]
+        x = x0
+        for _ in range(5):
+            x = dot(c2, x)
+            x = x / np.abs(x).max()
+        x = x / sqrt(dot(x, x))
+        y = dot(c2, x)
+        u = y / sqrt(dot(y, y))
+        out[i] = u
+        x0 = u + 1e-3 * noise[i]
+        x0 = x0 / sqrt(dot(x0, x0))
+    return x0
+
+
+def _aligned_rows(m: int, rd: int) -> np.ndarray:
+    """An (m, rd, 1) buffer whose rows start 16-byte aligned, as fresh 1-D
+    arrays do: OpenBLAS's ddot and dgemv round differently on operands 8
+    bytes off that alignment, so only then do stacked steps match 1-D ones."""
+    return np.empty((m, rd + (rd & 1), 1))[:, :rd]
+
+
+def _as_grams(flat: np.ndarray, rd: int) -> np.ndarray:
+    """(..., rd, rd) view of grams stored one per padded row of ``flat``."""
+    return flat[..., :rd * rd].reshape(flat.shape[:-1] + (rd, rd))
+
+
+def _stacked_chain_step(c2: np.ndarray, x: np.ndarray, noise: np.ndarray, out: np.ndarray,
+                        y: np.ndarray, a: np.ndarray) -> None:
+    """One ``_power_chain`` step of m series at once.  ``c2`` is the (m, rd, rd)
+    gram stack, ``x`` the (m, rd, 1) start vectors (overwritten with the next
+    step's), ``out`` receives the (m, rd, 1) eigvecs, ``y`` and ``a`` are
+    (m, rd, 1) scratch.  Bit-identical to m 1-D steps: the stacked matmul
+    runs the same dgemv per series and the norms go through
+    ``matmul(x^T, x)``, the same ddot (an einsum or sum norm reassociates
+    and drifts in the last bits).  ``c2``, ``x`` and ``y`` must be
+    16-byte aligned per series (``_aligned_rows``)."""
+    matmul, divide, sqrt = np.matmul, np.divide, np.sqrt
+    xt = x.transpose(0, 2, 1)
+    for _ in range(5):
+        matmul(c2, x, out=y)
+        np.abs(y, out=a)
+        divide(y, np.maximum.reduce(a, axis=1, keepdims=True), out=x)
+    divide(x, sqrt(matmul(xt, x)), out=x)
+    matmul(c2, x, out=y)
+    divide(y, sqrt(matmul(y.transpose(0, 2, 1), y)), out=out)
+    np.multiply(noise, 1e-3, out=x)
+    np.add(out, x, out=x)
+    divide(x, sqrt(matmul(xt, x)), out=x)
+
+
+def _lanczos_scores(g_past: np.ndarray, eigvecs_future: np.ndarray, rank: int,
+                    lanczos_rank: int) -> np.ndarray:
+    """IKA scores of a batch of steps: Lanczos on the past grams seeded with
+    the (unnormalized) future eigvecs, beta_0 = 1 — mirrors lg.lanczos
+    exactly — then the top-rank tridiagonal eigvecs and the score
+    1 - sum(eigvecs[0, :rank]^2).  Every row is computed independently, so
+    its bits do not depend on the batch it sits in."""
+    k = lanczos_rank
+    b = eigvecs_future.shape[0]
+    r = eigvecs_future
+    q = np.zeros_like(r)
+    alphas = np.zeros((b, k + 1))
+    betas = np.ones((b, k + 1))
+    for j in range(k):
+        new_q = r / betas[:, j:j + 1]
+        tmp = np.matmul(g_past, new_q[:, :, None])[:, :, 0]
+        alphas[:, j + 1] = np.einsum('bi,bi->b', new_q, tmp)
+        r = tmp - alphas[:, j + 1, None] * new_q - betas[:, j, None] * q
+        betas[:, j + 1] = np.linalg.norm(r, axis=1)
+        q = new_q
+
+    tmat = np.zeros((b, k, k))
+    idx = np.arange(k)
+    tmat[:, idx, idx] = alphas[:, 1:]
+    off = np.arange(k - 1)
+    tmat[:, off, off + 1] = betas[:, 1:-1]
+    tmat[:, off + 1, off] = betas[:, 1:-1]
+    _, vecs = np.linalg.eigh(tmat)
+    return 1.0 - np.sum(vecs[:, 0, -rank:] ** 2, axis=1)
+
+
+def _transform_ika(builders: list, lengths: list, seeds, start_idx: int, offset: int,
+                   lag: int, scoring_step: int, rank: int, lanczos_rank: int,
+                   row_dim: int) -> list:
+    """IKA-SST (Ide & Tsuda 2007) of a batch of series sharing parameters.
+
+    Per step the same math as the per-step loop (gram -> 5-iter power method
+    with the feedback chain -> Lanczos -> top-rank tridiagonal eigvecs ->
+    score 1 - sum(eigvecs[0, :r]^2)), and per series the same RNG draws (x0
+    seed, then one feedback-noise draw per step), after
+    ``np.random.seed(seeds[j])`` when ``seeds`` is given.  Grams, Lanczos and
+    the tridiagonal eigendecomposition are batched across steps.  The power
+    chain is sequential only within a series, so the chains of all series
+    advance in lockstep as stacked matmuls: one numpy dispatch per op per
+    step for the whole batch instead of one per series.  Once a single
+    series is left it runs the 1-D chain, which is faster for one series.
+
+    ``builders[j](ends)`` returns series j's (B, row_dim, n) Hankel stack
+    ending at ``ends``; ``lengths[j]`` is its length.  Returns the scores in
+    input order.
     """
-    w, n, k = window_length, n_windows, lanczos_rank
-    rd = row_dim or w  # hankel row dimension (w, or w*channels for block form)
-    build = hankel_builder or (lambda ends_: _batched_hankels(
-        time_series, ends_, w, n, mitigate_offset))
-    t_len = time_series.shape[0]
-    score = np.zeros(t_len)
-    ends = np.arange(start_idx, t_len, scoring_step)
-    if ends.size == 0:
-        np.random.rand(rd)  # keep the RNG stream aligned with the loop path
-        return score
-    x0 = np.random.rand(rd)
-    x0 /= math.sqrt(np.dot(x0, x0))
-    # pre-draw the per-step feedback noise in one call: the legacy RNG fills
-    # rand(B, rd) in exactly the order of B successive rand(rd) calls, and
-    # nothing else draws between steps — bit-identical stream
-    noise = np.random.rand(ends.size, rd)
+    rd = row_dim
+    steps = [len(range(start_idx, t_len, scoring_step)) for t_len in lengths]
+    x0s, noises = [], []
+    for j, b in enumerate(steps):
+        if seeds is not None:
+            np.random.seed(seeds[j])
+        x0 = np.random.rand(rd)  # a zero-step series keeps this lone draw
+        x0s.append(x0 / math.sqrt(np.dot(x0, x0)))
+        # the legacy RNG fills rand(b, rd) in exactly the order of b
+        # successive rand(rd) calls, and nothing else draws between the
+        # loop's steps — bit-identical stream
+        noises.append(np.random.rand(b, rd))
+    scores = [np.zeros(t_len) for t_len in lengths]
 
-    # chunk so the gram batches stay within ~100 MB
-    chunk = max(16, int(3e6 / (rd * rd)))
-    for c0 in range(0, ends.size, chunk):
-        sub = ends[c0:c0 + chunk]
-        b = sub.size
+    # longest first: the series still running at any step are a prefix
+    order = sorted((j for j in range(len(steps)) if steps[j]), key=lambda j: -steps[j])
+    state = _aligned_rows(len(order), rd)
+    for i, j in enumerate(order):
+        state[i, :, 0] = x0s[j]
+    s0 = 0  # steps done by every series still in ``order``
+    while order:
+        m = len(order)
+        # chunk so the gram batches stay within ~3e6 doubles (~24 MB)
+        chunk = min(max(16, int(3e6 / (rd * rd * m))), steps[order[0]] - s0)
+        bs = [min(chunk, steps[j] - s0) for j in order]
+        sub = start_idx + scoring_step * np.arange(s0, s0 + chunk)
         # each gram is computed ONCE for the union of past/future end
         # indices (when lag aligns with the step grid the two sets overlap
-        # almost completely — ~2x less gram work)
+        # almost completely — ~2x less gram work).  The union is shared by
+        # all series; one ending inside the chunk needs only its prefix up to
+        # its last future end.
         union, inv = np.unique(np.concatenate([sub - lag, sub]), return_inverse=True)
-        h_union = build(union)
-        g_union = np.matmul(h_union, h_union.transpose(0, 2, 1))
-        del h_union
-        past_idx = inv[:b]
-        future_idx = inv[b:]
+        past, future = inv[:chunk], inv[chunk:]
+        # each gram is padded to an even number of doubles, so every gram
+        # starts 16-byte aligned wherever the chunking puts it and the
+        # scores do not depend on the batch (see _aligned_rows)
+        flat = np.empty((m, union.size, rd * rd + (rd & 1)))
+        grams = _as_grams(flat, rd)
+        for i, j in enumerate(order):
+            p = future[bs[i] - 1] + 1
+            h = builders[j](union[:p])
+            np.matmul(h, h.transpose(0, 2, 1), out=grams[i, :p])
+        del h
 
-        # sequential phase: power method with eigvec feedback.  All ops are
-        # 1-D (dgemv + raw-ufunc reductions): bit-identical to the column-
-        # vector forms (asserted in tests) at a fraction of the numpy
-        # dispatch overhead — this loop is ~99% of headline kernel CPU.
-        eigvecs_future = np.empty((b, rd))
-        dot, sqrt = np.dot, math.sqrt
-        for i in range(b):
-            c2 = g_union[future_idx[i]]
-            x = x0
-            for _ in range(5):
-                x = dot(c2, x)
-                x = x / np.abs(x).max()
-            x = x / sqrt(dot(x, x))
-            y = dot(c2, x)
-            u = y / sqrt(dot(y, y))
-            eigvecs_future[i] = u
-            x0 = u + 1e-3 * noise[c0 + i]
-            x0 = x0 / sqrt(dot(x0, x0))
-        g_past = g_union[past_idx]
+        eigvecs = np.empty((m, chunk, rd))
+        t, active = 0, m
+        if m > 1:
+            noise = np.empty((m, chunk, rd))
+            for i, j in enumerate(order):
+                noise[i, :bs[i]] = noises[j][s0:s0 + bs[i]]
+            y, a = _aligned_rows(m, rd), _aligned_rows(m, rd)
+            while active > 1 and t < chunk:
+                _stacked_chain_step(grams[:active, future[t]], state[:active],
+                                    noise[:active, t, :, None], eigvecs[:active, t, :, None],
+                                    y[:active], a[:active])
+                t += 1
+                while active > 1 and bs[active - 1] <= t:
+                    active -= 1
+        if t < chunk:  # only the longest series is left
+            state[0, :, 0] = _power_chain(grams[0], future[t:], state[0, :, 0],
+                                          noises[order[0]][s0 + t:s0 + chunk], eigvecs[0, t:])
 
-        # batched Lanczos on the past grams, seeded with the (unnormalized)
-        # future eigvecs, beta_0 = 1 — mirrors lg.lanczos exactly
-        r = eigvecs_future
-        q = np.zeros_like(r)
-        alphas = np.zeros((b, k + 1))
-        betas = np.ones((b, k + 1))
-        for j in range(k):
-            new_q = r / betas[:, j:j + 1]
-            tmp = np.matmul(g_past, new_q[:, :, None])[:, :, 0]
-            alphas[:, j + 1] = np.einsum('bi,bi->b', new_q, tmp)
-            r = tmp - alphas[:, j + 1, None] * new_q - betas[:, j, None] * q
-            betas[:, j + 1] = np.linalg.norm(r, axis=1)
-            q = new_q
-        del g_past
-
-        # batched tridiagonal eigendecomposition + score
-        tmat = np.zeros((b, k, k))
-        idx = np.arange(k)
-        tmat[:, idx, idx] = alphas[:, 1:]
-        off = np.arange(k - 1)
-        tmat[:, off, off + 1] = betas[:, 1:-1]
-        tmat[:, off + 1, off] = betas[:, 1:-1]
-        _, vecs = np.linalg.eigh(tmat)
-        scores = 1.0 - np.sum(vecs[:, 0, -rank:] ** 2, axis=1)
-
-        for i, e in enumerate(sub):
-            score[e - offset - scoring_step // 2:e - offset + (scoring_step + 1) // 2] = scores[i]
-    return score
+        for i, j in enumerate(order):
+            b = bs[i]
+            step_scores = _lanczos_scores(_as_grams(flat[i, _contiguous(past[:b])], rd),
+                                          eigvecs[i, :b], rank, lanczos_rank)
+            score = scores[j]
+            for e, v in zip(sub[:b], step_scores):
+                score[e - offset - scoring_step // 2:e - offset + (scoring_step + 1) // 2] = v
+        del flat, grams
+        s0 += chunk
+        order = [j for j in order if steps[j] > s0]
+        state = state[:len(order)]
+    return scores
 
 
 def _transform_rsvd_batched(time_series: np.ndarray, start_idx: int, offset: int,
@@ -403,27 +520,18 @@ def _transform_dense_batched(time_series: np.ndarray, start_idx: int, offset: in
                 bwd = 1.0 - np.sum(
                     np.matmul(u_fut.transpose(0, 2, 1), u_past[:, :, :1])[:, :, 0] ** 2, axis=1)
                 scores[sl] = (fwd + bwd) / 2.0
-        else:  # 'svd' hybrid — same 1-D power loop as _transform_ika_batched
+        else:  # 'svd' hybrid — the IKA power chain, scored per step
             u_past = np.linalg.svd(h_past, full_matrices=False)[0][:, :, :rank]
             g_fut = np.matmul(h_fut, h_fut.transpose(0, 2, 1))
             bb = g_fut.shape[0]
-            dot, sqrt = np.dot, math.sqrt
+            u_fut = np.empty((bb, rd))
+            x0 = _power_chain(g_fut, range(bb), x0, noise[c0:c0 + bb], u_fut)
             for i in range(bb):
-                c2 = g_fut[i]
-                x = x0
-                for _ in range(5):
-                    x = dot(c2, x)
-                    x = x / np.abs(x).max()
-                x = x / sqrt(dot(x, x))
-                y = dot(c2, x)
-                u = y / sqrt(dot(y, y))
                 # score expr stays in the original column-matmul form (its
                 # (r, rd) @ (rd, 1) shapes are outside the verified
                 # dgemv==dgemm bit-equality envelope)
-                alpha = u_past[i].T @ u[:, None]
+                alpha = u_past[i].T @ u_fut[i][:, None]
                 scores[sl][i] = (1.0 - alpha.T @ alpha).item()
-                x0 = u + 1e-3 * noise[c0 + i]
-                x0 = x0 / sqrt(dot(x0, x0))
         del h_fut, h_past
     for i, e in enumerate(ends):
         score[e - offset - scoring_step // 2:e - offset + (scoring_step + 1) // 2] = scores[i]

@@ -137,6 +137,17 @@ def _spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a (possibly localCheckpoint'ed) frame.
+    ``DataFrame.unpersist`` only uncaches plans held by the cache manager, so
+    on a checkpointed frame it frees nothing: those blocks belong to the RDD
+    under the frame's ``LogicalRDD`` leaf."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == 'LogicalRDD':
+        plan.rdd().unpersist(False)
+    df.unpersist()
+
+
 def _sized_parts(n_rows: int, df: DataFrame, target: int = 2048,
                  floor: int = 1) -> int:
     """Partition count for the cached learning table, derived from its SIZE
@@ -370,50 +381,57 @@ def learn_bpe_merges_windowed(df: DataFrame, n_rounds: int = 18,
     rep0.unpersist()
     merges: list = []
     retired: list = []   # generations awaiting their successor's materialization
-    for _ in range(n_rounds):
-        cand = (rep.select('cnt', F.explode(F.expr(_pairs_sql('repr')))
-                                   .alias('p'))
-                   .groupBy('p.lhs', 'p.rhs')
-                   .agg(F.sum('cnt').alias('pair_count'))
-                   .orderBy(F.col('pair_count').desc(),
-                            F.col('lhs').asc(), F.col('rhs').asc())
-                   .take(batch if mode == 'rank' else candidates))
-        # that take() materialized rep's (lazy) checkpoint, so the
-        # generation BEFORE it no longer backs anything — release it now
-        while retired:
-            retired.pop().unpersist()
-        accepted, blocked = [], set()
-        for row in cand:
-            l, r = row['lhs'], row['rhs']
-            if mode == 'independent' and (l in blocked or r in blocked):
-                continue
-            accepted.append({'merge_rank': len(merges) + len(accepted) + 1,
-                             'lhs': l, 'rhs': r, 'merged': l + r,
-                             'pair_count': int(row['pair_count'])})
-            blocked.update((l, r, l + r))
-            if len(accepted) == batch:
+    try:
+        for _ in range(n_rounds):
+            cand = (rep.select('cnt', F.explode(F.expr(_pairs_sql('repr')))
+                                       .alias('p'))
+                       .groupBy('p.lhs', 'p.rhs')
+                       .agg(F.sum('cnt').alias('pair_count'))
+                       .orderBy(F.col('pair_count').desc(),
+                                F.col('lhs').asc(), F.col('rhs').asc())
+                       .take(batch if mode == 'rank' else candidates))
+            # that take() materialized rep's (lazy) checkpoint, so the
+            # generation BEFORE it no longer backs anything — release it now
+            while retired:
+                _release(retired.pop())
+            accepted, blocked = [], set()
+            for row in cand:
+                l, r = row['lhs'], row['rhs']
+                if mode == 'independent' and (l in blocked or r in blocked):
+                    continue
+                accepted.append({'merge_rank': len(merges) + len(accepted) + 1,
+                                 'lhs': l, 'rhs': r, 'merged': l + r,
+                                 'pair_count': int(row['pair_count'])})
+                blocked.update((l, r, l + r))
+                if len(accepted) == batch:
+                    break
+            if not accepted:
                 break
-        if not accepted:
-            break
-        # localCheckpoint, not persist: it truncates the LOGICAL plan too,
-        # so round k+1's analysis starts from a leaf instead of re-walking
-        # k*batch accumulated replace expressions (O(K^2) driver-side
-        # catalyst work — measured minutes by round 18 with plain persist).
-        # LAZY (eager=False): the next round's pair-count job materializes
-        # it as a side effect, halving the Spark jobs per round; the parent
-        # generation stays cached until then (released above).
-        new = rep.withColumn(
-            'repr', F.expr(_apply_merges_sql('repr', accepted))) \
-            .localCheckpoint(eager=False)
-        retired.append(rep)
-        rep = new
-        merges += accepted
-    if retired:
-        # the final generation is still a lazy checkpoint: materialize it so
-        # the last retired generation's blocks can be released before return
-        rep.count()
+            # localCheckpoint, not persist: it truncates the LOGICAL plan too,
+            # so round k+1's analysis starts from a leaf instead of re-walking
+            # k*batch accumulated replace expressions (O(K^2) driver-side
+            # catalyst work — measured minutes by round 18 with plain persist).
+            # LAZY (eager=False): the next round's pair-count job materializes
+            # it as a side effect, halving the Spark jobs per round; the parent
+            # generation stays cached until then (released above).
+            new = rep.withColumn(
+                'repr', F.expr(_apply_merges_sql('repr', accepted))) \
+                .localCheckpoint(eager=False)
+            retired.append(rep)
+            rep = new
+            merges += accepted
+        if retired:
+            # the final generation is still a lazy checkpoint: materialize it so
+            # the last retired generation's blocks can be released before return
+            rep.count()
+    except BaseException:
+        # a failed round must not leak the cached generations: the caller
+        # only unpersists the table it gets back
+        _release(rep)
+        raise
+    finally:
         while retired:
-            retired.pop().unpersist()
+            _release(retired.pop())
     return merges, rep
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from changepoynt_spark.operators.scoring import build_algorithm, min_required_length, \
-    series_seed
+    score_batch, series_seed
 from changepoynt_spark.sources.datagen import QUANT_SCALE
 
 TIER_SECONDS = {'1m': 60, '1h': 3600, '1d': 86400}
@@ -133,14 +133,14 @@ def score_rollup(df: DataFrame, algorithm: str = 'sst', params: dict = None,
             out = {k: [] for k in ('doc_id', 'source', 'tier', 'bucket', 'cnt', 'sum',
                                    'min', 'max', 'first', 'last',
                                    'n_points', 'ts_blob', 'value_blob')}
-            for doc_id, src, toks in zip(pdf['doc_id'].to_numpy(),
-                                         pdf['source'].to_numpy(),
-                                         pdf['tokens'].to_numpy()):
+            doc_ids = pdf['doc_id'].to_numpy()
+            scores = score_batch(
+                algorithm, params,
+                (np.asarray(toks, dtype=np.float64) / scale for toks in pdf['tokens'].to_numpy()),
+                [seed_fn(doc_id) for doc_id in doc_ids])
+            for doc_id, src in zip(doc_ids, pdf['source'].to_numpy()):
                 _t0 = _time.perf_counter()
-                ts_vals = np.asarray(toks, dtype=np.float64) / scale
-                np.random.seed(seed_fn(doc_id))
-                algo = build_algorithm(algorithm, params)
-                score = np.asarray(algo.transform(ts_vals), dtype=np.float64)
+                score = np.asarray(next(scores), dtype=np.float64)
                 _t1 = _time.perf_counter()
                 t_stage['score'] += _t1 - _t0
                 tiers = _series_tiers(score, tick_seconds)

@@ -64,6 +64,41 @@ def build_algorithm(algorithm: str, params: dict = None):
     return ALGORITHMS[algorithm](**(params or {}))
 
 
+# series points scored per lockstep group: bounds the float copies, noise
+# draws and scores a group holds, whatever the Arrow batch size
+BATCH_POINTS = 1 << 17
+
+
+def score_batch(algorithm: str, params: dict, series, seeds):
+    """Yield the scores of ``series`` in order, each exactly what
+    ``np.random.seed(seed)``, a fresh instance and ``transform`` give for it.
+    SST/MSST ``method='ika'`` without fast Hankel score consecutive groups of
+    about ``BATCH_POINTS`` points in one lockstep power chain
+    (``kernels.sst._transform_ika``); every other algorithm runs that loop.
+    ``series`` may be any iterable; it is consumed one group at a time."""
+    params = dict(params or {})
+    cls = ALGORITHMS.get(algorithm) or MULTIVARIATE_ALGORITHMS[algorithm]
+    algo = cls(**params)
+    if not (isinstance(algo, (SST, MSST)) and algo.method == 'ika'
+            and not algo.use_fast_hankel):
+        for ts, seed in zip(series, seeds):
+            np.random.seed(seed)
+            # fresh instance per series: some algorithms (BOCPD) cache
+            # fitted priors across transform calls
+            yield cls(**params).transform(ts)
+        return
+    group, group_seeds, points = [], [], 0
+    for ts, seed in zip(series, seeds):
+        group.append(ts)
+        group_seeds.append(seed)
+        points += ts.shape[0]
+        if points >= BATCH_POINTS:
+            yield from algo.transform_ika(group, group_seeds)
+            group, group_seeds, points = [], [], 0
+    if group:
+        yield from algo.transform_ika(group, group_seeds)
+
+
 def min_required_length(algorithm: str, params: dict = None) -> int:
     """Minimum n_tok for which ``transform`` can score at least one point —
     pushed down as a native filter below the UDF (Catalyst sends it to the
@@ -103,16 +138,11 @@ def score_series(df: DataFrame, algorithm: str = 'sst', params: dict = None,
 
     def kernel(batches):
         for pdf in batches:
-            scores = []
-            for doc_id, toks in zip(pdf['doc_id'].to_numpy(), pdf['tokens'].to_numpy()):
-                ts = np.asarray(toks, dtype=np.float64) / scale
-                np.random.seed(seed_fn(doc_id))
-                # fresh instance per series: some algorithms (BOCPD) cache
-                # fitted priors across transform calls
-                algo = build_algorithm(algorithm, params)
-                scores.append(algo.transform(ts))
             out = pdf.copy()
-            out[score_col] = scores
+            out[score_col] = list(score_batch(
+                algorithm, params,
+                (np.asarray(toks, dtype=np.float64) / scale for toks in pdf['tokens'].to_numpy()),
+                [seed_fn(doc_id) for doc_id in pdf['doc_id'].to_numpy()]))
             yield out
 
     return df.mapInPandas(kernel, schema=out_schema)
@@ -135,14 +165,12 @@ def score_multichannel_series(df: DataFrame, algorithm: str = 'msst', params: di
 
     def kernel(batches):
         for pdf in batches:
-            scores = []
-            for doc_id, chans in zip(pdf['doc_id'].to_numpy(), pdf[channels_col].to_numpy()):
-                mat = np.stack([np.asarray(c, dtype=np.float64) for c in chans], axis=1)
-                np.random.seed(seed_fn(doc_id))
-                algo = MULTIVARIATE_ALGORITHMS[algorithm](**params)
-                scores.append(algo.transform(mat))
             out = pdf.copy()
-            out[score_col] = scores
+            out[score_col] = list(score_batch(
+                algorithm, params,
+                (np.stack([np.asarray(c, dtype=np.float64) for c in chans], axis=1)
+                 for chans in pdf[channels_col].to_numpy()),
+                [seed_fn(doc_id) for doc_id in pdf['doc_id'].to_numpy()]))
             yield out
 
     return df.mapInPandas(kernel, schema=out_schema)

@@ -343,3 +343,28 @@ def test_learning_parallelism_is_data_sized(spark, sf_dir):
             bpe._sized_parts(n, rep, target=8192, floor=8) == min(par, 8)
     finally:
         rep.unpersist()
+
+
+def test_windowed_learning_releases_cached_generations_on_failure(
+        spark, sf_dir, monkeypatch):
+    """A round that fails mid-job must not leak the cached distinct-window
+    generations: the current (lazily checkpointed) one and every retired one
+    are released before the error propagates."""
+    pairs_sql, calls = bpe._pairs_sql, []
+
+    def failing_second_round(src):
+        calls.append(src)
+        if len(calls) < 2:
+            return pairs_sql(src)
+        return (f"if(length({src}) >= 0, raise_error('forced round failure'), "
+                f"{pairs_sql(src)})")
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    monkeypatch.setattr(bpe, '_pairs_sql', failing_second_round)
+    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').limit(40)
+    with pytest.raises(Exception, match='forced round failure'):
+        bpe.learn_bpe_merges_windowed(docs, n_rounds=3, batch=16, window=4)
+    assert len(calls) == 2
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
+

@@ -108,6 +108,23 @@ def test_msst_other_methods_smoke(method):
     assert np.isfinite(score).all()
 
 
+def test_msst_score_batch_bitmatches_per_series_transform():
+    """The block-Hankel form through score_batch: series with 1, 2 and 3
+    channels in one batch (one lockstep chain per channel count) equal their
+    own seed + transform bit for bit."""
+    from changepoynt_spark.operators.scoring import score_batch
+    rng = np.random.default_rng(8)
+    params = dict(window_length=12, n_windows=12, lag=4, rank=2, method='ika',
+                  scoring_step=2)
+    series = [np.cumsum(rng.standard_normal((n, c)), axis=0)
+              for n, c in zip(rng.integers(60, 900, 7), (3, 3, 2, 3, 1, 2, 3))]
+    seeds = list(range(40, 47))
+    got = list(score_batch('msst', params, series, seeds))
+    for ts, seed, score in zip(series, seeds, got):
+        np.random.seed(seed)
+        assert np.array_equal(score, MSST(**params).transform(ts))
+
+
 # -- MESST --------------------------------------------------------------------
 
 def test_messt_zero_prefix():

@@ -165,6 +165,110 @@ def test_batched_paths_bitmatch_the_sequential_loop(step):
             assert np.array_equal(batched, loop), method
 
 
+def _ragged_series(n: int, seed: int) -> list:
+    rng = np.random.default_rng(seed)
+    lengths = rng.integers(80, 1400, n)
+    out = []
+    for length in lengths:
+        x = np.cumsum(rng.standard_normal(length) * 0.1)
+        x[length // 2:] += rng.standard_normal() * 3.0
+        out.append(x)
+    return out
+
+
+@pytest.mark.parametrize('params', [
+    dict(window_length=30, n_windows=30, lag=10, rank=2, scoring_step=2),
+    # step 1, odd row dim (8-byte-offset operands if not padded)
+    dict(window_length=25, n_windows=25, lag=5, rank=2, scoring_step=1),
+    # lag off the step grid: past grams are gathered, not sliced
+    dict(window_length=20, n_windows=15, lag=7, rank=3, scoring_step=3),
+    dict(window_length=21, n_windows=21, lag=6, rank=2, scoring_step=3,
+         mitigate_offset=True),
+])
+def test_score_batch_bitmatches_per_series_transform(params, monkeypatch):
+    """score_batch runs the IKA chains of a batch in lockstep; every series'
+    scores must equal its own seed + fresh instance + transform bit for bit.
+    The 12-series batches run several gram chunks with series ending inside
+    them, so the stacked steps, the drop to the 1-D chain and the chunk
+    boundaries are all crossed; a small group budget splits the batch into
+    several lockstep groups."""
+    from changepoynt_spark.operators import scoring
+
+    params = dict(params, method='ika')
+    series = _ragged_series(12, seed=params['window_length'])
+    seeds = [1000 + 17 * j for j in range(12)]
+    expect = []
+    for ts, seed in zip(series, seeds):
+        np.random.seed(seed)
+        expect.append(ssts.SST(**params).transform(ts))
+    for size in (1, 2, 3, 12):
+        got = list(scoring.score_batch('sst', params, iter(series[:size]), seeds[:size]))
+        assert len(got) == size
+        for j in range(size):
+            assert np.array_equal(got[j], expect[j]), (size, j)
+    monkeypatch.setattr(scoring, 'BATCH_POINTS', 2000)
+    got = list(scoring.score_batch('sst', params, series, seeds))
+    assert all(np.array_equal(g, e) for g, e in zip(got, expect))
+
+
+def test_lockstep_zero_step_series_keeps_its_lone_draw():
+    """A series too short for any step draws only its x0 (``rand(rd)``),
+    like the per-step loop, and scores all zeros; the others in the batch
+    are unaffected."""
+    from functools import partial
+    algo = ssts.SST(20, n_windows=20, lag=6, rank=2, scoring_step=2, method='ika')
+    long_a, long_b = _ragged_series(2, seed=3)
+    short = long_a[:algo.covered_regions()[0]]     # zero steps
+
+    def run(batch):
+        return ssts._transform_ika(
+            builders=[partial(ssts._batched_hankels, ts, window_length=20, n_windows=20,
+                              mitigate_offset=False) for ts in batch],
+            lengths=[ts.shape[0] for ts in batch], seeds=None,
+            start_idx=algo.covered_regions()[0], offset=algo.compute_offset(),
+            lag=algo.lag, scoring_step=algo.scoring_step, rank=algo.rank,
+            lanczos_rank=algo.lanczos_rank, row_dim=20)
+
+    np.random.seed(5)
+    got = run([long_a, short, long_b])
+    state_batch = np.random.get_state()[1].copy()
+    np.random.seed(5)
+    a = run([long_a])[0]
+    np.random.rand(20)
+    b = run([long_b])[0]
+    assert np.array_equal(np.random.get_state()[1], state_batch)
+    assert np.array_equal(got[0], a) and np.array_equal(got[2], b)
+    assert not got[1].any() and got[1].shape == short.shape
+
+
+@pytest.mark.parametrize('rd', [30, 25])
+@pytest.mark.parametrize('m', [2, 4, 12])
+def test_stacked_chain_step_bitmatches_1d_chain(m, rd):
+    """One stacked power-chain step over m series equals m 1-D steps bit for
+    bit, for several consecutive steps.  This pins the norm form: matmul(x^T,
+    x) is the 1-D ddot, an einsum or sum norm is not."""
+    rng = np.random.default_rng(m * rd)
+    flat = np.empty((m, 4, rd * rd + (rd & 1)))
+    grams = ssts._as_grams(flat, rd)
+    h = rng.random((m, 4, rd, rd + 7))
+    np.matmul(h, h.transpose(0, 1, 3, 2), out=grams)   # SPD stacks
+    noise = rng.random((m, 4, rd))
+    x0 = rng.random((m, rd))
+    x0 /= np.sqrt(np.sum(x0 * x0, axis=1))[:, None]
+    state = ssts._aligned_rows(m, rd)
+    state[:, :, 0] = x0
+    y, a = ssts._aligned_rows(m, rd), ssts._aligned_rows(m, rd)
+    stacked = np.empty((m, 4, rd))
+    for t in range(4):
+        ssts._stacked_chain_step(grams[:, t], state, noise[:, t, :, None],
+                                 stacked[:, t, :, None], y, a)
+    for j in range(m):
+        single = np.empty((4, rd))
+        x_next = ssts._power_chain(grams[j], range(4), x0[j].copy(), noise[j], single)
+        assert np.array_equal(single, stacked[j]), j
+        assert np.array_equal(x_next, state[j, :, 0]), j
+
+
 def test_scoring_step_smear():
     """scoring_step > 1 writes the same value into the smear slice
     [idx-off-ss//2, idx-off+(ss+1)//2) — reference sst.py:282-283."""
