@@ -10,4 +10,6 @@ with gap-fill, Gorilla XOR + delta-of-delta compression
 (changepoynt_spark.plans) for 10^12-sequence scale.
 """
 
+from changepoynt_spark import _zipimport  # noqa: F401  (reused-worker task start)
+
 __version__ = '0.1.0'

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from changepoynt_spark.session import release
 from changepoynt_spark.sources.datagen import VOCAB
 
 SEP = '\x1f'   # symbol separator (unit separator)
@@ -102,8 +103,21 @@ def _symbols(repr_col):
 
 def _sql_str(s: str) -> str:
     """Single-quoted Spark-SQL string literal (escapes backslash/quote;
-    the SEP/EOW control characters are legal raw inside a literal)."""
+    the SEP/EOW control characters are legal raw inside a literal).  The
+    escapes are read back only with escaped-string-literal parsing off,
+    which the learners check once via :func:`_require_sql_escapes`."""
     return "'" + s.replace('\\', '\\\\').replace("'", "\\'") + "'"
+
+
+def _require_sql_escapes(df: DataFrame) -> None:
+    """Fail loudly where ``_sql_str`` literals would be misparsed: with
+    ``spark.sql.parser.escapedStringLiterals=true`` Spark keeps the
+    backslashes, so a merge on a quote or backslash would silently match
+    nothing."""
+    conf = 'spark.sql.parser.escapedStringLiterals'
+    if df.sparkSession.conf.get(conf, 'false').strip().lower() == 'true':
+        raise ValueError(f'BPE learning builds backslash-escaped SQL string '
+                         f'literals; set {conf}=false for this session')
 
 
 def _apply_merges_sql(src: str, merges) -> str:
@@ -135,17 +149,6 @@ def _spread_input(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
     return df
-
-
-def _release(df: DataFrame) -> None:
-    """Drop the blocks of a (possibly localCheckpoint'ed) frame.
-    ``DataFrame.unpersist`` only uncaches plans held by the cache manager, so
-    on a checkpointed frame it frees nothing: those blocks belong to the RDD
-    under the frame's ``LogicalRDD`` leaf."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == 'LogicalRDD':
-        plan.rdd().unpersist(False)
-    df.unpersist()
 
 
 def _sized_parts(n_rows: int, df: DataFrame, target: int = 2048,
@@ -182,6 +185,7 @@ def learn_bpe_merges(df: DataFrame, n_merges: int = 16,
     contract query unrolls the rounds as chained DuckDB CTEs)."""
     if n_merges < 1:
         raise ValueError('n_merges must be >= 1')
+    _require_sql_escapes(df)
     wc = (_spread_input(df)
           .select(F.explode(F.split(F.col(text_col), ' ')).alias('word'))
           .groupBy('word').agg(F.count('*').alias('cnt'))
@@ -357,6 +361,7 @@ def learn_bpe_merges_windowed(df: DataFrame, n_rounds: int = 18,
     scanning up to ``candidates`` pairs.  Driver traffic is ≤
     ``candidates`` rows per round."""
     assert mode in ('rank', 'independent'), mode
+    _require_sql_escapes(df)
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         # single-split test parquet: spread the window-explode pass over a
@@ -393,7 +398,7 @@ def learn_bpe_merges_windowed(df: DataFrame, n_rounds: int = 18,
             # that take() materialized rep's (lazy) checkpoint, so the
             # generation BEFORE it no longer backs anything — release it now
             while retired:
-                _release(retired.pop())
+                release(retired.pop())
             accepted, blocked = [], set()
             for row in cand:
                 l, r = row['lhs'], row['rhs']
@@ -427,11 +432,11 @@ def learn_bpe_merges_windowed(df: DataFrame, n_rounds: int = 18,
     except BaseException:
         # a failed round must not leak the cached generations: the caller
         # only unpersists the table it gets back
-        _release(rep)
+        release(rep)
         raise
     finally:
         while retired:
-            _release(retired.pop())
+            release(retired.pop())
     return merges, rep
 
 

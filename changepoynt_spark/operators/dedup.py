@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from changepoynt_spark.session import release
+
 
 def exact_dup_groups(df: DataFrame, text_col: str = 'text') -> DataFrame:
     """(text_hash, n_dups, min_doc_id) for exact-duplicate groups (>1 doc)."""
@@ -208,34 +210,43 @@ def dup_clusters(pairs: DataFrame, id_a: str = 'doc_a', id_b: str = 'doc_b',
     # depth and re-optimization cost grow linearly; the classic iterative-
     # algorithm pitfall).  Checkpointing truncates lineage so every round's
     # plan is exactly one join + one groupBy.
-    labels = edges.select(F.col('src').alias('node')).distinct() \
-                  .withColumn('label', F.col('node')).localCheckpoint(eager=True)
-    for _ in range(max_iterations):
-        prop = (edges.join(labels, edges.src == labels.node)
-                     .groupBy(F.col('dst').alias('node2'))
-                     .agg(F.min('label').alias('nlabel')))
-        # the changed-flag rides the propagation join, so the fixpoint check
-        # is a cheap scan of the already-materialized checkpoint — not an
-        # extra labels-vs-labels join per round
-        nlabel = F.least('label', F.coalesce('nlabel', 'label'))
-        new_labels = (labels.join(prop, labels.node == prop.node2, 'left')
-                            .select('node', nlabel.alias('label'),
-                                    (nlabel != F.col('label')).alias('_changed'))
-                      ).localCheckpoint(eager=True)
-        changed = new_labels.filter('_changed').count()
-        labels = new_labels.drop('_changed')
-        if changed == 0:
-            break
-    else:
-        # Returning non-fixpoint labels would hand downstream dedup WRONG
-        # cluster ids with no signal (a chain with diameter > max_iterations
-        # would keep the wrong representatives) — fail loudly instead.
+    labels = ckpt = edges.select(F.col('src').alias('node')).distinct() \
+        .withColumn('label', F.col('node')).localCheckpoint(eager=True)
+    try:
+        for _ in range(max_iterations):
+            prop = (edges.join(labels, edges.src == labels.node)
+                         .groupBy(F.col('dst').alias('node2'))
+                         .agg(F.min('label').alias('nlabel')))
+            # the changed-flag rides the propagation join, so the fixpoint
+            # check is a cheap scan of the already-materialized checkpoint —
+            # not an extra labels-vs-labels join per round
+            nlabel = F.least('label', F.coalesce('nlabel', 'label'))
+            new = (labels.join(prop, labels.node == prop.node2, 'left')
+                         .select('node', nlabel.alias('label'),
+                                 (nlabel != F.col('label')).alias('_changed'))
+                   ).localCheckpoint(eager=True)
+            changed = new.filter('_changed').count()
+            # the eager checkpoint no longer reads the previous round's
+            # blocks: free them (unpersist alone frees nothing here)
+            release(ckpt)
+            ckpt, labels = new, new.drop('_changed')
+            if changed == 0:
+                break
+        else:
+            # Returning non-fixpoint labels would hand downstream dedup WRONG
+            # cluster ids with no signal (a chain with diameter >
+            # max_iterations would keep the wrong representatives) — fail
+            # loudly instead.
+            raise RuntimeError(
+                f'dup_clusters did not converge within {max_iterations} '
+                f'rounds ({changed} labels still changing); raise '
+                'max_iterations — rounds needed equal the duplicate-graph '
+                'diameter')
+    except BaseException:
+        release(ckpt)
+        raise
+    finally:
         edges.unpersist()
-        raise RuntimeError(
-            f'dup_clusters did not converge within {max_iterations} rounds '
-            f'({changed} labels still changing); raise max_iterations — rounds '
-            'needed equal the duplicate-graph diameter')
-    edges.unpersist()
     return labels.select(F.col('node').alias('doc_id'),
                          F.col('label').alias('cluster_id'))
 
@@ -633,23 +644,29 @@ def dup_clusters_star(pairs: DataFrame, id_a: str = 'doc_a', id_b: str = 'doc_b'
                         F.expr('bit_xor(xxhash64(u, v))').alias('h')).first()
         return (row['n'], row['h'])
 
-    sig = _sig(edges)
-    for _ in range(max_iterations):
-        # one materialization per DOUBLE-round (r9): the large-star
-        # intermediate stays a plan subtree — its distinct() exchange is
-        # deduped by ReuseExchange across the small-star's two consumers —
-        # so each double-round costs one job instead of two, and the
-        # checkpoint still truncates the plan every round
-        edges = _star(_star(edges, large=True), large=False) \
-            .localCheckpoint(eager=True)
-        new_sig = _sig(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f'dup_clusters_star did not converge within {max_iterations} '
-            'double-rounds — raise max_iterations')
+    try:
+        sig = _sig(edges)
+        for _ in range(max_iterations):
+            # one materialization per DOUBLE-round (r9): the large-star
+            # intermediate stays a plan subtree — its distinct() exchange is
+            # deduped by ReuseExchange across the small-star's two
+            # consumers — so each double-round costs one job instead of two,
+            # and the checkpoint still truncates the plan every round
+            new = _star(_star(edges, large=True), large=False) \
+                .localCheckpoint(eager=True)
+            release(edges)
+            edges = new
+            new_sig = _sig(edges)
+            if new_sig == sig:
+                break
+            sig = new_sig
+        else:
+            raise RuntimeError(
+                f'dup_clusters_star did not converge within {max_iterations} '
+                'double-rounds — raise max_iterations')
+    except BaseException:
+        release(edges)
+        raise
     # at the fixpoint every edge is (node, component_min) or its mirror;
     # keep the min-side as the label and add singleton-free node set
     labels = (edges.filter('v < u')

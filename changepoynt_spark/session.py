@@ -3,12 +3,13 @@
 Arrow on (all kernel execution crosses the JVM->Python boundary as Arrow
 batches), AQE on (runtime skew-join/partition coalescing), shuffle
 partitions sized for the local harness but overridable for cluster runs.
+``release`` frees the blocks of a cached or localCheckpoint'ed frame.
 """
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = 'changepoynt-spark', master: str = None,
@@ -52,3 +53,14 @@ def get_spark(app_name: str = 'changepoynt-spark', master: str = None,
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks of a (possibly localCheckpoint'ed) frame.
+    ``DataFrame.unpersist`` only uncaches plans held by the cache manager, so
+    on a checkpointed frame it frees nothing: those blocks belong to the RDD
+    under the frame's ``LogicalRDD`` leaf."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == 'LogicalRDD':
+        plan.rdd().unpersist(False)
+    df.unpersist()

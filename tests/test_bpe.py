@@ -368,3 +368,18 @@ def test_windowed_learning_releases_cached_generations_on_failure(
     assert len(calls) == 2
     assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
 
+
+def test_learning_refuses_raw_string_literal_parsing(spark):
+    """``_sql_str`` escapes with backslashes, which the parser keeps verbatim
+    under ``escapedStringLiterals=true``: fail loudly, not mislearn."""
+    docs = spark.createDataFrame([(1, "it's a back\\slash")],
+                                 'doc_id long, text string')
+    conf = 'spark.sql.parser.escapedStringLiterals'
+    spark.conf.set(conf, 'true')
+    try:
+        for learn in (bpe.learn_bpe_merges, bpe.learn_bpe_merges_windowed):
+            with pytest.raises(ValueError, match=conf):
+                learn(docs)
+    finally:
+        spark.conf.unset(conf)
+    assert bpe.learn_bpe_merges(docs, n_merges=1)

@@ -73,3 +73,26 @@ def test_rollup_operators_survive_empty_events(spark):
     twa = rollup.time_weighted_avg(one, ['user_id'],
                                    interval_seconds=3600).toPandas()
     assert len(twa) == 1 and twa['twa'].iloc[0] == 5.0
+
+
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.mark.parametrize('cc', ['dup_clusters', 'dup_clusters_star'])
+def test_dup_clusters_release_retired_label_checkpoints(spark, cc):
+    """Every round's retired checkpoint is freed: a multi-round chain leaves
+    at most the returned frame's own checkpoint cached, and a run that
+    fails to converge leaves nothing."""
+    from changepoynt_spark.operators import dedup
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 8)],
+                                  'doc_a long, doc_b long')
+    before = _persisted(spark)
+    got = {r['doc_id']: r['cluster_id']
+           for r in getattr(dedup, cc)(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 9)}
+    assert len(_persisted(spark) - before) <= 1
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError, match='did not converge'):
+        getattr(dedup, cc)(pairs, max_iterations=1)
+    assert _persisted(spark) <= before
