@@ -46,25 +46,29 @@ def shingles(df: DataFrame, n: int = 3, text_col: str = 'text') -> DataFrame:
 
 
 def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
-                        id_col: str = 'doc_id', df_cap: int = None) -> DataFrame:
+                        id_col: str = 'doc_id', *, df_cap: int) -> DataFrame:
     """(doc_a, doc_b, jaccard) for all pairs with Jaccard >= threshold.
 
-    Candidates via inverted shingle index: explode distinct shingles, self-
-    join on shingle with doc_a < doc_b.  Any pair with jaccard > 0 shares a
-    shingle, so this finds the same set a cross join would — without the
-    cross join.  |A ∩ B| is the per-pair match count of that same join, so
-    no shingle-set arrays ever cross a shuffle; |A ∪ B| = |A| + |B| - inter
-    from broadcast per-doc counts.
+    Candidates via an inverted shingle index: group the distinct shingles'
+    postings by shingle and emit each posting list's doc_a < doc_b
+    combinations.  Any pair with jaccard > 0 shares a shingle, so this
+    finds the same set a cross join would — without the cross join.
+    |A ∩ B| is the per-pair count of those combinations, so no shingle-set
+    arrays ever cross a shuffle; |A ∪ B| = |A| + |B| - inter from
+    broadcast per-doc counts.
 
-    ``df_cap``: document-frequency ceiling on the inverted index.  A shingle
-    shared by k docs emits k^2/2 join rows — one boilerplate shingle on a
-    100 TB corpus is a job-killer, so postings with df > df_cap are dropped
-    BEFORE the self-join (a stop-shingle filter; it can only undercount the
-    intersection for pairs glued together by ubiquitous boilerplate).  The
-    hot-shingle list is tiny by construction (only shingles in > df_cap
-    docs), so it is found with a map-side-combined count and removed with a
-    broadcast anti-join — no extra shuffle of the postings themselves.
+    ``df_cap`` (required, >= 1): document-frequency ceiling on the inverted
+    index.  A shingle shared by k docs builds k^2/2 pairs in ONE row — one
+    boilerplate shingle on a 100 TB corpus runs an executor out of memory,
+    so postings with df > df_cap are dropped BEFORE pairing (a stop-shingle
+    filter; it can only undercount the intersection for pairs glued
+    together by ubiquitous boilerplate).  The hot-shingle list is tiny by
+    construction (only shingles in > df_cap docs), so it is found with a
+    map-side-combined count and removed with a broadcast anti-join — no
+    extra shuffle of the postings themselves.
     """
+    if df_cap < 1:
+        raise ValueError(f'df_cap must be >= 1, got {df_cap!r}')
     sh = shingles(df, n).select(F.col(id_col).alias('_id'), 'shingle_set')
     # hash shingle strings to 64-bit first: the exchange carries (id, int64)
     # instead of raw n-gram strings (distinct shingles -> no collisions
@@ -82,10 +86,9 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     # are one row per distinct shingle) — map-side combined, BEFORE df_cap
     # (the union denominator uses full set sizes)
     counts = inv.groupBy('_id').agg(F.count('*').alias('_n'))
-    if df_cap is not None:
-        hot = (inv.groupBy('_sh').agg(F.count('*').alias('_df'))
-                  .filter(F.col('_df') > df_cap).select('_sh'))
-        inv = inv.join(F.broadcast(hot), '_sh', 'left_anti')
+    hot = (inv.groupBy('_sh').agg(F.count('*').alias('_df'))
+              .filter(F.col('_df') > df_cap).select('_sh'))
+    inv = inv.join(F.broadcast(hot), '_sh', 'left_anti')
     # candidate pairs from per-shingle POSTING LISTS (r9): group the
     # postings by shingle and emit each list's a<b combinations from one
     # explode — the same pair multiset the a/b self-join produced, without
@@ -93,8 +96,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     # only ever matched rows inside one shingle group; a group-local
     # combination needs no join at all).  List sizes are BOUNDED by the
     # df_cap stop-shingle filter above, so the collected arrays are ≤
-    # df_cap elements even on a 100 TB corpus (without a cap, callers
-    # accept unbounded groups in either formulation).
+    # df_cap elements even on a 100 TB corpus.
     posts = (inv.groupBy('_sh')
                 .agg(F.sort_array(F.collect_list('_id')).alias('_ids'))
                 .filter(F.size('_ids') >= 2))

@@ -31,6 +31,10 @@ TIER_SECONDS = {'1m': 60, '1h': 3600, '1d': 86400}
 
 AGG_COLS = ['cnt_points', 'sum_value', 'min_value', 'max_value', 'avg_value',
             'first_value', 'last_value']
+# the mergeable partial form (rollup_partial): AGG_COLS minus the derived
+# avg, plus the first/last ts anchors
+PARTIAL_COLS = ['cnt_points', 'sum_value', 'min_value', 'max_value',
+                'first_value', 'first_ts', 'last_value', 'last_ts']
 
 
 def attach_timestamps(long_df: DataFrame, pos_col: str = 'pos', ts_col: str = 'ts',
@@ -424,9 +428,23 @@ def rollup_partial(df: DataFrame, keys, ts_col: str = 'ts', value_col: str = 'va
                   F.max_by(value_col, ts_col).alias('last_value'),
                   F.max(ts_col).alias('last_ts')))
     return (agg.withColumn('bucket_start', F.col('w.start')).drop('w')
-               .select(*keys, 'bucket_start', 'cnt_points', 'sum_value',
-                       'min_value', 'max_value', 'first_value', 'first_ts',
-                       'last_value', 'last_ts'))
+               .select(*keys, 'bucket_start', *PARTIAL_COLS))
+
+
+def _merge_partial_aggs():
+    """The partial form's merge rule, one aggregate per PARTIAL_COLS entry:
+    counts and decimal sums add (the sum re-pinned to its carry type),
+    min/max fold, and first/last follow their ts anchors.  Folding into a
+    coarser bucket (:func:`rebucket_partials`) and collapsing one bucket
+    (:func:`merge_partials`) apply the same rule."""
+    return [F.sum('cnt_points').alias('cnt_points'),
+            F.sum('sum_value').cast('decimal(28,6)').alias('sum_value'),
+            F.min('min_value').alias('min_value'),
+            F.max('max_value').alias('max_value'),
+            F.min_by('first_value', 'first_ts').alias('first_value'),
+            F.min('first_ts').alias('first_ts'),
+            F.max_by('last_value', 'last_ts').alias('last_value'),
+            F.max('last_ts').alias('last_ts')]
 
 
 def rebucket_partials(df: DataFrame, keys, interval: str) -> DataFrame:
@@ -437,21 +455,27 @@ def rebucket_partials(df: DataFrame, keys, interval: str) -> DataFrame:
     coarse tier can refresh incrementally from the fine tier's snapshot
     DELTAS: a late 1m partial folds into its 1h bucket additively, no
     re-read of 1m history.  (:func:`rollup_from_rollup` is the finalized,
-    anchor-dropping sibling for one-shot cascades.)"""
+    anchor-dropping sibling for one-shot cascades.)
+
+    Streaming hierarchical tiers run this over
+    ``watermarked(fine.stream_read(spark), 'bucket_start', delay)``, so
+    raw -> 1m -> 1h runs as two always-on streams.  The upstream emits a
+    bucket once, when its own watermark closes it, so the delay only needs
+    to cover the upstream emission jitter, not data lateness.  A mid-chain
+    fine-tier ``compact()`` is invisible (``stream_read`` drops maintenance
+    snapshots by manifest op); a fine-tier batch-refresh takeover is a
+    logical mutation and needs the same takeover downstream (see
+    ``content_stream_filter``).  Visibility at the coarse level is exact
+    over everything the fine level has MATERIALIZED: raw points still
+    inside the fine stream's open tail are not yet visible to the coarse
+    ``read_realtime_stream``, which covers the fine TIER's tail by design
+    (asserted in test_streaming_hierarchical_continuous_aggregates against
+    the raw rollup cut at the fine frontier)."""
     keys = list(keys)
     agg = (df.groupBy(*keys, F.window('bucket_start', interval).alias('w'))
-             .agg(F.sum('cnt_points').alias('cnt_points'),
-                  F.sum('sum_value').cast('decimal(28,6)').alias('sum_value'),
-                  F.min('min_value').alias('min_value'),
-                  F.max('max_value').alias('max_value'),
-                  F.min_by('first_value', 'first_ts').alias('first_value'),
-                  F.min('first_ts').alias('first_ts'),
-                  F.max_by('last_value', 'last_ts').alias('last_value'),
-                  F.max('last_ts').alias('last_ts')))
+             .agg(*_merge_partial_aggs()))
     return (agg.withColumn('bucket_start', F.col('w.start')).drop('w')
-               .select(*keys, 'bucket_start', 'cnt_points', 'sum_value',
-                       'min_value', 'max_value', 'first_value', 'first_ts',
-                       'last_value', 'last_ts'))
+               .select(*keys, 'bucket_start', *PARTIAL_COLS))
 
 
 def merge_partials(u: DataFrame, keys) -> DataFrame:
@@ -461,15 +485,7 @@ def merge_partials(u: DataFrame, keys) -> DataFrame:
     merge-on-read) and stay exactly correct — one hash-aggregate shuffle on
     the same (keys, bucket) the tier is already partitioned by."""
     keys = list(keys)
-    return (u.groupBy(*keys, 'bucket_start')
-             .agg(F.sum('cnt_points').alias('cnt_points'),
-                  F.sum('sum_value').cast('decimal(28,6)').alias('sum_value'),
-                  F.min('min_value').alias('min_value'),
-                  F.max('max_value').alias('max_value'),
-                  F.min_by('first_value', 'first_ts').alias('first_value'),
-                  F.min('first_ts').alias('first_ts'),
-                  F.max_by('last_value', 'last_ts').alias('last_value'),
-                  F.max('last_ts').alias('last_ts')))
+    return u.groupBy(*keys, 'bucket_start').agg(*_merge_partial_aggs())
 
 
 def merge_rollup_partials(a: DataFrame, b: DataFrame, keys) -> DataFrame:
@@ -547,25 +563,21 @@ def sketch_estimate(df: DataFrame, keys) -> DataFrame:
 DDSKETCH_K = 64
 
 
-def _dd_parts(value_col: str):
-    v = F.col(value_col)
-    sgn = F.when(v > 0, F.lit(1)).when(v < 0, F.lit(-1)).otherwise(F.lit(0))
-    idx = F.when(v == 0, F.lit(0)).otherwise(
-        F.floor(F.lit(float(DDSKETCH_K)) * F.log(F.abs(v)))).cast('int')
-    return sgn, idx
-
-
 def dd_sketch_rows(df: DataFrame, keys, ts_col: str = 'ts',
                    value_col: str = 'value',
                    interval: str = '1 hour') -> DataFrame:
     """The tier's EXCHANGE ROWS: (keys, bucket_start, _sgn, _idx, _cnt) —
     one row per occupied log-bucket.  This is the only aggregation the base
     tier needs (and therefore the only STATEFUL operator on the streaming
-    path, see streaming/rollup_stream.streaming_dd_sketch_rows); the map
-    assembly is a stateless view (:func:`dd_rows_to_sketch`) shared
-    verbatim by the batch and streaming twins."""
+    path: ``dd_sketch_rows(watermarked(stream, ts_col, delay), ...)``, see
+    streaming/rollup_stream.watermarked); the map assembly is a stateless
+    view (:func:`dd_rows_to_sketch`) run verbatim over the batch rows and
+    over the stream's sink."""
     keys = list(keys)
-    sgn, idx = _dd_parts(value_col)
+    v = F.col(value_col)
+    sgn = F.when(v > 0, F.lit(1)).when(v < 0, F.lit(-1)).otherwise(F.lit(0))
+    idx = F.when(v == 0, F.lit(0)).otherwise(
+        F.floor(F.lit(float(DDSKETCH_K)) * F.log(F.abs(v)))).cast('int')
     cnt = (df.groupBy(*keys, F.window(ts_col, interval).alias('w'),
                       sgn.alias('_sgn'), idx.alias('_idx'))
              .agg(F.count('*').alias('_cnt')))
@@ -788,32 +800,22 @@ def moments_rollup(df: DataFrame, keys, ts_col: str = 'ts',
     < 10^4 (Spark 4 runs ANSI mode, so a wider value THROWS on cast rather
     than silently truncating).  The narrow base is deliberate: x^4 stays
     within 38 digits with no precision loss on either engine; a wider base
-    would silently lose precision in Spark and overflow DuckDB."""
+    would silently lose precision in Spark and overflow DuckDB.
+
+    Streaming: ``moments_rollup(watermarked(stream, ts_col, delay), ...)``
+    is this same aggregation; decimal power sums are order-insensitive, so
+    a closed streaming bucket bit-matches the batch tier over the same rows
+    (asserted in tests/test_streaming.py)."""
     keys = list(keys)
-    agg = (df.groupBy(*keys, F.window(ts_col, interval).alias('w'))
-             .agg(*_moments_power_aggs(value_col)))
-    return _moments_finalize(agg.withColumn('bucket_start', F.col('w.start'))
-                                .drop('w'), keys)
-
-
-def _moments_power_aggs(value_col: str):
-    """The four DECIMAL-exact power sums behind the moments tier — shared
-    verbatim by the batch and streaming twins so their outputs bit-match.
-    DECIMAL(8,4) base on purpose: x^4 then stays within 38 digits with NO
-    precision loss on either engine ((8,4)^4 -> scale 16, ~35 digits);
-    a wider base silently loses precision in Spark and overflows DuckDB."""
     x = F.col(value_col).cast('decimal(8,4)')
-    return [F.count(value_col).alias('n_points'),
-            F.sum(x).alias('_s1'),
-            F.sum(x * x).cast('decimal(38,8)').alias('_s2'),
-            F.sum(x * x * x).cast('decimal(38,12)').alias('_s3'),
-            F.sum(x * x * x * x).cast('decimal(38,16)').alias('_s4')]
-
-
-def _moments_finalize(agg: DataFrame, keys) -> DataFrame:
-    """Derived statistics over the exact power sums (fixed expression
-    shape; see moments_rollup).  ``agg`` must carry bucket_start, n_points
-    and _s1.._s4."""
+    agg = (df.groupBy(*keys, F.window(ts_col, interval).alias('w'))
+             .agg(F.count(value_col).alias('n_points'),
+                  F.sum(x).alias('_s1'),
+                  F.sum(x * x).cast('decimal(38,8)').alias('_s2'),
+                  F.sum(x * x * x).cast('decimal(38,12)').alias('_s3'),
+                  F.sum(x * x * x * x).cast('decimal(38,16)').alias('_s4'))
+             .withColumn('bucket_start', F.col('w.start'))
+             .drop('w'))
     n = F.col('n_points').cast('double')
     s1 = F.col('_s1').cast('double')
     s2 = F.col('_s2').cast('double')
@@ -831,7 +833,7 @@ def _moments_finalize(agg: DataFrame, keys) -> DataFrame:
     # one-ulp decimal->double conversion difference between engines
     well = m2 > 1e-6
     rnd = lambda c: F.round(c, 6) + F.lit(0.0)   # + 0.0 collapses -0.0  # noqa: E731
-    return agg.select(*list(keys), 'bucket_start', 'n_points',
+    return agg.select(*keys, 'bucket_start', 'n_points',
                       rnd(m).alias('mean'),
                       F.when(well, rnd(m2)).alias('variance'),
                       F.when(well, rnd(skew)).alias('skewness'),
@@ -890,28 +892,32 @@ def sax_rollup(df: DataFrame, keys, ts_col: str = 'ts',
     Output: (keys, frame_start, n_points, paa, z, symbol).
     """
     keys = list(keys)
-    frames = (df.groupBy(*keys, F.window(ts_col, interval).alias('w'))
-                .agg(*_sax_frame_aggs(value_col))
-                .withColumn('frame_start', F.col('w.start'))
-                .drop('w'))
-    return sax_finalize(frames, keys, alphabet=alphabet)
+    return sax_finalize(sax_frames(df, keys, ts_col, value_col, interval),
+                        keys, alphabet=alphabet)
 
 
-def _sax_frame_aggs(value_col: str):
-    """The PAA frame tier's DECIMAL-exact sums — shared verbatim by the
-    batch and streaming twins so their frame rows bit-match (the moments
-    `_moments_power_aggs` pattern)."""
+def sax_frames(df: DataFrame, keys, ts_col: str = 'ts',
+               value_col: str = 'value', interval: str = '1 hour') -> DataFrame:
+    """The PAA frame tier: (keys, frame_start, n_points, DECIMAL-exact
+    _f1/_f2) — the symbolic tier's only aggregation.  Streaming runs it over
+    ``watermarked(stream, ts_col, delay)`` and symbolizes the sink with the
+    same :func:`sax_finalize` (the dd_rows_to_sketch pattern), so closed
+    frames bit-match batch."""
+    keys = list(keys)
     x = F.col(value_col).cast('decimal(8,4)')
-    return [F.count(value_col).alias('n_points'),
-            F.sum(x).cast('decimal(28,4)').alias('_f1'),
-            F.sum(x * x).cast('decimal(38,8)').alias('_f2')]
+    return (df.groupBy(*keys, F.window(ts_col, interval).alias('w'))
+              .agg(F.count(value_col).alias('n_points'),
+                   F.sum(x).cast('decimal(28,4)').alias('_f1'),
+                   F.sum(x * x).cast('decimal(38,8)').alias('_f2'))
+              .withColumn('frame_start', F.col('w.start'))
+              .drop('w'))
 
 
 def sax_finalize(frames: DataFrame, keys, alphabet: int = 4) -> DataFrame:
     """Symbolization over the (tiny) frame tier: series stats as the exact
     cascade SUM of the frame sums, then fixed-shape z + letter per frame.
-    A stateless batch view — the streaming twin emits frame rows and this
-    SAME code symbolizes them from the sink (the dd_rows_to_sketch
+    A stateless batch view — a stream of :func:`sax_frames` rows is
+    symbolized from its sink by this SAME code (the dd_rows_to_sketch
     pattern), so stream-assembled symbols bit-match batch."""
     keys = list(keys)
     stats = (frames.groupBy(*keys)

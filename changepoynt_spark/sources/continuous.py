@@ -210,12 +210,17 @@ class ContinuousAggregate:
 
     # -- refresh -----------------------------------------------------------
 
-    def _partial(self, df: DataFrame) -> DataFrame:
+    def _fold(self, df: DataFrame) -> DataFrame:
+        """Source rows -> this tier's partial form, transform-free: a
+        partial source re-buckets, a points source rolls up."""
         if self.source_kind == 'partial':
             return self._form.rebucket(df)
-        if self.transform is not None:
-            df = self.transform(df)
         return self._form.partial(df)
+
+    def _partial(self, df: DataFrame) -> DataFrame:
+        if self.transform is not None:   # only ever set on a points source
+            df = self.transform(df)
+        return self._fold(df)
 
     def refresh(self, spark: SparkSession) -> dict:
         """Bring the tier up to the raw table's current snapshot.
@@ -443,8 +448,9 @@ class ContinuousAggregate:
         return best
 
     def stream_sink(self):
-        """foreachBatch target for :func:`streaming_rollup_partial` (or any
-        stream emitting this tier's PARTIAL form): appends each
+        """foreachBatch target for ``rollup_partial`` over a watermarked
+        stream (or any stream emitting this tier's PARTIAL form; see
+        streaming/rollup_stream.watermarked): appends each
         micro-batch's closed buckets to the SAME tier table batch refreshes
         use — same partial schema, same append path, same watermark
         metadata ('rollup_watermark' per snapshot), so every tier reader
@@ -481,8 +487,6 @@ class ContinuousAggregate:
         stream snapshots carry no raw-snapshot watermark, so
         refreshed_through() = -1 and refresh() full-recomputes, atomically
         invalidating the stream's snapshots (asserted in tests)."""
-        from pyspark.sql import functions as F
-
         def sink(batch_df, batch_id: int):
             self._append_stream_batch(batch_df, batch_id)
         return sink
@@ -570,14 +574,9 @@ class ContinuousAggregate:
             # event time (the raw sequence shape has no ts column at all)
             raw = self.transform(raw)
         if frontier is None:
-            return self._form.finalize(self._form.merge(
-                self._form.rebucket(raw) if self.source_kind == 'partial'
-                else self._form.partial(raw)))
+            return self._form.finalize(self._form.merge(self._fold(raw)))
         cut = frontier + pd.Timedelta(self.interval)
         tail = raw.filter(F.col(self.ts_col) >= F.lit(cut))
-        part_tail = (self._form.rebucket(tail)
-                     if self.source_kind == 'partial'
-                     else self._form.partial(tail))
         part = self.tier.read(spark).unionByName(
-            part_tail, allowMissingColumns=True)
+            self._fold(tail), allowMissingColumns=True)
         return self._form.finalize(self._form.merge(part))

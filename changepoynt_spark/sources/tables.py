@@ -909,8 +909,7 @@ class IcebergishTable:
             out = self._apply_deletes(spark, out, dels).drop('_seq')
         return out
 
-    def stream_read(self, spark: SparkSession, schema=None,
-                    reader_options: dict = None) -> DataFrame:
+    def stream_read(self, spark: SparkSession, schema=None) -> DataFrame:
         """Structured-Streaming source over this table's data dirs that
         ingests ONLY content snapshots (appends / upsert data parts /
         incremental refreshes) — maintenance rewrites (compact, expire,
@@ -928,10 +927,8 @@ class IcebergishTable:
         mid-batch."""
         if schema is None:
             schema = self.read(spark).schema
-        reader = spark.readStream.schema(schema)
-        for k, v in (reader_options or {}).items():
-            reader = reader.option(k, v)   # e.g. maxFilesPerTrigger
-        stream = reader.parquet(os.path.join(self.data_dir, 'snap-*'))
+        stream = spark.readStream.schema(schema).parquet(
+            os.path.join(self.data_dir, 'snap-*'))
         return content_stream_filter(stream, self.root)
 
     def _live_snapshots(self, snapshot_id: int) -> list:

@@ -1,16 +1,17 @@
-"""Structured Streaming tier rollup (engine-new; the reference's only
-"streaming" is a buffered batch replay, see
-/root/reference/docs/guides/experimental-buffered-streaming.md).
+"""Structured Streaming tiers (engine-new; the reference's only "streaming"
+is a buffered batch replay).
 
-The tier cascade's base aggregation as a streaming query: watermarked
-windowed aggregates, append mode (a bucket is emitted exactly once, when the
-watermark passes its end — the contract an incremental continuous aggregate
-needs).  Scoring stays batch: kernel state (the SST feedback eigenvector) is
-sequential within a series (SURVEY.md §2.9), so the streaming path covers the
-rollup of already-scored or raw points.
-
-Aggregates match the batch tier exactly (same names/semantics as
-operators.rollup.rollup_from_points).
+A streaming tier IS the batch tier operator, run incrementally by the engine
+(the Structured Streaming model, Armbrust et al., SIGMOD 2018): compose
+``op(watermarked(stream, ts_col, delay), ...)`` with the batch operator of
+the same contract from operators.rollup — ``rollup_from_points``,
+``rollup_partial``, ``rebucket_partials`` (over a tier's ``bucket_start``),
+``moments_rollup``, ``dd_sketch_rows`` or ``sax_frames``.  The event-time
+watermark is the only streaming-specific input, so there is one
+implementation per tier contract and stream == batch by construction.
+Scoring stays batch: kernel state (the SST feedback eigenvector) is
+sequential within a series (SURVEY.md §2.9), so the streaming path covers
+the rollup of already-scored or raw points.
 """
 from __future__ import annotations
 
@@ -18,97 +19,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def streaming_rollup(stream_df: DataFrame, keys, ts_col: str = 'ts', value_col: str = 'value',
-                     interval: str = '1 minute', watermark_delay: str = '2 minutes') -> DataFrame:
-    """Streaming equivalent of rollup_from_points: watermarked windowed agg.
+def watermarked(stream_df: DataFrame, ts_col: str, delay: str) -> DataFrame:
+    """``stream_df`` with an event-time watermark ``delay`` behind the max
+    ``ts_col`` seen — the one place that sets a streaming tier's watermark.
 
-    Use with ``.writeStream.outputMode('append')`` for exactly-once bucket
-    emission of closed windows (late rows beyond ``watermark_delay`` are
-    dropped), or 'complete' for a fully materialized small tier."""
-    keys = list(keys)
+    Lateness contract: a windowed aggregation over the result, written with
+    ``.writeStream.outputMode('append')``, emits each bucket exactly once,
+    when the watermark passes its end; rows later than ``delay`` are
+    dropped.  'complete' mode emits a fully materialized small tier.
+    Aggregation state per open bucket is the operator's own partial."""
     # watermarks require TIMESTAMP (tz-aware); parquet fixtures are NTZ.
     # the session timezone is pinned to UTC, so this cast is deterministic
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-    agg = (stream_df
-           .withWatermark(ts_col, watermark_delay)
-           .groupBy(*keys, F.window(ts_col, interval).alias('w'))
-           .agg(F.count(value_col).alias('cnt_points'),
-                F.sum(value_col).alias('sum_value'),
-                F.min(value_col).alias('min_value'),
-                F.max(value_col).alias('max_value'),
-                F.min_by(value_col, ts_col).alias('first_value'),
-                F.max_by(value_col, ts_col).alias('last_value')))
-    return (agg.withColumn('avg_value', F.col('sum_value') / F.col('cnt_points'))
-               .withColumn('bucket_start', F.col('w.start'))
-               .drop('w'))
-
-
-def streaming_moments_rollup(stream_df: DataFrame, keys, ts_col: str = 'ts',
-                             value_col: str = 'value', interval: str = '1 hour',
-                             watermark_delay: str = '2 minutes') -> DataFrame:
-    """Streaming twin of operators.rollup.moments_rollup: watermarked
-    windowed aggregation of the SAME decimal-exact power sums and the same
-    finalize expressions (both sides import them from rollup.py), so a
-    closed streaming bucket is bit-identical to the batch tier for the same
-    rows — asserted in tests/test_streaming.py.  Power sums are decimals,
-    hence order-insensitive: incremental accumulation cannot drift.  Append
-    mode emits each bucket once when the watermark passes its end; state is
-    one row of (count + 4 decimal sums) per open (keys, bucket)."""
-    from changepoynt_spark.operators.rollup import (_moments_finalize,
-                                                    _moments_power_aggs)
-    keys = list(keys)
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-    agg = (stream_df
-           .withWatermark(ts_col, watermark_delay)
-           .groupBy(*keys, F.window(ts_col, interval).alias('w'))
-           .agg(*_moments_power_aggs(value_col)))
-    return _moments_finalize(agg.withColumn('bucket_start', F.col('w.start'))
-                                .drop('w'), keys)
-
-
-def streaming_dd_sketch_rows(stream_df: DataFrame, keys, ts_col: str = 'ts',
-                             value_col: str = 'value', interval: str = '1 hour',
-                             watermark_delay: str = '2 minutes') -> DataFrame:
-    """Streaming base of the quantile-sketch tier: ONE watermarked stateful
-    aggregation emits the tier's exchange rows (keys, bucket_start, _sgn,
-    _idx, _cnt) — the same rows operators.rollup.dd_sketch_rows produces in
-    batch.  Sketch-map assembly (dd_rows_to_sketch) is a stateless batch
-    view over the sink, so chaining a second stateful aggregation is never
-    needed; because the assembly code is shared verbatim, assembled closed
-    buckets bit-match the batch tier (asserted in tests).  State per open
-    (keys, bucket) is one counter per occupied log-bucket."""
-    from changepoynt_spark.operators.rollup import _dd_parts
-    keys = list(keys)
-    sgn, idx = _dd_parts(value_col)
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-    agg = (stream_df
-           .withWatermark(ts_col, watermark_delay)
-           .groupBy(*keys, F.window(ts_col, interval).alias('w'),
-                    sgn.alias('_sgn'), idx.alias('_idx'))
-           .agg(F.count('*').alias('_cnt')))
-    return agg.withColumn('bucket_start', F.col('w.start')).drop('w')
-
-
-def streaming_sax_frames(stream_df: DataFrame, keys, ts_col: str = 'ts',
-                         value_col: str = 'value', interval: str = '1 hour',
-                         watermark_delay: str = '2 minutes') -> DataFrame:
-    """Streaming base of the SAX symbolic tier: ONE watermarked stateful
-    aggregation emits the PAA frame rows (keys, frame_start, n_points,
-    decimal _f1/_f2) — the same rows operators.rollup.sax_rollup produces in
-    batch (shared ``_sax_frame_aggs``).  Symbolization needs WHOLE-series
-    stats, so it is a stateless batch view over the sink
-    (operators.rollup.sax_finalize — the dd_rows_to_sketch pattern); because
-    the finalize code is shared verbatim and the sums are decimals,
-    stream-assembled symbols bit-match batch (asserted in tests).  State per
-    open (keys, frame) is one count + two decimal sums."""
-    from changepoynt_spark.operators.rollup import _sax_frame_aggs
-    keys = list(keys)
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-    agg = (stream_df
-           .withWatermark(ts_col, watermark_delay)
-           .groupBy(*keys, F.window(ts_col, interval).alias('w'))
-           .agg(*_sax_frame_aggs(value_col)))
-    return agg.withColumn('frame_start', F.col('w.start')).drop('w')
+    return (stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
+                     .withWatermark(ts_col, delay))
 
 
 def streaming_sessionize(stream_df: DataFrame, keys, ts_col: str = 'ts',
@@ -123,9 +46,7 @@ def streaming_sessionize(stream_df: DataFrame, keys, ts_col: str = 'ts',
     Per-session aggregates mirror session_stats: event count, value sum,
     session bounds and duration."""
     keys = list(keys)
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-    agg = (stream_df
-           .withWatermark(ts_col, watermark_delay)
+    agg = (watermarked(stream_df, ts_col, watermark_delay)
            .groupBy(*keys, F.session_window(ts_col, gap).alias('w'))
            .agg(F.count(value_col).alias('n_events'),
                 F.sum(value_col).alias('sum_value'),
@@ -151,10 +72,8 @@ def streaming_interval_join(points: DataFrame, intervals: DataFrame, on: str,
     contract); the batch twin is operators.asof.interval_join with
     hi = lo + width.
     """
-    p = (points.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-               .withWatermark(ts_col, watermark_delay).alias('p'))
-    i = (intervals.withColumn(lo_col, F.col(lo_col).cast('timestamp'))
-                  .withWatermark(lo_col, watermark_delay).alias('i'))
+    p = watermarked(points, ts_col, watermark_delay).alias('p')
+    i = watermarked(intervals, lo_col, watermark_delay).alias('i')
     cond = F.expr(
         f'p.{on} = i.{on} AND p.{ts_col} >= i.{lo_col} '
         f'AND p.{ts_col} <= i.{lo_col} + INTERVAL {width}')
@@ -166,8 +85,8 @@ def streaming_gap_fill(tier_stream: DataFrame, keys, value_cols=('avg_value',),
                        interval_seconds: int = 60,
                        method: str = 'locf') -> DataFrame:
     """Streaming twin of operators.rollup.gap_fill over a CLOSED-bucket tier
-    stream (the append-mode output of :func:`streaming_rollup`, e.g. its
-    parquet sink re-read as a stream).
+    stream (the append-mode output of ``rollup_from_points`` over
+    :func:`watermarked`, e.g. its parquet sink re-read as a stream).
 
     The batch operator joins a per-key dense spine and fills with running
     window frames; the streaming form is the same recurrence as per-key
@@ -260,87 +179,3 @@ def streaming_gap_fill(tier_stream: DataFrame, keys, value_cols=('avg_value',),
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     outputMode='append',
                                     timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def streaming_rollup_partial(stream_df: DataFrame, keys, ts_col: str = 'ts',
-                             value_col: str = 'value',
-                             interval: str = '1 minute',
-                             watermark_delay: str = '2 minutes') -> DataFrame:
-    """Streaming twin of operators.rollup.rollup_partial: emits CLOSED
-    buckets in the tier's mergeable PARTIAL form (decimal-exact sums +
-    first/last ts anchors, identical column set and carry casts), so a
-    foreachBatch sink can append micro-batches straight into a
-    ContinuousAggregate tier table — the stream and batch refresh share
-    one substrate.  Append mode: a bucket is emitted exactly once when the
-    event-time watermark passes its end; rows later than
-    ``watermark_delay`` are dropped (the documented lateness contract)."""
-    keys = list(keys)
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast('timestamp'))
-    agg = (stream_df
-           .withWatermark(ts_col, watermark_delay)
-           .groupBy(*keys, F.window(ts_col, interval).alias('w'))
-           .agg(F.count(value_col).alias('cnt_points'),
-                F.sum(F.col(value_col).cast('decimal(18,6)'))
-                 .cast('decimal(28,6)').alias('sum_value'),
-                F.min(value_col).alias('min_value'),
-                F.max(value_col).alias('max_value'),
-                F.min_by(value_col, ts_col).alias('first_value'),
-                F.min(ts_col).alias('first_ts'),
-                F.max_by(value_col, ts_col).alias('last_value'),
-                F.max(ts_col).alias('last_ts')))
-    return (agg.withColumn('bucket_start', F.col('w.start')).drop('w')
-               .select(*keys, 'bucket_start', 'cnt_points', 'sum_value',
-                       'min_value', 'max_value', 'first_value', 'first_ts',
-                       'last_value', 'last_ts'))
-
-
-def streaming_rebucket_partials(stream_df: DataFrame, keys,
-                                interval: str,
-                                watermark_delay: str = '2 minutes'
-                                ) -> DataFrame:
-    """Streaming twin of operators.rollup.rebucket_partials — the missing
-    piece of STREAMING HIERARCHICAL continuous aggregates: a file stream
-    over a (stream- or batch-fed) fine tier's snapshot dirs
-    (``IcebergishTable.stream_read``) folds PARTIAL rows into coarser
-    PARTIAL buckets (same decimal-exact sums and first/last ts anchors, so
-    the result appends into the coarse ``ContinuousAggregate`` tier via
-    the SAME ``stream_sink``).  raw -> 1m tier -> 1h tier then runs as two
-    always-on streams with no batch refresh in the loop, and every tier
-    reader (merge-on-read, realtime, compaction, batch takeover) works
-    unchanged on both levels.
-
-    The event time is ``bucket_start``: the upstream emits a bucket once,
-    when ITS watermark closes it, so arrival order already respects event
-    time — ``watermark_delay`` only needs to cover the upstream emission
-    jitter (one upstream trigger interval is plenty), not data lateness
-    (the fine tier absorbed that).  A mid-chain fine-tier ``compact()`` is
-    invisible: stream_read drops maintenance snapshots by manifest op.
-    A fine-tier batch-refresh TAKEOVER (refresh-full overwrite) is a
-    logical mutation and needs the same takeover downstream — documented
-    in content_stream_filter.
-
-    Visibility at level 2 is exact over everything level 1 has
-    MATERIALIZED: raw points still inside the fine stream's open tail
-    (past its event-time frontier) are not yet visible to the coarse
-    level's realtime view — the coarse ``read_realtime_stream`` covers
-    the fine TIER's tail, by design (asserted in
-    test_streaming_hierarchical_continuous_aggregates against the raw
-    rollup cut at the fine frontier)."""
-    keys = list(keys)
-    stream_df = stream_df.withColumn(
-        'bucket_start', F.col('bucket_start').cast('timestamp'))
-    agg = (stream_df
-           .withWatermark('bucket_start', watermark_delay)
-           .groupBy(*keys, F.window('bucket_start', interval).alias('w'))
-           .agg(F.sum('cnt_points').alias('cnt_points'),
-                F.sum('sum_value').cast('decimal(28,6)').alias('sum_value'),
-                F.min('min_value').alias('min_value'),
-                F.max('max_value').alias('max_value'),
-                F.min_by('first_value', 'first_ts').alias('first_value'),
-                F.min('first_ts').alias('first_ts'),
-                F.max_by('last_value', 'last_ts').alias('last_value'),
-                F.max('last_ts').alias('last_ts')))
-    return (agg.withColumn('bucket_start', F.col('w.start')).drop('w')
-               .select(*keys, 'bucket_start', 'cnt_points', 'sum_value',
-                       'min_value', 'max_value', 'first_value', 'first_ts',
-                       'last_value', 'last_ts'))

@@ -27,14 +27,16 @@ import argparse
 def build_stream(spark, input_path: str, keys, interval: str = '1 hour',
                  watermark: str = '2 minutes', ts_col: str = 'ts',
                  value_col: str = 'value'):
-    """readStream -> streaming_sax_frames; one definition shared by main()
-    and the tests (the ingest job's pattern)."""
-    from changepoynt_spark.streaming.rollup_stream import streaming_sax_frames
+    """readStream -> watermarked -> sax_frames (the batch tier's own
+    operator); one definition shared by main() and the tests (the ingest
+    job's pattern)."""
+    from changepoynt_spark.operators.rollup import sax_frames
+    from changepoynt_spark.streaming.rollup_stream import watermarked
     schema = spark.read.parquet(input_path).schema
     stream = spark.readStream.schema(schema).parquet(input_path)
-    return streaming_sax_frames(stream, keys=list(keys), ts_col=ts_col,
-                                value_col=value_col, interval=interval,
-                                watermark_delay=watermark)
+    return sax_frames(watermarked(stream, ts_col, watermark),
+                      keys=list(keys), ts_col=ts_col, value_col=value_col,
+                      interval=interval)
 
 
 def assemble_symbols(spark, frames_path: str, keys, alphabet: int = 4):

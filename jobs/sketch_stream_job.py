@@ -26,14 +26,16 @@ import argparse
 def build_stream(spark, input_path: str, keys, interval: str = '1 hour',
                  watermark: str = '2 minutes', ts_col: str = 'ts',
                  value_col: str = 'value'):
-    """readStream -> streaming_dd_sketch_rows; one definition shared by
-    main() and the tests (the ingest job's pattern)."""
-    from changepoynt_spark.streaming.rollup_stream import streaming_dd_sketch_rows
+    """readStream -> watermarked -> dd_sketch_rows (the batch tier's own
+    operator); one definition shared by main() and the tests (the ingest
+    job's pattern)."""
+    from changepoynt_spark.operators.rollup import dd_sketch_rows
+    from changepoynt_spark.streaming.rollup_stream import watermarked
     schema = spark.read.parquet(input_path).schema
     stream = spark.readStream.schema(schema).parquet(input_path)
-    return streaming_dd_sketch_rows(stream, keys=list(keys), ts_col=ts_col,
-                                    value_col=value_col, interval=interval,
-                                    watermark_delay=watermark)
+    return dd_sketch_rows(watermarked(stream, ts_col, watermark),
+                          keys=list(keys), ts_col=ts_col,
+                          value_col=value_col, interval=interval)
 
 
 def assemble_quantiles(spark, rows_path: str, keys, qs=(0.5, 0.95, 0.99)):

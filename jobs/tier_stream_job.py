@@ -6,10 +6,11 @@ instead of batch snapshot polling.
 
 A MANIFEST-AWARE file stream over the raw Icebergish table
 (IcebergishTable.stream_read) feeds the PARTIAL-form 1m/1h rollup
-(streaming_rollup_partial: decimal-exact sums + first/last ts anchors, the
-exact schema batch refreshes append); each micro-batch's CLOSED buckets
-land in the tier via foreachBatch -> IcebergishTable.append with the stream
-batch id and rollup watermark in the snapshot properties.
+(rollup_partial over the watermarked stream: decimal-exact sums +
+first/last ts anchors, the same operator batch refreshes run); each
+micro-batch's CLOSED buckets land in the tier via foreachBatch ->
+IcebergishTable.append with the stream batch id and rollup watermark in
+the snapshot properties.
 
 The stream ingests only CONTENT snapshots: raw-table maintenance (compact /
 expire rewrites, MoR delete key-files) is filtered out per micro-batch via
@@ -33,9 +34,9 @@ in the tier lineage.  One checkpoint dir per tier.
 --source-kind partial chains the job into STREAMING HIERARCHICAL
 continuous aggregates: --raw is then itself a CA tier in partial form
 (e.g. the 1m tier this job keeps fresh from raw), and micro-batches fold
-with streaming_rebucket_partials — raw -> 1m -> 1h as two always-on
-streams, each tier-compactable mid-stream (the manifest-aware source
-skips maintenance snapshots at every level).
+with rebucket_partials, watermarked on bucket_start — raw -> 1m -> 1h as
+two always-on streams, each tier-compactable mid-stream (the
+manifest-aware source skips maintenance snapshots at every level).
 
     spark-submit --master local[32] --py-files engine.zip \
         jobs/tier_stream_job.py \
@@ -66,9 +67,8 @@ def main(argv=None, spark=None):
                     help="'partial': --raw is itself a CA tier in partial "
                          'form (streaming HIERARCHICAL continuous '
                          'aggregates, e.g. a stream-fed 1m tier feeding '
-                         'this 1h tier); folds with '
-                         'streaming_rebucket_partials instead of the raw '
-                         'rollup')
+                         'this 1h tier); folds with rebucket_partials '
+                         'instead of the raw rollup')
     ap.add_argument('--mode', default='closed-buckets',
                     choices=('closed-buckets', 'partials-per-batch'),
                     help="'closed-buckets' (default): watermarked streaming "
@@ -100,8 +100,9 @@ def main(argv=None, spark=None):
     try:
         from changepoynt_spark.sources.continuous import ContinuousAggregate
         from changepoynt_spark.sources.tables import IcebergishTable
-        from changepoynt_spark.streaming.rollup_stream import (
-            streaming_rebucket_partials, streaming_rollup_partial)
+        from changepoynt_spark.operators.rollup import (rebucket_partials,
+                                                        rollup_partial)
+        from changepoynt_spark.streaming.rollup_stream import watermarked
         raw = IcebergishTable(args.raw)
         partial_src = args.source_kind == 'partial'
         transform = None
@@ -131,16 +132,16 @@ def main(argv=None, spark=None):
                       .option('checkpointLocation', args.checkpoint))
         else:
             if partial_src:
-                tier = streaming_rebucket_partials(
-                    stream, keys=keys, interval=args.interval,
-                    watermark_delay=args.watermark_delay)
+                tier = rebucket_partials(
+                    watermarked(stream, 'bucket_start', args.watermark_delay),
+                    keys=keys, interval=args.interval)
             else:
                 if transform is not None:
                     stream = transform(stream)
-                tier = streaming_rollup_partial(
-                    stream, keys=keys, ts_col=args.ts_col,
-                    value_col=args.value_col, interval=args.interval,
-                    watermark_delay=args.watermark_delay)
+                tier = rollup_partial(
+                    watermarked(stream, args.ts_col, args.watermark_delay),
+                    keys=keys, ts_col=args.ts_col, value_col=args.value_col,
+                    interval=args.interval)
             writer = (tier.writeStream.outputMode('append')
                       .foreachBatch(ca.stream_sink())
                       .option('checkpointLocation', args.checkpoint))

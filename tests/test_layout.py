@@ -1,63 +1,7 @@
-"""Storage-layout proofs: bucketed joins run exchange-free, time-partitioned
-tiers prune at the file index."""
-import re
-
-import pytest
+"""Storage-layout proofs: z-ordered files narrow both dims' ranges, and the
+spark-submit artifact packs exactly the package source.  Hidden-partition
+pruning of tier tables is covered by tests/test_table_pruning.py."""
 from pyspark.sql import functions as F
-
-from changepoynt_spark.plans import layout
-
-
-@pytest.fixture()
-def warehouse_spark(spark, tmp_path):
-    # bucketed tables live in the session catalog; point the warehouse at
-    # tmp and disable auto-broadcast so the join's exchange behavior is
-    # decided by layout alone
-    old = spark.conf.get('spark.sql.autoBroadcastJoinThreshold')
-    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
-    yield spark
-    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', old)
-    for t in ('pts_b', 'meta_b'):
-        spark.sql(f'DROP TABLE IF EXISTS {t}')
-
-
-def test_bucketed_join_has_zero_exchanges(warehouse_spark, sf_dir, tmp_path):
-    spark = warehouse_spark
-    ev = spark.read.parquet(f'{sf_dir}/events.parquet')
-    pts = ev.select('user_id', 'ts', 'value')
-    meta = ev.groupBy('user_id').agg(F.count('*').alias('n_events'))
-    layout.write_bucketed(pts, 'pts_b', str(tmp_path / 'pts'), ['user_id'], n_buckets=8)
-    layout.write_bucketed(meta, 'meta_b', str(tmp_path / 'meta'), ['user_id'], n_buckets=8)
-    j = spark.table('pts_b').join(spark.table('meta_b'), 'user_id')
-    n = j.count()
-    assert n == ev.count()
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    # co-located by layout: SortMergeJoin with NO shuffle on either side
-    assert 'SortMergeJoin' in plan
-    assert 'Exchange' not in plan.replace('BroadcastExchange', '')
-    assert 'BroadcastExchange' not in plan
-
-
-def test_time_partitioned_tier_prunes_and_pushes_down(spark, sf_dir, tmp_path):
-    from changepoynt_spark.operators.rollup import rollup_from_points
-    ev = spark.read.parquet(f'{sf_dir}/events.parquet')
-    tier = rollup_from_points(ev, ['user_id'], interval='1 hour')
-    root = str(tmp_path / 'tier1h')
-    layout.write_time_partitioned(tier, root)
-    r = layout.read_time_range(spark, root, '2024-01-03', '2024-01-04')
-    assert r.count() > 0
-    plan = r._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r'PartitionFilters: \[([^\]]*)\]', plan)
-    assert m and 'p_date' in m.group(1)          # date dirs pruned at the index
-    # NTZ timestamps get no parquet PushedFilters entry in this Spark
-    # version; the residual ts filter still sits directly on the scan
-    m2 = re.search(r'DataFilters: \[([^\]]*)\]', plan)
-    assert m2 and 'bucket_start' in m2.group(1)
-    # pruning is real: only the matching date directories are read
-    files = {row[0] for row in r.select(F.input_file_name()).distinct().collect()}
-    assert files and all('p_date=2024-01-0' in f for f in files)
-    days = {f.split('p_date=')[1].split('/')[0] for f in files}
-    assert days <= {'2024-01-03', '2024-01-04'}
 
 
 def test_zorder_narrows_file_ranges_on_both_dims(spark, sf_dir, tmp_path):

@@ -59,6 +59,16 @@ def test_dedup_similarity_survive_degenerate_inputs(spark, weird_docs, empty_doc
     assert dedup.dup_clusters_star(pairs).count() == 0
 
 
+def test_ngram_jaccard_pairs_requires_a_df_cap(spark, weird_docs):
+    """An uncapped posting list builds k^2/2 pairs for one hot shingle in a
+    single row, so the cap has no default and must be >= 1."""
+    from changepoynt_spark.operators import dedup
+    with pytest.raises(TypeError, match='df_cap'):
+        dedup.ngram_jaccard_pairs(weird_docs)
+    with pytest.raises(ValueError, match='df_cap'):
+        dedup.ngram_jaccard_pairs(weird_docs, df_cap=0)
+
+
 def test_rollup_operators_survive_empty_events(spark):
     from changepoynt_spark.operators import rollup
     ev = spark.createDataFrame([], 'event_id long, ts timestamp, user_id long, '

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from changepoynt_spark.operators.rollup import AGG_COLS, rollup_from_points
-from changepoynt_spark.streaming.rollup_stream import streaming_rollup
+from changepoynt_spark.streaming.rollup_stream import watermarked
 
 
 @pytest.fixture()
@@ -21,8 +21,8 @@ def _run_stream(spark, events_dir, mode):
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option('maxFilesPerTrigger', 2).parquet(events_dir))
-    tier = streaming_rollup(stream, keys=['user_id'], ts_col='ts', value_col='value',
-                            interval='1 hour', watermark_delay='30 minutes')
+    tier = rollup_from_points(watermarked(stream, 'ts', '30 minutes'), keys=['user_id'],
+                              ts_col='ts', value_col='value', interval='1 hour')
     name = f'tier_{mode}'
     q = (tier.writeStream.outputMode(mode).format('memory').queryName(name)
          .trigger(availableNow=True).start())
@@ -40,6 +40,19 @@ def test_streaming_complete_matches_batch(spark, events_dir):
     for col in AGG_COLS:
         np.testing.assert_allclose(got[col].to_numpy(dtype=float),
                                    batch[col].to_numpy(dtype=float), rtol=1e-9, err_msg=col)
+
+
+def test_stream_tier_has_the_batch_column_order(spark, events_dir):
+    """The streaming tier is the batch operator over a watermarked stream,
+    so its columns are the batch tier's, in the batch tier's order."""
+    schema = spark.read.parquet(events_dir).schema
+    stream = spark.readStream.schema(schema).parquet(events_dir)
+    tier = rollup_from_points(watermarked(stream, 'ts', '30 minutes'),
+                              ['user_id'], interval='1 hour')
+    batch = rollup_from_points(spark.read.parquet(events_dir), ['user_id'],
+                               interval='1 hour')
+    assert tier.columns == batch.columns == ['user_id', 'bucket_start',
+                                             *AGG_COLS]
 
 
 def test_streaming_append_emits_closed_buckets_once(spark, events_dir):
@@ -109,8 +122,8 @@ def test_streaming_tier_cascades_to_1h_1d_exactly(spark, events_dir):
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option('maxFilesPerTrigger', 2).parquet(events_dir))
-    tier_1m = streaming_rollup(stream, keys=['user_id'], ts_col='ts', value_col='value',
-                               interval='1 minute', watermark_delay='30 minutes')
+    tier_1m = rollup_from_points(watermarked(stream, 'ts', '30 minutes'), keys=['user_id'],
+                                 ts_col='ts', value_col='value', interval='1 minute')
     q = (tier_1m.writeStream.outputMode('complete').format('memory')
          .queryName('tier_1m_cascade').trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -302,14 +315,12 @@ def test_streaming_moments_rollup_bitmatches_batch(spark, events_dir):
     batch moments_rollup over the same rows (including NULL moments on
     degenerate buckets)."""
     from changepoynt_spark.operators.rollup import moments_rollup
-    from changepoynt_spark.streaming.rollup_stream import streaming_moments_rollup
 
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option('maxFilesPerTrigger', 2).parquet(events_dir))
-    tier = streaming_moments_rollup(stream, keys=['user_id'], ts_col='ts',
-                                    value_col='value', interval='1 hour',
-                                    watermark_delay='30 minutes')
+    tier = moments_rollup(watermarked(stream, 'ts', '30 minutes'), keys=['user_id'],
+                          ts_col='ts', value_col='value', interval='1 hour')
     q = (tier.writeStream.outputMode('complete').format('memory')
          .queryName('moments_stream').trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -342,14 +353,14 @@ def test_streaming_dd_sketch_rows_assemble_to_batch_tier(spark, events_dir):
     derived quantiles."""
     from changepoynt_spark.operators.rollup import (dd_rows_to_sketch,
                                                     dd_sketch_from_points,
-                                                    dd_sketch_quantiles)
-    from changepoynt_spark.streaming.rollup_stream import streaming_dd_sketch_rows
+                                                    dd_sketch_quantiles,
+                                                    dd_sketch_rows)
 
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option('maxFilesPerTrigger', 2).parquet(events_dir))
-    rows = streaming_dd_sketch_rows(stream, keys=['user_id'], interval='1 hour',
-                                    watermark_delay='30 minutes')
+    rows = dd_sketch_rows(watermarked(stream, 'ts', '30 minutes'), keys=['user_id'],
+                          interval='1 hour')
     q = (rows.writeStream.outputMode('complete').format('memory')
          .queryName('dd_rows_stream').trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -371,14 +382,14 @@ def test_streaming_dd_sketch_rows_assemble_to_batch_tier(spark, events_dir):
 def test_streaming_sax_frames_finalize_to_batch_tier(spark, events_dir):
     """Streaming SAX frame rows (one stateful agg), symbolized by the SAME
     batch finalize view, bit-match the batch symbolic tier."""
-    from changepoynt_spark.operators.rollup import sax_finalize, sax_rollup
-    from changepoynt_spark.streaming.rollup_stream import streaming_sax_frames
+    from changepoynt_spark.operators.rollup import (sax_finalize, sax_frames,
+                                                    sax_rollup)
 
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option('maxFilesPerTrigger', 2).parquet(events_dir))
-    frames = streaming_sax_frames(stream, keys=['user_id'], interval='1 hour',
-                                  watermark_delay='30 minutes')
+    frames = sax_frames(watermarked(stream, 'ts', '30 minutes'), keys=['user_id'],
+                        interval='1 hour')
     q = (frames.writeStream.outputMode('complete').format('memory')
          .queryName('sax_frames_stream').trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -410,9 +421,8 @@ def test_streaming_gap_fill_matches_batch(spark, events_dir, tmp_path, method):
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option('maxFilesPerTrigger', 2).parquet(events_dir))
-    tier = streaming_rollup(stream, keys=['user_id'], ts_col='ts',
-                            value_col='value', interval='1 hour',
-                            watermark_delay='30 minutes')
+    tier = rollup_from_points(watermarked(stream, 'ts', '30 minutes'), keys=['user_id'],
+                              ts_col='ts', value_col='value', interval='1 hour')
     q = (tier.selectExpr('user_id', 'bucket_start',
                          'CAST(avg_value AS DOUBLE) AS avg_value',
                          'CAST(sum_value AS DOUBLE) AS sum_value')
@@ -551,8 +561,7 @@ def test_stream_fed_tier_realtime_read_matches_batch_refresh(spark, sf_dir,
     import pandas as pd
     from changepoynt_spark.sources.continuous import ContinuousAggregate
     from changepoynt_spark.sources.tables import IcebergishTable
-    from changepoynt_spark.streaming.rollup_stream import \
-        streaming_rollup_partial
+    from changepoynt_spark.operators.rollup import rollup_partial
 
     ev = (spark.read.parquet(f'{sf_dir}/events.parquet')
           .select('user_id', 'ts', 'value'))
@@ -576,9 +585,8 @@ def test_stream_fed_tier_realtime_read_matches_batch_refresh(spark, sf_dir,
     def run_once():
         stream = (spark.readStream.schema(schema)
                   .option('maxFilesPerTrigger', 3).parquet(src_glob))
-        tier = streaming_rollup_partial(stream, keys=['user_id'],
-                                        interval='1 hour',
-                                        watermark_delay='30 minutes')
+        tier = rollup_partial(watermarked(stream, 'ts', '30 minutes'),
+                              keys=['user_id'], interval='1 hour')
         q = (tier.writeStream.outputMode('append')
              .foreachBatch(ca.stream_sink())
              .option('checkpointLocation', ckpt)
@@ -656,12 +664,10 @@ def test_stream_read_tolerates_raw_maintenance(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / 'ckpt')
 
     def run_once():
-        from changepoynt_spark.streaming.rollup_stream import \
-            streaming_rollup_partial
+        from changepoynt_spark.operators.rollup import rollup_partial
         stream = raw.stream_read(spark, schema=ev.schema)
-        tier = streaming_rollup_partial(stream, keys=['user_id'],
-                                        interval='1 hour',
-                                        watermark_delay='30 minutes')
+        tier = rollup_partial(watermarked(stream, 'ts', '30 minutes'),
+                              keys=['user_id'], interval='1 hour')
         q = (tier.writeStream.outputMode('append')
              .foreachBatch(ca.stream_sink())
              .option('checkpointLocation', ckpt)
@@ -766,8 +772,8 @@ def test_stream_sink_auto_compacts_and_batch_ids_survive(spark, sf_dir,
 def test_streaming_hierarchical_continuous_aggregates(spark, sf_dir,
                                                       tmp_path):
     """r8: raw -> 1m tier -> 1h tier as TWO chained streams — the 1h level
-    re-buckets the 1m tier's PARTIAL snapshots (streaming_rebucket_partials
-    over IcebergishTable.stream_read) into the same CA substrate via the
+    re-buckets the 1m tier's PARTIAL snapshots (rebucket_partials over the
+    watermarked IcebergishTable.stream_read) into the same CA substrate via the
     same stream_sink.  The finalized 1h view must equal the direct batch
     1h rollup over raw exactly, a mid-chain 1m tier-compact must be
     invisible to the 1h stream (manifest filter), and restart replays at
