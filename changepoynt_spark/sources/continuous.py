@@ -149,7 +149,8 @@ class ContinuousAggregate:
         if agg_form == 'points':
             self._form = _PointsForm(self)
         elif agg_form == 'hll':
-            assert distinct_col, "agg_form='hll' requires distinct_col"
+            if not distinct_col:
+                raise ValueError("agg_form='hll' requires distinct_col")
             self._form = _HllForm(self, distinct_col, lg_k)
         elif agg_form == 'dd':
             self._form = _DdForm(self)
@@ -166,12 +167,14 @@ class ContinuousAggregate:
         # transform(delta) == delta-of-transform, i.e. incremental refresh
         # == full recompute.  Cross-row transforms would need a halo and
         # are out of contract.
-        assert transform is None or source_kind == 'points', \
-            'transform applies to raw sources only (a partial source is already in tier form)'
+        if source_kind not in ('points', 'partial'):
+            raise ValueError(f'unknown source_kind {source_kind!r}')
+        if transform is not None and source_kind != 'points':
+            raise ValueError('transform applies to raw sources only '
+                             '(a partial source is already in tier form)')
         self.transform = transform
         self.partition_by = tuple(partition_by) if partition_by is not None \
             else (tuple(self.keys[:1]) if self.keys else ())
-        assert source_kind in ('points', 'partial'), source_kind
         # 'partial': the source is itself a CA tier in partial form
         # (hierarchical continuous aggregates, raw -> 1m -> 1h -> 1d): a
         # source delta folds in with rebucket_partials instead of
@@ -367,8 +370,7 @@ class ContinuousAggregate:
         :meth:`refresh`'s full mode, but read-side only: nothing is
         committed, the tier is untouched."""
         frm = self.refreshed_through()
-        to = self.source.current_snapshot_id()
-        assert to >= 0, f'source table {self.source.root} has no snapshots'
+        to = self.source._resolve()
         if frm < 0:
             # never refreshed: everything on the fly
             return self._form.finalize(
@@ -395,8 +397,7 @@ class ContinuousAggregate:
         Run this when live-snapshot count (not bytes) starts to dominate
         read planning — same rationale as :meth:`IcebergishTable.compact`,
         but merging rows instead of just repacking files."""
-        cur = self.tier.current_snapshot_id()
-        assert cur >= 0, f'tier {self.tier.root} has no snapshots to compact'
+        cur = self.tier._resolve()
         live = self.tier._live_snapshots(cur)
         merged = self.read_partial(spark)
         # summary properties: the compact snapshot re-records the max

@@ -545,6 +545,15 @@ class IcebergishTable:
         except FileNotFoundError:
             return -1
 
+    def _resolve(self, snapshot_id: int = None) -> int:
+        """``snapshot_id``, or the current snapshot when None; raises
+        ``ValueError`` (not an ``assert``, which ``python -O`` strips) when
+        the table has no snapshots."""
+        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
+        if sid < 0:
+            raise ValueError(f'table {self.root} has no snapshots')
+        return sid
+
     def snapshot(self, snapshot_id: int = None) -> Optional[dict]:
         sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
         if sid < 0:
@@ -602,8 +611,7 @@ class IcebergishTable:
         new ids come from every snapshot file on disk, reachable or not),
         so a post-rollback append FORKS the lineage cleanly and a later
         :meth:`vacuum` reclaims the orphans' files."""
-        cur = self.current_snapshot_id()
-        assert cur >= 0, f'table {self.root} has no snapshots'
+        cur = self._resolve()
         chain = [s['snapshot_id'] for s in self.lineage(cur)]
         if snapshot_id not in chain:
             raise ValueError(
@@ -869,25 +877,44 @@ class IcebergishTable:
         self._advance_hint(snapshot_id)
         return snapshot_id
 
+    def _read_snap(self, spark: SparkSession, sid: int, paths=None) -> DataFrame:
+        """The one parquet read of the table layer: snapshot ``sid``'s data
+        dir (or only its files ``paths``, with ``basePath`` at the dir so
+        hidden-partition columns survive), read with the schema its
+        manifest recorded at commit.  Iceberg readers plan from manifests:
+        no footer is inferred (that costs a Spark job per dir), and
+        partition columns keep their WRITTEN types instead of whatever
+        Spark would infer from the path ('007' stays a string)."""
+        from pyspark.sql import types as T
+        schema = self.snapshot(sid).get('schema')
+        if schema is None:
+            raise ValueError(f'snapshot {sid} of table {self.root} records no '
+                             f'schema in its manifest: corrupt table')
+        snap_dir = os.path.join(self.data_dir, f'snap-{sid}')
+        reader = spark.read.schema(T.StructType.fromJson(schema))
+        if paths is None:
+            return reader.parquet(snap_dir)
+        return reader.option('basePath', snap_dir).parquet(*paths)
+
     def read(self, spark: SparkSession, snapshot_id: int = None) -> DataFrame:
         """Read the table at a snapshot (default: current). Time travel =
         union of data files of the snapshot's full lineage, minus the rows
         matched by live equality-delete snapshots (merge-on-read; a delete
         applies only to snapshots that predate it).  The no-deletes fast
         path adds nothing to the plan."""
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        assert sid >= 0, f'table {self.root} has no snapshots'
+        sid = self._resolve(snapshot_id)
         data, dels = self._split_live(sid)
-        pairs = [(c, os.path.join(self.data_dir, f'snap-{c}')) for c in data]
+        live = [c for c in data
+                if os.path.isdir(os.path.join(self.data_dir, f'snap-{c}'))]
         # a metadata-only snapshot (expire surgery, empty watermark append)
         # never wrote a data dir — skip it; a snapshot that HAS manifest
         # entries but no dir was vacuumed: raise, don't silently drop rows
-        gone = [c for c, d in pairs if not os.path.isdir(d)
-                and self.snapshot(c)['manifest']['entries']]
-        assert not gone, (f'snapshot(s) {gone} live at {sid} have no data '
-                          f'dirs: time travel to a vacuumed snapshot')
-        pairs = [(c, d) for c, d in pairs if os.path.isdir(d)]
-        if not pairs:
+        gone = [c for c in data
+                if c not in live and self.snapshot(c)['manifest']['entries']]
+        if gone:
+            raise ValueError(f'snapshot(s) {gone} live at {sid} have no data '
+                             f'dirs: time travel to a vacuumed snapshot')
+        if not live:
             # fully-expired / metadata-only lineage (e.g. retention aged out
             # every raw row after it was rolled up, leaving only watermark
             # appends): an Iceberg table whose data files all expired still
@@ -896,12 +923,12 @@ class IcebergishTable:
             from pyspark.sql import types as T
             schema = T.StructType.fromJson(self.snapshot(sid)['schema'])
             return spark.createDataFrame([], schema)
-        # one read per snapshot dir (each with its own partition discovery),
+        # one read per snapshot dir (each with its own manifest schema),
         # unioned by name — the snap-N level is not a partition column
         from pyspark.sql import functions as F
         out = None
-        for c, d in pairs:
-            part = spark.read.parquet(d)
+        for c in live:
+            part = self._read_snap(spark, c)
             if dels:
                 part = part.withColumn('_seq', F.lit(c).cast('int'))
             out = part if out is None else out.unionByName(part, allowMissingColumns=True)
@@ -1008,10 +1035,9 @@ class IcebergishTable:
         for cols, sids in sorted(groups.items()):
             dels = None
             for c in sids:
-                d = os.path.join(self.data_dir, f'snap-{c}')
-                if not os.path.isdir(d):
+                if not os.path.isdir(os.path.join(self.data_dir, f'snap-{c}')):
                     continue
-                part = (spark.read.parquet(d).select(*cols)
+                part = (self._read_snap(spark, c).select(*cols)
                         .withColumn('_del_seq', F.lit(c).cast('int')))
                 dels = part if dels is None else dels.unionByName(part)
             if dels is None:
@@ -1061,8 +1087,7 @@ class IcebergishTable:
         candidates: they stay live for their surviving targets.  Returns
         the dropped/rewritten snapshot ids and their bytes."""
         from pyspark.sql import functions as F
-        cur = self.current_snapshot_id()
-        assert cur >= 0, f'table {self.root} has no snapshots'
+        cur = self._resolve()
         data_live, del_live = self._split_live(cur)
         drop_whole, straddle = [], []
         dropped_bytes = rewritten_bytes = 0
@@ -1090,7 +1115,7 @@ class IcebergishTable:
         if straddle:
             surv = None
             for c in straddle:
-                part = spark.read.parquet(os.path.join(self.data_dir, f'snap-{c}'))
+                part = self._read_snap(spark, c)
                 if del_live:
                     part = part.withColumn('_seq', F.lit(c).cast('int'))
                 surv = part if surv is None else surv.unionByName(
@@ -1166,8 +1191,7 @@ class IcebergishTable:
         snapshot that folded in any unreflected snapshot still raises —
         excluding it would lose that data, including it would double-count
         the reflected part."""
-        to_sid = self.current_snapshot_id() if to_snapshot_id is None else to_snapshot_id
-        assert to_sid >= 0, f'table {self.root} has no snapshots'
+        to_sid = self._resolve(to_snapshot_id)
         live_to = set(self._live_snapshots(to_sid))
         live_from = set(self._live_snapshots(from_snapshot_id)) \
             if from_snapshot_id >= 0 else set()
@@ -1197,12 +1221,12 @@ class IcebergishTable:
                 f'(snapshots {sorted(unexplained)} were invalidated in-range '
                 f'by non-maintenance or partially-unreflected commits); '
                 f'incremental refresh is invalid — recompute from scratch')
-        delta = [c for c in new if c not in excluded]
-        dirs = [os.path.join(self.data_dir, f'snap-{c}') for c in delta]
-        existing = [d for d in dirs if os.path.isdir(d)]
         out = None
-        for d in existing:
-            part = spark.read.parquet(d)
+        for c in new:
+            if c in excluded or not os.path.isdir(
+                    os.path.join(self.data_dir, f'snap-{c}')):
+                continue
+            part = self._read_snap(spark, c)
             out = part if out is None else out.unionByName(part, allowMissingColumns=True)
         return out
 
@@ -1285,8 +1309,7 @@ class IcebergishTable:
         plans splits for the matching files only, instead of one task per
         file of 100 TB.  File-level min/max subsumes partition pruning and
         also prunes WITHIN a partition (e.g. append-ordered ts)."""
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        assert sid >= 0, f'table {self.root} has no snapshots'
+        sid = self._resolve(snapshot_id)
         preds = list(predicates)
         kept, n_kept, n_total = {}, 0, 0
         data_live, _ = self._split_live(sid)
@@ -1328,14 +1351,13 @@ class IcebergishTable:
         expr = self._predicate_expr(predicates)
         if not plan['kept']:
             return self.read(spark, snapshot_id).filter(expr).limit(0)
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        _, dels = self._split_live(sid)
+        _, dels = self._split_live(self._resolve(snapshot_id))
         from pyspark.sql import functions as F
         out = None
         for snap_dir, paths in sorted(plan['kept'].items()):
-            part = spark.read.option('basePath', snap_dir).parquet(*sorted(paths))
+            seq = int(os.path.basename(snap_dir).split('-')[-1])
+            part = self._read_snap(spark, seq, sorted(paths))
             if dels:
-                seq = int(os.path.basename(snap_dir).split('-')[-1])
                 part = part.withColumn('_seq', F.lit(seq).cast('int'))
             out = part if out is None else out.unionByName(part, allowMissingColumns=True)
         if dels:
@@ -1362,7 +1384,8 @@ class IcebergishTable:
         untouched or rewritten.  A snapshot holding null timestamps is
         therefore never dropped whole; its old rows go by rewrite."""
         cut = _norm_stat(cutoff)
-        assert cut is not None, f'unsupported cutoff type {type(cutoff)}'
+        if cut is None:
+            raise ValueError(f'unsupported cutoff type {type(cutoff)}')
         return self._rewrite_where(spark, [(ts_col, '<', cutoff)], {
             'operation': 'expire', 'cutoff': cut, 'ts_col': ts_col})
 
@@ -1422,8 +1445,7 @@ class IcebergishTable:
         :meth:`vacuum` reclaims them.
         """
         import math
-        cur = self.current_snapshot_id()
-        assert cur >= 0, f'table {self.root} has no snapshots to compact'
+        cur = self._resolve()
         live = self._live_snapshots(cur)
         live_bytes = 0
         n_files = 0

@@ -415,9 +415,21 @@ def test_scored_tier_incremental_equals_full(spark, tmp_path):
 
 def test_transform_rejected_on_partial_source(tmp_path):
     raw = IcebergishTable(str(tmp_path / 'raw'))
-    with pytest.raises(AssertionError, match='raw sources only'):
+    with pytest.raises(ValueError, match='raw sources only'):
         ContinuousAggregate(raw, str(tmp_path / 'tier'), [],
                             source_kind='partial', transform=lambda df: df)
+
+
+@pytest.mark.parametrize('kw, match', [
+    ({'source_kind': 'bogus', 'transform': lambda df: df}, 'unknown source_kind'),
+    ({'source_kind': 'bogus'}, 'unknown source_kind'),
+    ({'agg_form': 'hll'}, 'requires distinct_col'),
+])
+def test_constructor_rejects_out_of_contract_args(tmp_path, kw, match):
+    """Input checks raise ValueError, so they hold under ``python -O``."""
+    raw = IcebergishTable(str(tmp_path / 'raw'))
+    with pytest.raises(ValueError, match=match):
+        ContinuousAggregate(raw, str(tmp_path / 'tier'), [], **kw)
 
 
 # -- sketch-form tiers ---------------------------------------------------------

@@ -513,10 +513,10 @@ def test_streaming_heavy_hitters_superset_and_exact_recount(spark, tmp_path):
     q.awaitTermination(180)
     emitted = spark.sql('SELECT * FROM hh_stream').toPandas()
     final = (emitted.sort_values('version')
-             .groupby('salt', as_index=False).apply(
+             .groupby('salt').apply(
                  lambda g: g[g['version'] == g['version'].max()],
-                 include_groups=True)
-             .reset_index(drop=True))
+                 include_groups=False)
+             .reset_index(level='salt').reset_index(drop=True))
     # bounded state per group
     assert final.groupby('salt').size().max() <= 4 * ck
 
