@@ -462,10 +462,10 @@ def rebucket_partials(df: DataFrame, keys, interval: str) -> DataFrame:
     raw -> 1m -> 1h runs as two always-on streams.  The upstream emits a
     bucket once, when its own watermark closes it, so the delay only needs
     to cover the upstream emission jitter, not data lateness.  A mid-chain
-    fine-tier ``compact()`` is invisible (``stream_read`` drops maintenance
+    fine-tier ``compact()`` is invisible (``stream_read`` skips maintenance
     snapshots by manifest op); a fine-tier batch-refresh takeover is a
     logical mutation and needs the same takeover downstream (see
-    ``content_stream_filter``).  Visibility at the coarse level is exact
+    ``IcebergishTable.stream_read``).  Visibility at the coarse level is exact
     over everything the fine level has MATERIALIZED: raw points still
     inside the fine stream's open tail are not yet visible to the coarse
     ``read_realtime_stream``, which covers the fine TIER's tail by design

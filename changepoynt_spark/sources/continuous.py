@@ -494,8 +494,10 @@ class ContinuousAggregate:
 
     def stream_sink_raw(self):
         """STATE-FREE streaming ingest: foreachBatch target for a stream of
-        RAW rows (``IcebergishTable.stream_read`` over the source, run
-        through the :attr:`transform` hook if set) — each micro-batch is
+        RAW rows (``IcebergishTable.stream_read`` over the source: each
+        micro-batch holds the rows of the content snapshots committed since
+        the last one, run through the :attr:`transform` hook if set) —
+        each micro-batch is
         rolled up BATCH-LOCALLY (:meth:`_partial`, the same code batch
         refresh runs on a snapshot delta) and appended as one partial
         snapshot.  No watermark, no streaming aggregation state, and

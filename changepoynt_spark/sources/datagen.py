@@ -138,72 +138,3 @@ def tokens_table_distributed(spark: SparkSession, n_docs: int, seed: int = 42,
 
     return base.mapInPandas(gen, schema=TOKENS_SCHEMA)
 
-
-# ---------------------------------------------------------------------------
-# documents corpus (scale probes for the dedup/text surface)
-# ---------------------------------------------------------------------------
-
-DOCUMENTS_SCHEMA = T.StructType([
-    T.StructField('doc_id', T.LongType(), False),
-    T.StructField('text', T.StringType(), False),
-    T.StructField('lang', T.StringType(), False),
-    T.StructField('source', T.StringType(), False),
-    T.StructField('n_chars', T.LongType(), False),
-])
-
-_DOC_LANGS = ('en', 'de', 'fr', 'es', 'it')
-
-
-def _doc_words(seed: int, i: int, vocab: int, mean_words: int) -> np.ndarray:
-    """Base word-id sequence for doc ``i`` — a pure function of (seed, i),
-    so ANY executor can regenerate any doc (the property that lets
-    near-dup planting reference other docs without a shuffle or a driver
-    materialization).  Zipf-ish frequencies give realistic shared-shingle
-    mass."""
-    rng = np.random.default_rng((seed << 20) ^ i)
-    n = max(8, int(rng.lognormal(np.log(mean_words), 0.5)))
-    # quadratically-skewed vocab (P(word < k) = sqrt(k/vocab)): a realistic
-    # head (top word ~2% of tokens) WITHOUT zipf's degenerate concentration
-    # (zipf 1.35 puts ~25% of all tokens on one word, which turns every
-    # trigram containing it into corpus-wide boilerplate and the shingle
-    # index into an all-pairs join)
-    return (vocab * rng.random(n) ** 2).astype(np.int64)
-
-
-def documents_table_distributed(spark: SparkSession, n_docs: int, seed: int = 42,
-                                dup_rate: float = 0.15, vocab: int = 2000,
-                                mean_words: int = 60, n_sources: int = 20,
-                                partitions: int = None) -> DataFrame:
-    """Distributed synthesis of a ``documents``-shaped corpus with PLANTED
-    near-duplicates: with probability ``dup_rate`` a doc is a perturbed copy
-    (~6% word substitutions, occasional tail truncation) of an earlier doc,
-    regenerated in place from the deterministic recipe — content is a pure
-    function of (seed, doc_id), independent of partitioning/task order.
-
-    This is the scale-probe generator: it produces the same schema as the
-    driver's documents.parquet at any n_docs without driver memory."""
-    base = spark.range(0, n_docs, numPartitions=partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf['id'].to_numpy():
-                i = int(i)
-                rng = np.random.default_rng((seed << 21) ^ i)
-                if i > 0 and rng.random() < dup_rate:
-                    src_doc = int(rng.integers(max(0, i - 1000), i))
-                    words = _doc_words(seed, src_doc, vocab, mean_words).copy()
-                    n_sub = max(1, int(0.06 * len(words)))
-                    pos = rng.integers(0, len(words), size=n_sub)
-                    words[pos] = (vocab * rng.random(n_sub) ** 2).astype(np.int64)
-                    if rng.random() < 0.3:                  # tail truncation
-                        words = words[:max(8, int(len(words) * 0.9))]
-                else:
-                    words = _doc_words(seed, i, vocab, mean_words)
-                text = ' '.join(f'w{int(w)}' for w in words)
-                rows.append((i, text, _DOC_LANGS[i % len(_DOC_LANGS)],
-                             f'src{i % n_sources}', len(text)))
-            yield pd.DataFrame(rows, columns=['doc_id', 'text', 'lang',
-                                              'source', 'n_chars'])
-
-    return base.mapInPandas(gen, schema=DOCUMENTS_SCHEMA)

@@ -25,9 +25,9 @@ import time
 from collections import OrderedDict
 from typing import Optional
 
-import pandas as pd  # module-level: PEP-563 udf type hints resolve here
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
+                                    InputPartition)
 
 # manifest column-stat bounds for strings are truncated to this many chars
 # (Iceberg's write.metadata.metrics truncate(16) default): manifests must
@@ -427,93 +427,22 @@ def _partition_eq(pv: str, val):
 
 
 # snapshot operations whose data files REWRITE or RETRACT already-committed
-# logical rows (maintenance / overwrite commits): a file stream over the
-# data dirs must NOT re-ingest them — 'compact'/'tier-compact'/'expire'
-# rewrite live rows a stream already saw (double count), 'delete' files are
-# key tuples, not table rows (schema mismatch), 'delete-cow' re-writes the
-# surviving rows of its targets, 'refresh-full' is a tier overwrite.
+# logical rows (maintenance / overwrite commits): a stream over the table
+# must NOT ingest them — 'compact'/'tier-compact'/'expire' rewrite live rows
+# a stream already saw (double count), 'delete' files are key tuples, not
+# table rows (schema mismatch), 'delete-cow' re-writes the surviving rows of
+# its targets, 'refresh-full' is a tier overwrite.
 _MAINTENANCE_OPS = frozenset({'compact', 'tier-compact', 'expire', 'delete',
                               'delete-cow', 'refresh-full'})
 
 # committed snapshot metadata file name: metadata/snapshot-<id>.json
 _SNAPSHOT_FILE = re.compile(r'snapshot-(\d+)\.json$')
 
+# data dir of a snapshot: data/snap-<id>
+_SNAP_DIR = re.compile(r'snap-(\d+)$')
+
 # parsed-manifest cache bound per table handle (LRU beyond it)
 _SNAP_CACHE_MAX = 4096
-
-# executor-side cache: a snapshot's manifest is IMMUTABLE once its json is
-# committed, so (meta_dir, sid) -> operation can be cached forever
-_SNAP_OP_CACHE: dict = {}
-
-
-def _snapshot_operation(meta_dir: str, sid: int, retries: int = 20,
-                        delay: float = 0.1):
-    """Operation property of snapshot ``sid``, read from its metadata json
-    (one tiny file per NEW snapshot per executor, then cached).  Data files
-    land on disk BEFORE the snapshot json commits, so a just-listed file may
-    briefly have no json — retry ~2 s, then return the '__uncommitted__'
-    sentinel WITHOUT caching (the json may still appear for the next
-    micro-batch's lookup)."""
-    key = (meta_dir, sid)
-    if key in _SNAP_OP_CACHE:
-        return _SNAP_OP_CACHE[key]
-    path = os.path.join(meta_dir, f'snapshot-{sid}.json')
-    for attempt in range(retries):
-        try:
-            with open(path) as f:
-                op = json.load(f)['manifest']['properties'].get('operation')
-            _SNAP_OP_CACHE[key] = op
-            return op
-        except (FileNotFoundError, json.JSONDecodeError):
-            if attempt < retries - 1:
-                time.sleep(delay)
-    return '__uncommitted__'
-
-
-def content_stream_filter(stream_df: DataFrame, table_root: str) -> DataFrame:
-    """Restrict a file-stream read of an Icebergish table's ``snap-*`` dirs
-    to rows from CONTENT snapshots — appends, upsert data parts, incremental
-    refreshes — dropping maintenance rewrites (:data:`_MAINTENANCE_OPS`).
-    This is what lets :meth:`IcebergishTable.compact` / :meth:`expire_before`
-    run on a streamed table without the stream double-counting the rewritten
-    rows (the batch side tolerates the same ops via ``read_delta``).
-
-    Vectorized: a pandas_udf maps ``input_file_name()`` -> snap id -> cached
-    manifest operation; one metadata read per new snapshot per executor,
-    never a per-row file access.  A not-yet-committed snapshot (data files
-    visible before its json) is INGESTED after a bounded retry — the rare
-    crashed-append leftover overcounts exactly like the raw glob did, while
-    dropping would silently lose a slow commit's rows forever.
-
-    Out of contract (documented, not detectable from file paths alone):
-    commits that logically MUTATE reflected rows — ``upsert`` updates and
-    ``delete_keys``/``delete_where`` retractions.  An append stream cannot
-    retract emitted aggregates; take the tier over with a batch
-    ``ContinuousAggregate.refresh`` (full recompute) after such commits."""
-    from pyspark.sql import functions as F
-
-    meta_dir = os.path.join(table_root, 'metadata')
-
-    @F.pandas_udf('boolean')
-    def _is_content(paths: pd.Series) -> pd.Series:
-        import re as _re
-
-        def check(dirname: str) -> bool:
-            # hidden partitioning nests hive dirs under snap-N: search the
-            # whole dir path for the snapshot segment, not just its tail
-            m = _re.search(r'snap-(\d+)(?=/|$)', dirname)
-            if not m:
-                return True          # not a snapshot dir: glob matched wider
-            op = _snapshot_operation(meta_dir, int(m.group(1)))
-            if op == '__uncommitted__':
-                return True
-            return op not in _MAINTENANCE_OPS
-
-        dirs = {d: check(d) for d in
-                {os.path.dirname(p) for p in paths.unique()}}
-        return paths.map(lambda p: dirs[os.path.dirname(p)])
-
-    return stream_df.filter(_is_content(F.input_file_name()))
 
 
 class IcebergishTable:
@@ -633,11 +562,15 @@ class IcebergishTable:
                                              os.listdir(self.meta_dir)) if m]
 
     def _next_sid(self) -> int:
-        """Next unused snapshot id: max of the version hint and every
-        snapshot json on disk.  A crashed multi-snapshot commit (upsert)
-        leaves unreachable snapshot files past the hint; ids must skip
-        them or the next append would collide with an orphan's data dir."""
-        return max([self.current_snapshot_id(), *self._snapshot_ids_on_disk()]) + 1
+        """Next unused snapshot id: max of the version hint, every snapshot
+        json and every ``snap-<n>`` data dir on disk.  A crashed
+        multi-snapshot commit (upsert) leaves unreachable snapshot files
+        past the hint, and a crashed append leaves a data dir with no json;
+        ids must skip both or the next append would collide with the
+        debris's data dir."""
+        dirs = os.listdir(self.data_dir) if os.path.isdir(self.data_dir) else []
+        return max([self.current_snapshot_id(), *self._snapshot_ids_on_disk(),
+                    *(int(m.group(1)) for m in map(_SNAP_DIR.match, dirs) if m)]) + 1
 
     def append(self, df: DataFrame, partition_by=('source',), properties: dict = None,
                invalidates=(), cluster_by=None, zorder_by=None, n_files: int = None,
@@ -921,7 +854,7 @@ class IcebergishTable:
             # reads as EMPTY with the table schema — a downstream refresh
             # must no-op, not crash
             from pyspark.sql import types as T
-            schema = T.StructType.fromJson(self.snapshot(sid)['schema'])
+            schema = T.StructType.fromJson(self._data_snapshot(sid)['schema'])
             return spark.createDataFrame([], schema)
         # one read per snapshot dir (each with its own manifest schema),
         # unioned by name — the snap-N level is not a partition column
@@ -937,26 +870,40 @@ class IcebergishTable:
         return out
 
     def stream_read(self, spark: SparkSession, schema=None) -> DataFrame:
-        """Structured-Streaming source over this table's data dirs that
-        ingests ONLY content snapshots (appends / upsert data parts /
-        incremental refreshes) — maintenance rewrites (compact, expire,
-        tier-compact, delete key-files, delete-cow, refresh-full) are
-        filtered out per micro-batch via the snapshot manifest, so batch
-        table maintenance can run concurrently without the stream
-        double-counting rewritten rows (see :func:`content_stream_filter`
-        for the exact contract, including the logical-mutation and
-        uncommitted-snapshot caveats).
+        """Structured-Streaming source over this table, planned from its
+        manifests (:class:`_SnapshotStream`): an offset is a snapshot id on
+        the current lineage, and a micro-batch reads the files of the
+        CONTENT snapshots committed since the last one (appends, upsert
+        data parts, incremental refreshes).  Maintenance rewrites (compact,
+        expire, tier-compact, delete key-files, delete-cow, refresh-full)
+        are skipped, so batch table maintenance can run concurrently without
+        the stream double-counting rewritten rows.  Staged, crashed and
+        orphaned snapshots are never seen (the offset is the version hint),
+        and a rollback under the stream raises instead of re-reading.
+
+        Out of contract: commits that logically MUTATE reflected rows —
+        ``upsert`` updates and ``delete_keys``/``delete_where``
+        retractions.  An append stream cannot retract emitted aggregates;
+        take the tier over with a batch ``ContinuousAggregate.refresh``
+        (full recompute) after such commits.
 
         ``vacuum`` remains subject to the standard streaming-read rule
         (Iceberg has the same one): reclaim only files the stream has
         already processed — schedule vacuum at least one trigger interval
-        behind the stream, or a listed-but-unread file can disappear
+        behind the stream, or a planned-but-unread file can disappear
         mid-batch."""
         if schema is None:
             schema = self.read(spark).schema
-        stream = spark.readStream.schema(schema).parquet(
-            os.path.join(self.data_dir, 'snap-*'))
-        return content_stream_filter(stream, self.root)
+        # Python sources cannot implement availableNow, and without the
+        # wrapper Spark runs such a trigger as ONE batch: no trailing
+        # no-data batch, so a watermarked tier would emit its closed
+        # buckets a run late.  The wrapper takes latestOffset once at start
+        # and drains to it — exact here, where the offset is the hint.
+        spark.conf.set('spark.sql.streaming.triggerAvailableNowWrapper.enabled',
+                       'true')
+        spark.dataSource.register(_SnapshotStream)
+        return (spark.readStream.format(_SnapshotStream.name())
+                .schema(schema).load(self.root))
 
     def _live_snapshots(self, snapshot_id: int) -> list:
         """Snapshot ids whose data files are visible at ``snapshot_id``
@@ -976,15 +923,13 @@ class IcebergishTable:
     def _snapshot_op(self, sid: int):
         return self.snapshot(sid)['manifest']['properties'].get('operation')
 
-    def _data_spec(self, snapshot_id: int) -> list:
-        """Partition spec of the newest live DATA snapshot (a 'delete'
-        snapshot's spec is the key-file layout, not the table's)."""
-        data, _ = self._split_live(snapshot_id)
-        for c in data:                               # newest first
-            spec = self.snapshot(c).get('partition_spec')
-            if spec is not None:
-                return spec
-        return []
+    def _data_snapshot(self, snapshot_id: int) -> dict:
+        """Newest live DATA snapshot at ``snapshot_id`` (the snapshot itself
+        when none is live): its ``schema`` and ``partition_spec`` are the
+        table's.  A 'delete' snapshot records its key-file layout instead,
+        so neither may be taken from the current snapshot."""
+        data, _ = self._split_live(snapshot_id)          # newest first
+        return self.snapshot(data[0] if data else snapshot_id)
 
     def _split_live(self, snapshot_id: int):
         """Live snapshots split into (data, equality-delete) ids.  A
@@ -1112,6 +1057,7 @@ class IcebergishTable:
             return rep
         props = {**properties, 'dropped_snapshots': len(drop_whole),
                  'rewritten_snapshots': len(straddle)}
+        layout = self.snapshot(data_live[0])   # the newest live data snapshot
         if straddle:
             surv = None
             for c in straddle:
@@ -1123,13 +1069,12 @@ class IcebergishTable:
             if del_live:
                 surv = self._apply_deletes(spark, surv, del_live).drop('_seq')
             surv = surv.filter(~F.coalesce(self._predicate_expr(preds), F.lit(False)))
-            self.append(surv, partition_by=self._data_spec(cur),
+            self.append(surv, partition_by=layout.get('partition_spec', []),
                         invalidates=drop_whole + straddle, properties=props)
         else:
             # every target dropped whole: data-less manifest surgery
-            prev = self.snapshot(cur)
-            self._commit(self._next_sid(), cur, drop_whole, props, prev['schema'],
-                         prev.get('partition_spec', []), [])
+            self._commit(self._next_sid(), cur, drop_whole, props, layout['schema'],
+                         layout.get('partition_spec', []), [])
         return rep
 
     @staticmethod
@@ -1454,7 +1399,7 @@ class IcebergishTable:
             live_bytes += sum(e['bytes'] for e in entries)
             n_files += len(entries)
         spec = partition_by if partition_by is not None \
-            else self._data_spec(cur)
+            else self._data_snapshot(cur).get('partition_spec', [])
         df = self.read(spark).repartition(
             max(1, math.ceil(live_bytes / target_file_bytes)))
         return self.append(
@@ -1464,3 +1409,82 @@ class IcebergishTable:
                         'replaced_files': n_files,
                         'replaced_bytes': live_bytes,
                         'target_file_bytes': int(target_file_bytes)})
+
+
+class _SnapshotStream(DataSource):
+    """Streaming source over an :class:`IcebergishTable` whose offsets are
+    snapshot ids (Delta's streaming source and Iceberg's incremental append
+    scan plan the same way: from the table log, never a directory
+    listing).  Options: ``path`` = the table root; the schema is the one
+    :meth:`IcebergishTable.stream_read` declares."""
+
+    @classmethod
+    def name(cls) -> str:
+        return 'icebergish_snapshots'
+
+    def streamReader(self, schema) -> '_SnapshotStreamReader':
+        return _SnapshotStreamReader(self.options['path'], schema)
+
+
+class _SnapshotStreamReader(DataSourceStreamReader):
+
+    def __init__(self, root: str, schema):
+        self.root = root
+        self.schema = schema
+
+    def initialOffset(self) -> dict:
+        return {'sid': -1}
+
+    def latestOffset(self) -> dict:
+        # the version hint: staged, crashed and orphaned snapshots are
+        # never behind it
+        return {'sid': IcebergishTable(self.root).current_snapshot_id()}
+
+    def partitions(self, start: dict, end: dict) -> list:
+        """One partition per non-empty data file of the content snapshots
+        in (start, end] on ``end``'s lineage.  Raises ``ValueError`` when
+        ``start`` is no longer an ancestor of ``end`` (a rollback under the
+        stream): the rows already emitted are no longer the table's."""
+        stop = start['sid']
+        parts = []
+        for snap in IcebergishTable(self.root).lineage(end['sid']):
+            if snap['snapshot_id'] == stop:
+                break
+            if snap['manifest']['properties'].get('operation') in _MAINTENANCE_OPS:
+                continue
+            parts += [InputPartition((os.path.join(self.root, e['path']),
+                                      e['partition']))
+                      for e in snap['manifest']['entries'] if e['rows'] > 0]
+        else:
+            if stop >= 0:
+                raise ValueError(
+                    f'stream offset snapshot {stop} is not an ancestor of '
+                    f'snapshot {end["sid"]} of table {self.root}: the table '
+                    f'was rolled back under the stream; restart it from a '
+                    f'new checkpoint')
+        return parts
+
+    def read(self, partition: InputPartition):
+        """The file's batches with its hidden-partition columns added from
+        the manifest entry, each cast to the declared schema (Spark does
+        not check batch types against it)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        path, part = partition.value
+        target = to_arrow_schema(self.schema)
+        for batch in pq.ParquetFile(path).iter_batches():
+            cols = []
+            for field in target:
+                if field.name in batch.schema.names:
+                    col = batch.column(field.name)
+                elif field.name in part:
+                    v = part[field.name]
+                    col = pa.array([None if v == '__HIVE_DEFAULT_PARTITION__'
+                                    else v] * batch.num_rows, pa.string())
+                    if pa.types.is_timestamp(field.type):  # path values: UTC
+                        col = col.cast(pa.timestamp(field.type.unit))
+                else:
+                    col = pa.nulls(batch.num_rows)
+                cols.append(col.cast(field.type))
+            yield pa.RecordBatch.from_arrays(cols, schema=target)

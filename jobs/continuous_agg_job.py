@@ -58,6 +58,13 @@ def main(argv=None, spark=None):
                         "history and stays incremental (expiry is tolerated "
                         "maintenance, never a refresh trigger)")
     args = p.parse_args(argv)
+    retention = None
+    if args.raw_retention:
+        import re
+        retention = re.fullmatch(r'(\d+)\s*(day|hour|minute|second)s?',
+                                 args.raw_retention.strip())
+        if retention is None:
+            p.error(f'bad --raw-retention {args.raw_retention!r}')
 
     from changepoynt_spark.session import get_spark
     from changepoynt_spark.sources.continuous import ContinuousAggregate
@@ -83,15 +90,12 @@ def main(argv=None, spark=None):
             if cur >= 0 and len(ca.tier._live_snapshots(cur)) > args.compact_above:
                 compacted = ca.compact(spark)
         expired = None
-        if args.raw_retention:
+        if retention is not None:
             import datetime
-            import re
-            m = re.fullmatch(r'(\d+)\s*(day|hour|minute|second)s?',
-                             args.raw_retention.strip())
-            assert m, f'bad --raw-retention {args.raw_retention!r}'
             wm = ca.rollup_watermark()
             if wm is not None:
-                cutoff = wm - datetime.timedelta(**{m.group(2) + 's': int(m.group(1))})
+                cutoff = wm - datetime.timedelta(
+                    **{retention.group(2) + 's': int(retention.group(1))})
                 # safe by construction: refresh() above reflected everything
                 # in raw, so every row older than the cutoff is in the tier
                 expired = raw.expire_before(spark, cutoff, ts_col=args.ts_col)

@@ -37,6 +37,8 @@ def main(argv=None, spark=None):
     p.add_argument('--max-buckets', type=int, default=None,
                    help='process at most this many pending buckets (for staged runs)')
     args = p.parse_args(argv)
+    if not (args.synth_docs or args.input):
+        p.error('need --input or --synth-docs')
 
     from changepoynt_spark.plans.checkpoint import RollupCheckpointJob
     from changepoynt_spark.session import get_spark
@@ -51,7 +53,6 @@ def main(argv=None, spark=None):
             tokens = tokens_table_distributed(spark, n_docs=args.synth_docs,
                                               max_len=args.synth_max_len)
         else:
-            assert args.input, 'need --input or --synth-docs'
             import os as _os
             if _os.path.exists(f'{args.input}/metadata/version-hint.txt'):
                 # input is itself an Iceberg-style table of tokenized sequences

@@ -4,24 +4,27 @@ the streaming counterpart of jobs/continuous_agg_job.py, keeping a
 ContinuousAggregate TIER table fresh from a Structured Streaming source
 instead of batch snapshot polling.
 
-A MANIFEST-AWARE file stream over the raw Icebergish table
-(IcebergishTable.stream_read) feeds the PARTIAL-form 1m/1h rollup
-(rollup_partial over the watermarked stream: decimal-exact sums +
-first/last ts anchors, the same operator batch refreshes run); each
-micro-batch's CLOSED buckets land in the tier via foreachBatch ->
-IcebergishTable.append with the stream batch id and rollup watermark in
-the snapshot properties.
+A manifest-planned stream over the raw Icebergish table
+(IcebergishTable.stream_read: offsets are snapshot ids, each micro-batch
+reads the files the manifests list for the snapshots committed since the
+last one) feeds the PARTIAL-form 1m/1h rollup (rollup_partial over the
+watermarked stream: decimal-exact sums + first/last ts anchors, the same
+operator batch refreshes run); each micro-batch's CLOSED buckets land in
+the tier via foreachBatch -> IcebergishTable.append with the stream batch
+id and rollup watermark in the snapshot properties.
 
-The stream ingests only CONTENT snapshots: raw-table maintenance (compact /
-expire rewrites, MoR delete key-files) is filtered out per micro-batch via
-the snapshot manifests, so it can run concurrently without double-counting
+The stream ingests only CONTENT snapshots on the table's lineage: raw-table
+maintenance (compact / expire rewrites, MoR delete key-files) is skipped by
+manifest operation, so it can run concurrently without double-counting
 rewritten rows into the tier — the same ops the batch refresh tolerates via
-read_delta.  Still out of contract: commits that logically MUTATE reflected
-raw rows (upsert updates, delete retractions) — an append stream cannot
-retract emitted buckets; run a batch ContinuousAggregate.refresh (full
-recompute takeover) after such commits.  vacuum must lag the stream by one
-trigger interval (standard streaming-read retention rule).  The stream and batch refresh share ONE tier
-substrate: every tier reader (read / read_partial / read_realtime_stream,
+read_delta.  Staged and crashed commits are never ingested, and a rollback
+of the raw table under the stream fails the stream.  Still out of
+contract: commits that logically MUTATE reflected raw rows (upsert
+updates, delete retractions) — an append stream cannot retract emitted
+buckets; run a batch ContinuousAggregate.refresh (full recompute takeover)
+after such commits.  vacuum must lag the stream by one trigger interval
+(standard streaming-read retention rule).  The stream and batch refresh
+share ONE tier substrate: every tier reader (read / read_partial / read_realtime_stream,
 compaction, hierarchical rebucketing) works unchanged, and a later BATCH
 refresh takes the tier over with a full recompute (the stream snapshots
 carry no raw-snapshot watermark, so refresh() falls back — asserted in
@@ -91,6 +94,8 @@ def main(argv=None, spark=None):
     ap.add_argument('--available-now', action='store_true',
                     help='drain the current input and stop')
     args = ap.parse_args(argv)
+    if args.transform is not None and args.source_kind == 'partial':
+        ap.error('--transform applies to raw sources, not --source-kind partial')
     keys = [k for k in args.keys.split(',') if k]
 
     own_session = spark is None
@@ -108,7 +113,6 @@ def main(argv=None, spark=None):
         transform = None
         if args.transform == 'tokens-points':
             from changepoynt_spark.operators.scoring import tokens_to_points
-            assert not partial_src, '--transform applies to raw sources'
 
             def transform(df, _keys=tuple(keys), _epoch=args.epoch):
                 return tokens_to_points(df, keys=_keys, epoch=_epoch,

@@ -45,7 +45,8 @@ def main(argv=None, spark=None):
     ap.add_argument('--batch', type=int, default=64)
     ap.add_argument('--window', type=int, default=4)
     args = ap.parse_args(argv)
-    assert args.merges or args.learn, 'need --merges or --learn'
+    if not (args.merges or args.learn):
+        ap.error('need --merges or --learn')
 
     from pyspark.sql import functions as F
 

@@ -618,3 +618,36 @@ def test_tokenize_job_chains_into_rollup_job(spark, tmp_path, capsys):
                             '--buckets', '4'], spark=spark) == 0
     rep2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert len(rep2['processed']) == 4 and rep2['remaining'] == []
+
+
+@pytest.mark.parametrize('job, argv', [
+    ('continuous_agg_job', ['--raw', '{raw}', '--tier', '{out}',
+                            '--keys', 'user_id', '--raw-retention', 'a week']),
+    ('rollup_job', ['--output', '{out}']),
+    ('tokenize_job', ['--docs', '{raw}', '--output', '{out}']),
+    ('tier_stream_job', ['--raw', '{raw}', '--tier', '{out}',
+                         '--checkpoint', '{ckpt}', '--source-kind', 'partial',
+                         '--transform', 'tokens-points', '--available-now']),
+])
+def test_jobs_reject_bad_cli_input_before_committing(spark, tmp_path, job,
+                                                     argv):
+    """Argument checks run at parse time (``ap.error``, exit 2), not as
+    ``assert``s that ``python -O`` strips, and before the job commits
+    anything: a bad ``--raw-retention`` used to surface only after the
+    refresh had committed the tier."""
+    import datetime as dt
+    import importlib
+
+    from changepoynt_spark.sources.tables import IcebergishTable
+
+    raw, out, ckpt = (str(tmp_path / d) for d in ('raw', 'out', 'ckpt'))
+    IcebergishTable(raw).append(
+        spark.createDataFrame([(1, dt.datetime(2026, 2, 1), 1.0)],
+                              'user_id long, ts timestamp, value double'),
+        partition_by=())
+    with pytest.raises(SystemExit) as exc:
+        importlib.import_module(f'jobs.{job}').main(
+            [a.format(raw=raw, out=out, ckpt=ckpt) for a in argv], spark=spark)
+    assert exc.value.code == 2
+    assert not os.path.exists(out) and not os.path.exists(ckpt)
+    assert IcebergishTable(raw).current_snapshot_id() == 0

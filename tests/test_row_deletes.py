@@ -8,6 +8,7 @@ may match are rewritten.  Incremental readers raise on an in-range delete so
 a continuous aggregate falls back to full recompute.
 """
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -266,6 +267,19 @@ def test_orphaned_snapshot_from_crashed_commit_is_skipped(spark, events, tmp_pat
     assert t.read(spark).count() == 15
 
 
+def test_crashed_append_dir_does_not_block_later_appends(spark, events,
+                                                        tmp_path):
+    """A crashed append leaves ``data/snap-<n>`` with no snapshot json.  New
+    ids skip the dir, so the next append commits instead of colliding with
+    it, and the debris never becomes table data."""
+    t = IcebergishTable(str(tmp_path / 'debris'))
+    t.append(events.limit(10), partition_by=())
+    events.limit(4).write.parquet(os.path.join(t.data_dir, 'snap-1'))
+    snap = t.append(events.limit(5), partition_by=())
+    assert snap['snapshot_id'] == 2 and snap['parent'] == 0
+    assert t.read(spark).count() == 15
+
+
 def test_write_audit_publish(spark, events, tmp_path):
     t = IcebergishTable(str(tmp_path / 'wap'))
     t.append(events.filter(F.dayofmonth('ts') <= 15), partition_by=())
@@ -405,3 +419,19 @@ def test_metadata_only_commit_sets_barrier_and_hint_like_a_data_commit(
         assert 'lineage_barrier' not in t.snapshot()['manifest']['properties']
     assert partial.snapshot()['manifest']['entries'] == []
     assert rewrite.snapshot()['manifest']['entries'] != []
+
+
+def test_data_less_delete_keeps_the_data_schema(spark, tmp_path):
+    """A data-less copy-on-write commit records the schema of the newest
+    live DATA snapshot, not the current snapshot's: after a merge-on-read
+    delete the current snapshot is a key-file layout (``doc_id`` only)."""
+    t = IcebergishTable(str(tmp_path / 'keys'))
+    df = spark.createDataFrame([('a', 1, 1.0), ('b', 2, 2.0)],
+                               'source string, doc_id bigint, value double')
+    t.append(df, partition_by=())
+    t.delete_keys(df.limit(1).select('doc_id'), ['doc_id'])
+    rep = t.delete_where(spark, [('doc_id', '>=', 0)])
+    assert rep == {'dropped_snapshots': [0], 'rewritten_snapshots': []}
+    got = t.read(spark)
+    assert got.count() == 0
+    assert got.schema == df.schema

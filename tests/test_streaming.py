@@ -911,34 +911,99 @@ def test_state_free_tokens_ingest_stream(spark, tmp_path):
     seqs.unpersist()
 
 
-def test_snapshot_operation_cache_and_uncommitted(tmp_path):
-    """Unit: the stream filter's snapshot-op lookup caches committed
-    manifests forever (immutable), returns the '__uncommitted__' sentinel
-    (UNCACHED) while the json is missing, and picks the op up once the
-    commit lands — the data-files-before-json window must not poison the
-    cache."""
-    import json as _json
-    import os
+def _drain(spark, table, tmp_path):
+    """One availableNow run of ``table.stream_read`` into a parquet sink
+    (restartable from its checkpoint); returns everything the sink holds."""
+    out = str(tmp_path / 'sink')
+    q = (table.stream_read(spark).writeStream.format('parquet')
+         .option('path', out)
+         .option('checkpointLocation', str(tmp_path / 'sink_ckpt'))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    return spark.read.parquet(out)
 
-    from changepoynt_spark.sources.tables import (
-        _SNAP_OP_CACHE, _snapshot_operation)
 
-    meta = str(tmp_path / 'metadata')
-    os.makedirs(meta)
-    # missing json: sentinel, bounded retry, nothing cached
-    assert _snapshot_operation(meta, 7, retries=2,
-                               delay=0.01) == '__uncommitted__'
-    assert (meta, 7) not in _SNAP_OP_CACHE
-    # commit lands: op resolves and caches
-    with open(os.path.join(meta, 'snapshot-7.json'), 'w') as f:
-        _json.dump({'manifest': {'properties': {'operation': 'compact'}}}, f)
-    assert _snapshot_operation(meta, 7) == 'compact'
-    assert _SNAP_OP_CACHE[(meta, 7)] == 'compact'
-    # cache survives the file disappearing (vacuumed metadata elsewhere
-    # never happens, but the cache must not re-read per row anyway)
-    os.remove(os.path.join(meta, 'snapshot-7.json'))
-    assert _snapshot_operation(meta, 7) == 'compact'
-    # a content snapshot (no operation property) resolves to None
-    with open(os.path.join(meta, 'snapshot-8.json'), 'w') as f:
-        _json.dump({'manifest': {'properties': {}}}, f)
-    assert _snapshot_operation(meta, 8) is None
+def _same_rows(got, exp):
+    got = got.select(*exp.columns)
+    return got.exceptAll(exp).count() == 0 == exp.exceptAll(got).count()
+
+
+def test_stream_read_partitioned_table_keeps_partition_types(spark, tmp_path):
+    """A hidden-partitioned table streams (the file stream failed its first
+    micro-batch on one), and partition columns keep their written type:
+    '007' stays the string '007'."""
+    from changepoynt_spark.sources.tables import IcebergishTable
+
+    t = IcebergishTable(str(tmp_path / 'raw'))
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(i, '007' if i % 3 else '10', float(i)) for i in range(lo, hi)],
+            'id bigint, source string, value double')
+
+    t.append(rows(0, 60))                         # partition_by=('source',)
+    got = _drain(spark, t, tmp_path)
+    assert dict(got.dtypes)['source'] == 'string'
+    assert _same_rows(got, t.read(spark))
+    t.append(rows(60, 100))
+    got = _drain(spark, t, tmp_path)
+    assert got.count() == 100
+    assert sorted(r[0] for r in got.select('source').distinct().collect()) \
+        == ['007', '10']
+    assert _same_rows(got, t.read(spark))
+
+
+def test_stream_read_ingests_a_staged_snapshot_only_after_publish(spark,
+                                                                  tmp_path):
+    from changepoynt_spark.sources.tables import IcebergishTable
+
+    t = IcebergishTable(str(tmp_path / 'raw'))
+    t.append(spark.range(100).withColumn('value', F.col('id') * 0.5),
+             partition_by=())
+    staged = t.stage(spark.range(100, 150).withColumn('value', F.lit(1.0)),
+                     partition_by=())
+    assert _drain(spark, t, tmp_path).count() == 100
+    t.publish(staged['snapshot_id'])
+    got = _drain(spark, t, tmp_path)
+    assert got.count() == 150
+    assert _same_rows(got, t.read(spark))
+
+
+def test_stream_read_never_ingests_a_crashed_append(spark, tmp_path):
+    """Data files with no snapshot json (an append that crashed before its
+    commit) are not the table's: the stream never sees them."""
+    from changepoynt_spark.sources.tables import IcebergishTable
+
+    t = IcebergishTable(str(tmp_path / 'raw'))
+    t.append(spark.range(100), partition_by=())
+    spark.range(1000, 1030).write.parquet(os.path.join(t.data_dir, 'snap-1'))
+    assert _drain(spark, t, tmp_path).count() == 100
+    t.append(spark.range(100, 120), partition_by=())
+    got = _drain(spark, t, tmp_path)
+    assert got.count() == 120
+    assert _same_rows(got, t.read(spark))
+
+
+def test_stream_read_raises_on_a_rollback_under_the_stream(spark, tmp_path):
+    """Rows a running stream already emitted stop being the table's after
+    ``rollback``: the next micro-batch fails loudly instead of streaming on
+    over a history the table no longer has."""
+    from pyspark.errors import StreamingQueryException
+
+    from changepoynt_spark.sources.tables import IcebergishTable
+
+    t = IcebergishTable(str(tmp_path / 'raw'))
+    t.append(spark.range(100), partition_by=())
+    t.append(spark.range(100, 200), partition_by=())
+    out = str(tmp_path / 'sink')
+    q = (t.stream_read(spark).writeStream.format('parquet')
+         .option('path', out).option('checkpointLocation', str(tmp_path / 'ck'))
+         .trigger(processingTime='100 milliseconds').start())
+    try:
+        q.processAllAvailable()
+        assert spark.read.parquet(out).count() == 200
+        t.rollback(0)
+        with pytest.raises(StreamingQueryException, match='not an ancestor'):
+            q.awaitTermination(60)
+    finally:
+        q.stop()
