@@ -360,7 +360,8 @@ def learn_bpe_merges_windowed(df: DataFrame, n_rounds: int = 18,
     acceptance this round (blocked = accepted lhs/rhs/merged strings),
     scanning up to ``candidates`` pairs.  Driver traffic is ≤
     ``candidates`` rows per round."""
-    assert mode in ('rank', 'independent'), mode
+    if mode not in ('rank', 'independent'):
+        raise ValueError(f"mode must be 'rank' or 'independent', got {mode!r}")
     _require_sql_escapes(df)
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:

@@ -142,7 +142,9 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 32, bands: int = 8, n: in
 
     ``materialize=False`` skips the eager localCheckpoints (used by plan-
     inspection tests; production callers keep the default)."""
-    assert num_hashes % bands == 0
+    if num_hashes % bands:
+        raise ValueError(f'num_hashes ({num_hashes}) must be a multiple of '
+                         f'bands ({bands})')
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, num_hashes, n, id_col)
     band_hash = F.explode(F.array(*[
@@ -284,7 +286,8 @@ def simhash(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text',
     the long BIT PATTERN) is representable — the 64-bit form is what a
     100 TB corpus needs for simhash banding (9-10 bit segments instead of
     4-5)."""
-    assert 1 <= bits <= 64
+    if not 1 <= bits <= 64:
+        raise ValueError(f'bits must be in [1, 64], got {bits}')
     words = df.select(F.col(id_col).alias('doc_id'),
                       F.explode(F.split(text_col, ' ')).alias('w'))
     # first 8 hex chars of md5 -> 32-bit unsigned int (low half); chars 9-16

@@ -117,7 +117,8 @@ def score_rollup(df: DataFrame, algorithm: str = 'sst', params: dict = None,
     instrumentation itself is O(batches) not O(points)).  Used by bench.py
     for per-stage wall attribution of the headline pipeline.
     """
-    assert output in ('rows', 'blocks')
+    if output not in ('rows', 'blocks'):
+        raise ValueError(f"output must be 'rows' or 'blocks', got {output!r}")
     params = dict(params or {})
     build_algorithm(algorithm, params)
     if filter_short:

@@ -29,7 +29,8 @@ def moving_window_score(df: DataFrame, key_col: str = 'user_id', ts_col: str = '
                         value_col: str = 'value', window_length: int = 8,
                         method: str = 'mean') -> DataFrame:
     """(key, rn, score) — per-series moving-window change score."""
-    assert method in ('mean', 'var', 'meanvar')
+    if method not in ('mean', 'var', 'meanvar'):
+        raise ValueError(f"method must be 'mean', 'var' or 'meanvar', got {method!r}")
     w = window_length
     order = Window.partitionBy(key_col).orderBy(ts_col)
     past = order.rowsBetween(-w, -1)
@@ -379,7 +380,8 @@ def seasonal_decompose(df: DataFrame, keys, period: int,
     """
     keys = list(keys)
     p = int(period)
-    assert p >= 2, 'period must be >= 2'
+    if p < 2:
+        raise ValueError(f'period must be >= 2, got {period}')
     order = Window.partitionBy(*keys).orderBy(ts_col)
     dec = F.col(value_col).cast('decimal(18,6)')
     half = p // 2

@@ -26,9 +26,6 @@ merged snapshot — still in partial form, so later refreshes keep merging.
 """
 from __future__ import annotations
 
-import os
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +36,12 @@ from changepoynt_spark.operators.rollup import (
 from changepoynt_spark.sources.tables import IcebergishTable
 
 WATERMARK_PROP = 'refreshed_through_snapshot'
+
+# source maintenance that only touched reflected data never re-triggers the
+# aggregate: an expiry keeps the TIER's history even after the raw rows age
+# out (downsample-then-drop), and a compaction of already-rolled-up
+# snapshots (raw 'compact', an upstream tier's 'tier-compact') is invisible
+_TOLERATED_OPS = ('expire', 'compact', 'tier-compact')
 
 
 class _PointsForm:
@@ -229,94 +232,87 @@ class ContinuousAggregate:
         """Bring the tier up to the raw table's current snapshot.
 
         Incremental when the raw history since the last refresh is
-        append-only; full recompute (overwrite) otherwise; no-op when
-        nothing changed.  Returns ``{'mode', 'from', 'to', 'rows'}``.
+        append-only; full recompute (overwrite) otherwise; 'empty' (a
+        data-less commit that only advances the watermark) when the new
+        raw snapshots added no data files; no-op when nothing changed.
+        Returns ``{'mode', 'from', 'to', 'rows'}``.
         """
         frm = self.refreshed_through()
         to = self.source.current_snapshot_id()
         if to < 0 or to == frm:
             return {'mode': 'noop', 'from': frm, 'to': to, 'rows': 0}
-        if frm < 0 and self.tier.current_snapshot_id() >= 0:
+        cur = self.tier.current_snapshot_id()
+        if frm < 0 and cur >= 0:
             # the tier has snapshots but NO raw-snapshot watermark: it was
             # fed by a stream (stream_sink), whose coverage is an event-time
             # frontier, not a snapshot id.  Treating the whole raw history
             # as a "delta" would double-count the stream's rows — take over
             # with a full recompute that atomically invalidates the
             # stream-fed snapshots instead.
-            return self._refresh_full(spark, frm, to)
+            mode, delta = 'full', None
+        else:
+            mode, delta = self._plan_delta(spark, frm, to)
+        props = {'operation': f'refresh-{mode}', WATERMARK_PROP: int(to),
+                 'refresh_from_snapshot': int(frm)}
+        out = {'mode': mode, 'from': frm, 'to': to, 'rows': 0}
+        if mode == 'empty':
+            # new source snapshots but no new data files (maintenance of
+            # reflected data): the watermark lives in snapshot properties,
+            # so a data-less commit advances it — no Spark job, no file
+            schema = (self.tier._data_snapshot(cur)['schema'] if cur >= 0 else
+                      self._partial(self.source.read(spark, to)).schema.jsonValue())
+            self.tier._commit(self.tier._next_sid(), cur, (), props, schema,
+                              self.partition_by, [])
+            return out
+        invalidates = ()
+        if mode == 'full':
+            delta = self.source.read(spark, to)
+            invalidates = self.tier._live_snapshots(cur)   # [] at cur=-1
+        snap, rep = self._append(self._partial(delta), props, invalidates)
+        out['rows'] = snap['manifest']['row_count']
+        if rep is not None:
+            out['compacted'] = rep['replaced']
+        return out
+
+    def _plan_delta(self, spark: SparkSession, frm: int, to: int):
+        """The one delta planner of :meth:`refresh` and
+        :meth:`read_realtime`: ``('incremental', delta)`` with the source
+        rows committed in ``(frm, to]``, ``('empty', None)`` when those
+        commits added no data files, ``('full', None)`` when the history is
+        not append-only (see :meth:`IcebergishTable.read_delta`)."""
         try:
-            # raw-table maintenance that only touched reflected data never
-            # re-triggers the aggregate: an expiry keeps the TIER's history
-            # even after the raw rows age out (downsample-then-drop), and a
-            # compaction of already-rolled-up snapshots is invisible here
-            delta = self.source.read_delta(
-                spark, frm, to,
-                tolerate_ops=('expire', 'compact', 'tier-compact'))
-            mode = 'incremental'
+            delta = self.source.read_delta(spark, frm, to,
+                                           tolerate_ops=_TOLERATED_OPS)
         except ValueError:
-            delta = None
-            mode = 'full'
-        if mode == 'incremental':
-            if delta is None:
-                # new snapshot but no new data files (e.g. metadata-only)
-                return self._commit_watermark(spark, frm, to)
-            part = self._partial(delta)
-            return self._commit_partial(spark, part, mode, frm, to)
-        return self._refresh_full(spark, frm, to)
+            return 'full', None
+        return ('empty' if delta is None else 'incremental'), delta
 
-    def _refresh_full(self, spark: SparkSession, frm: int, to: int) -> dict:
-        return self._commit_partial(
-            spark, self._partial(self.source.read(spark, to)), 'full',
-            frm, to)
-
-    def _commit_partial(self, spark: SparkSession, part: DataFrame,
-                        mode: str, frm: int, to: int) -> dict:
-        # watermark/points metadata rides the WRITE job as Observation
-        # metrics (r9): one action per refresh — the old persist + separate
-        # pre-commit aggregate was a second pass over the partial (the
-        # listener fires even for an empty zero-partition write, probed in
-        # tests)
+    def _append(self, part: DataFrame, properties: dict, invalidates=()):
+        """The one tier append of refresh and the stream sinks: ``part``
+        is written with the tier's ``partition_by``, its max
+        ``bucket_start`` and points sum are recorded as
+        ``rollup_watermark`` / ``points_rolled`` from Observation metrics
+        of the WRITE job (no separate aggregate pass; the listener fires
+        even for an empty zero-partition write, probed in tests), and the
+        ``auto_compact_snapshots`` policy runs once after the commit.
+        Returns ``(snapshot, compact report or None)``."""
         from pyspark.sql import Observation
         obs = Observation()
         part = part.observe(obs, F.max('bucket_start').alias('wm'),
                             F.sum(self._form.points_col).alias('pts'))
-        live = (self.tier._live_snapshots(self.tier.current_snapshot_id())
-                if mode == 'full' and self.tier.current_snapshot_id() >= 0
-                else ())
 
         def _stats_props():
             row = obs.get
             return {'rollup_watermark': str(row['wm']),
                     'points_rolled': int(row['pts'] or 0)}
 
-        snap = self.tier.append(
-            part, partition_by=self.partition_by, invalidates=live,
-            properties={
-                'operation': f'refresh-{mode}',
-                WATERMARK_PROP: int(to),
-                'refresh_from_snapshot': int(frm),
-            },
-            properties_fn=_stats_props)
-        out = {'mode': mode, 'from': frm, 'to': to,
-               'rows': snap['manifest']['row_count']}
+        snap = self.tier.append(part, partition_by=self.partition_by,
+                                invalidates=invalidates, properties=properties,
+                                properties_fn=_stats_props)
         k = self.auto_compact_snapshots
-        if k:
-            live = self.tier._live_snapshots(self.tier.current_snapshot_id())
-            if len(live) > k:
-                rep = self.compact(spark)
-                out['compacted'] = rep['replaced']
-        return out
-
-    def _commit_watermark(self, spark: SparkSession, frm: int, to: int) -> dict:
-        """Advance the watermark with an empty partial append (keeps the
-        'watermark lives in snapshot properties' invariant without a
-        side-channel file)."""
-        empty = self._partial(self.source.read(spark, to).limit(0))
-        self.tier.append(empty, partition_by=(),
-                         properties={'operation': 'refresh-empty',
-                                     WATERMARK_PROP: int(to),
-                                     'refresh_from_snapshot': int(frm)})
-        return {'mode': 'empty', 'from': frm, 'to': to, 'rows': 0}
+        if k and len(self.tier._live_snapshots(self.tier.current_snapshot_id())) > k:
+            return snap, self.compact(part.sparkSession)
+        return snap, None
 
     def rollup_watermark(self):
         """Max bucket_start ever rolled into the tier (``None`` if the tier
@@ -377,11 +373,8 @@ class ContinuousAggregate:
                 self._form.merge(self._partial(self.source.read(spark, to))))
         if to == frm:
             return self.read(spark)
-        try:
-            delta = self.source.read_delta(
-                spark, frm, to,
-                tolerate_ops=('expire', 'compact', 'tier-compact'))
-        except ValueError:
+        mode, delta = self._plan_delta(spark, frm, to)
+        if mode == 'full':
             return self._form.finalize(
                 self._form.merge(self._partial(self.source.read(spark, to))))
         part = self.tier.read(spark)
@@ -529,29 +522,14 @@ class ContinuousAggregate:
             committed = self._max_stream_batch_id()
             if committed is not None and int(batch_id) <= committed:
                 return  # crash-replay of an already-committed micro-batch
-            # one job doubles as the emptiness check: COUNT of the points
-            # column is 0 iff the micro-batch closed no buckets (the
-            # separate isEmpty() this replaces was a second pass)
-            stats = part.agg(
-                F.max('bucket_start').alias('wm'),
-                F.sum(self._form.points_col).alias('pts'),
-                F.count(F.lit(1)).alias('n')).first()
-            if not stats['n']:
+            # the one emptiness action: it also fills the cache the write
+            # reads, and a micro-batch that closed no buckets commits nothing
+            if not part.count():
                 return
-            self.tier.append(
-                part, partition_by=self.partition_by,
-                properties={
-                    'operation': 'stream-refresh',
-                    'stream_batch_id': int(batch_id),
-                    'rollup_watermark': str(stats['wm']),
-                    'points_rolled': int(stats['pts'] or 0),
-                })
+            self._append(part, {'operation': 'stream-refresh',
+                                'stream_batch_id': int(batch_id)})
         finally:
             part.unpersist()
-        k = self.auto_compact_snapshots
-        if k and len(self.tier._live_snapshots(
-                self.tier.current_snapshot_id())) > k:
-            self.compact(part.sparkSession)
 
     def read_realtime_stream(self, spark: SparkSession) -> DataFrame:
         """Realtime read for a STREAM-fed tier: the materialized closed

@@ -72,7 +72,10 @@ def _truncate_upper(s: str, n: int):
 def _file_column_stats(path: str) -> dict:
     """Per-file min/max/null-count from the parquet footer (what an Iceberg
     writer records in the manifest at write time — here read back from the
-    footer, which is metadata-only, never a data scan)."""
+    footer, which is metadata-only, never a data scan).  A column whose
+    footer stats pyarrow cannot decode (INT32/INT64-backed decimals) gets
+    no stats, like any other unsupported type: it never prunes."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
     md = pq.ParquetFile(path).metadata
     out = {}
@@ -86,7 +89,11 @@ def _file_column_stats(path: str) -> dict:
             if st is None or not st.has_min_max or '.' in name:
                 out[name] = None            # poison: some group lacks stats
                 continue
-            lo, hi = _norm_stat(st.min), _norm_stat(st.max)
+            try:
+                lo, hi = st.min, st.max
+            except pa.ArrowNotImplementedError:   # INT32/INT64 decimals
+                lo = hi = None
+            lo, hi = _norm_stat(lo), _norm_stat(hi)
             if lo is None or hi is None:
                 out[name] = None
                 continue
@@ -207,53 +214,11 @@ class _BloomAccumulator:
                 'bits': base64.b64encode(folded.tobytes()).decode()}
 
 
-def _bloom_from_column(arr) -> Optional[dict]:
-    """Bloom filter over one in-memory arrow column: ~16 bits/row (<3%
-    false positives at k=5), sized to the file, capped at 128 KiB of bits
-    (Iceberg puffin / parquet bloom semantics, stored in the manifest).
-    Returns None for an empty column, or when any NON-NULL value
-    canonicalizes to None (Decimal, bytes, bool, nested): such a bloom
-    would be blind to those values while the probe side still hashes
-    int/float/str literals — an unsound 'definitely absent' that silently
-    prunes files containing matching rows.  No bloom at all means the
-    probe falls through to the conservative keep."""
-    import base64
-    n = len(arr)
-    if n == 0:
-        return None
-    n_bits = 1 << max(10, min(20, (16 * n - 1).bit_length()))
-    bits = bytearray(n_bits // 8)
-    for v in arr.to_pylist():
-        if v is None:
-            continue          # nulls are invisible to the bloom by design
-        c = _bloom_canon(v)
-        if c is None:
-            return None
-        for pos in _bloom_hashes(c, n_bits, _BLOOM_K):
-            bits[pos >> 3] |= 1 << (pos & 7)
-    return {'n_bits': n_bits, 'k': _BLOOM_K,
-            'bits': base64.b64encode(bytes(bits)).decode()}
-
-
-def _build_file_bloom(path: str, col: str) -> Optional[dict]:
-    """Post-pass bloom build for one column of one written parquet file
-    (columnar projection — reads ONLY the target column).  Kept for
-    hidden-partitioned bloom tables; unpartitioned bloom writes fold the
-    build into the write task itself (:func:`_write_with_blooms`) so the
-    data is never scanned twice."""
-    import pyarrow.parquet as pq
-    try:
-        tbl = pq.read_table(path, columns=[col])
-    except Exception:
-        return None
-    return _bloom_from_column(tbl.column(0))
-
-
 def _write_with_blooms(df: DataFrame, snap_dir: str, bloom_cols) -> dict:
-    """Single-pass writer for bloom-enabled UNPARTITIONED snapshots: every
+    """The one bloom writer (bloom snapshots are unpartitioned): every
     task streams its partition batch-by-batch through a ParquetWriter AND
     folds each batch into that file's bloom accumulators — the write is the
-    only scan (a post-pass bloom build re-reads the table, which at
+    only scan (a post-pass bloom build would re-read the table, which at
     10^12-sequence scale doubles write-path I/O) and nothing is ever
     materialized whole-partition in memory (the bloom state is a flat
     128 KiB per column).  Each attempt writes to an ATTEMPT-PRIVATE temp
@@ -606,8 +571,13 @@ class IcebergishTable:
         on a high-cardinality column the write is not clustered by — every
         file's range contains every id — but a ~16-bits/row bloom answers
         "definitely not in this file" for equality predicates, turning a
-        needle-in-100TB doc_id lookup into a handful of file reads."""
-        os.makedirs(self.meta_dir, exist_ok=True)
+        needle-in-100TB doc_id lookup into a handful of file reads.  The
+        blooms are built during the write, one file per task, so a bloom
+        table is unpartitioned: ``bloom_cols`` with a non-empty
+        ``partition_by`` raises ``ValueError``."""
+        if bloom_cols and partition_by:
+            raise ValueError(f'bloom_cols needs partition_by=(), got '
+                             f'partition_by={tuple(partition_by)!r}')
         parent = self.current_snapshot_id() if _parent is None else _parent
         sid = self._next_sid()
         snap_dir = os.path.join(self.data_dir, f'snap-{sid}')
@@ -625,10 +595,10 @@ class IcebergishTable:
                   else df.repartitionByRange(*cols)).sortWithinPartitions(*cols)
         elif n_files:
             df = df.repartition(n_files)  # unclustered: bound file count only
-        folded_blooms = None
-        if bloom_cols and not partition_by:
-            # bloom-enabled unpartitioned write: one pass — each task
-            # writes its file AND builds its blooms from the same batch
+        folded_blooms = {}
+        if bloom_cols:
+            # one pass: each task writes its file AND builds its blooms
+            # from the same batches
             folded_blooms = _write_with_blooms(df, snap_dir, bloom_cols)
             if not folded_blooms:
                 # empty input wrote no files: lay down the standard
@@ -653,15 +623,8 @@ class IcebergishTable:
                              'rows': f_rows,
                              'partition': _path_partition_values(rel),
                              'stats': f_stats}
-                    if folded_blooms is not None:
-                        b = folded_blooms.get(name, {})
-                        if b:
-                            entry['blooms'] = b
-                    elif bloom_cols:
-                        blooms = {c: _build_file_bloom(p, c)
-                                  for c in bloom_cols}
-                        entry['blooms'] = {c: b for c, b in blooms.items()
-                                           if b is not None}
+                    if folded_blooms.get(name):
+                        entry['blooms'] = folded_blooms[name]
                     files.append(entry)
         props = dict(properties or {})
         if properties_fn is not None:
@@ -706,6 +669,7 @@ class IcebergishTable:
                 'properties': props,
             },
         }
+        os.makedirs(self.meta_dir, exist_ok=True)
         tmp = os.path.join(self.meta_dir, f'.snapshot-{sid}.json.tmp')
         with open(tmp, 'w') as f:
             json.dump(snap, f, indent=1)
@@ -829,6 +793,28 @@ class IcebergishTable:
             return reader.parquet(snap_dir)
         return reader.option('basePath', snap_dir).parquet(*paths)
 
+    def _read_snaps(self, spark: SparkSession, parts, dels=(),
+                    seq: str = None) -> Optional[DataFrame]:
+        """The one read of a snapshot set: one :meth:`_read_snap` per
+        ``(sid, paths or None)`` of ``parts`` (one read per snapshot dir,
+        each with its own manifest schema), unioned by name — the snap-N
+        level is not a partition column.  With live equality-delete
+        snapshot ids ``dels``, each leg is tagged ``_seq`` = its snapshot id
+        for :meth:`_apply_deletes` and the tag is dropped after; ``seq``
+        instead keeps that tag under the given name.  None when ``parts``
+        is empty."""
+        from pyspark.sql import functions as F
+        tag = '_seq' if dels else seq
+        out = None
+        for sid, paths in parts:
+            part = self._read_snap(spark, sid, paths)
+            if tag:
+                part = part.withColumn(tag, F.lit(sid).cast('int'))
+            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
+        if dels and out is not None:
+            out = self._apply_deletes(spark, out, dels).drop('_seq')
+        return out
+
     def read(self, spark: SparkSession, snapshot_id: int = None) -> DataFrame:
         """Read the table at a snapshot (default: current). Time travel =
         union of data files of the snapshot's full lineage, minus the rows
@@ -856,18 +842,7 @@ class IcebergishTable:
             from pyspark.sql import types as T
             schema = T.StructType.fromJson(self._data_snapshot(sid)['schema'])
             return spark.createDataFrame([], schema)
-        # one read per snapshot dir (each with its own manifest schema),
-        # unioned by name — the snap-N level is not a partition column
-        from pyspark.sql import functions as F
-        out = None
-        for c in live:
-            part = self._read_snap(spark, c)
-            if dels:
-                part = part.withColumn('_seq', F.lit(c).cast('int'))
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        if dels:
-            out = self._apply_deletes(spark, out, dels).drop('_seq')
-        return out
+        return self._read_snaps(spark, [(c, None) for c in live], dels)
 
     def stream_read(self, spark: SparkSession, schema=None) -> DataFrame:
         """Structured-Streaming source over this table, planned from its
@@ -978,13 +953,9 @@ class IcebergishTable:
             cols = tuple(self.snapshot(c)['manifest']['properties']['equality_cols'])
             groups.setdefault(cols, []).append(c)
         for cols, sids in sorted(groups.items()):
-            dels = None
-            for c in sids:
-                if not os.path.isdir(os.path.join(self.data_dir, f'snap-{c}')):
-                    continue
-                part = (self._read_snap(spark, c).select(*cols)
-                        .withColumn('_del_seq', F.lit(c).cast('int')))
-                dels = part if dels is None else dels.unionByName(part)
+            dels = self._read_snaps(
+                spark, [(c, None) for c in sids if os.path.isdir(
+                    os.path.join(self.data_dir, f'snap-{c}'))], seq='_del_seq')
             if dels is None:
                 continue
             cond = df['_seq'] < dels['_del_seq']
@@ -1059,15 +1030,7 @@ class IcebergishTable:
                  'rewritten_snapshots': len(straddle)}
         layout = self.snapshot(data_live[0])   # the newest live data snapshot
         if straddle:
-            surv = None
-            for c in straddle:
-                part = self._read_snap(spark, c)
-                if del_live:
-                    part = part.withColumn('_seq', F.lit(c).cast('int'))
-                surv = part if surv is None else surv.unionByName(
-                    part, allowMissingColumns=True)
-            if del_live:
-                surv = self._apply_deletes(spark, surv, del_live).drop('_seq')
+            surv = self._read_snaps(spark, [(c, None) for c in straddle], del_live)
             surv = surv.filter(~F.coalesce(self._predicate_expr(preds), F.lit(False)))
             self.append(surv, partition_by=layout.get('partition_spec', []),
                         invalidates=drop_whole + straddle, properties=props)
@@ -1166,14 +1129,9 @@ class IcebergishTable:
                 f'(snapshots {sorted(unexplained)} were invalidated in-range '
                 f'by non-maintenance or partially-unreflected commits); '
                 f'incremental refresh is invalid — recompute from scratch')
-        out = None
-        for c in new:
-            if c in excluded or not os.path.isdir(
-                    os.path.join(self.data_dir, f'snap-{c}')):
-                continue
-            part = self._read_snap(spark, c)
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        return out
+        return self._read_snaps(spark, [
+            (c, None) for c in new if c not in excluded
+            and os.path.isdir(os.path.join(self.data_dir, f'snap-{c}'))])
 
     # -- stats-pruned scan planning -----------------------------------------
 
@@ -1297,16 +1255,9 @@ class IcebergishTable:
         if not plan['kept']:
             return self.read(spark, snapshot_id).filter(expr).limit(0)
         _, dels = self._split_live(self._resolve(snapshot_id))
-        from pyspark.sql import functions as F
-        out = None
-        for snap_dir, paths in sorted(plan['kept'].items()):
-            seq = int(os.path.basename(snap_dir).split('-')[-1])
-            part = self._read_snap(spark, seq, sorted(paths))
-            if dels:
-                part = part.withColumn('_seq', F.lit(seq).cast('int'))
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        if dels:
-            out = self._apply_deletes(spark, out, dels).drop('_seq')
+        out = self._read_snaps(spark, [
+            (int(os.path.basename(snap_dir).split('-')[-1]), sorted(paths))
+            for snap_dir, paths in sorted(plan['kept'].items())], dels)
         return out.filter(expr) if with_residual else out
 
     def expire_before(self, spark: SparkSession, cutoff, ts_col: str = 'ts') -> dict:

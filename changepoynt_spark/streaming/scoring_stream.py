@@ -70,6 +70,45 @@ def _buffer_geometry(probe):
                      'no replay-buffer geometry')
 
 
+def _in_order(pdfs, next_pos: int, pending: dict, n_dropped: int,
+              max_pending: int, consume, reset):
+    """The in-order machinery of both scoring operators: feed the
+    (pos, value) points of ``pdfs`` to ``consume(pos, value)`` in position
+    order, exactly once each.  Late duplicates (pos < next_pos) are dropped;
+    points beyond a gap park in ``pending`` (mutated in place) until the
+    gap fills.  Returns the new ``(next_pos, n_dropped)``."""
+    def drain():
+        nonlocal next_pos
+        while next_pos in pending:                    # the contiguous run
+            consume(next_pos, pending.pop(next_pos))
+            next_pos += 1
+
+    for pdf in pdfs:
+        pdf = pdf.sort_values('pos')
+        for p, v in zip(pdf['pos'].astype('int64'), pdf['value'].astype('float64')):
+            if p < next_pos:
+                continue                              # late duplicate: drop
+            pending[int(p)] = float(v)                # in-order or parked
+            drain()
+            if len(pending) > max_pending:
+                # A REAL gap at next_pos (drain() just ran, so nothing
+                # parked is contiguous) has outlasted the pending budget.
+                # Dropping any parked point would wedge the series forever
+                # (stream points are not resent), so instead ADVANCE PAST
+                # THE GAP: declare [next_pos, min(pending)) lost, count the
+                # loss, and ``reset()`` the scorer so it restarts at the
+                # earliest parked point (a score window or posterior must
+                # never span missing data).  Checking AFTER the drain means
+                # an in-order point that merely unblocks a full pending
+                # buffer never resets the scorer.
+                lo = min(pending)
+                n_dropped += lo - next_pos
+                next_pos = lo
+                reset()
+                drain()
+    return next_pos, n_dropped
+
+
 def _make_stateful_fn(algorithm: str, params: dict, max_pending: int = 10_000):
     params = dict(params or {})
     probe = build_algorithm(algorithm, params)
@@ -87,41 +126,17 @@ def _make_stateful_fn(algorithm: str, params: dict, max_pending: int = 10_000):
         algo = build_algorithm(algorithm, params)
         out_pos, out_score = [], []
 
-        def drain():
-            nonlocal next_pos
-            while next_pos in pending:                # the contiguous run
-                buf.append(pending.pop(next_pos))
-                if len(buf) > buffer_size:
-                    buf.pop(0)
-                if len(buf) == buffer_size:
-                    score = algo.transform(np.asarray(buf, dtype=np.float64))
-                    out_pos.append(next_pos - delay)
-                    out_score.append(float(score[score_position]))
-                next_pos += 1
+        def consume(pos, v):
+            buf.append(v)
+            if len(buf) > buffer_size:
+                buf.pop(0)
+            if len(buf) == buffer_size:
+                score = algo.transform(np.asarray(buf, dtype=np.float64))
+                out_pos.append(pos - delay)
+                out_score.append(float(score[score_position]))
 
-        for pdf in pdfs:
-            pdf = pdf.sort_values('pos')
-            for p, v in zip(pdf['pos'].astype('int64'), pdf['value'].astype('float64')):
-                if p < next_pos:
-                    continue                          # late duplicate: drop
-                pending[int(p)] = float(v)            # in-order or parked
-                drain()
-                if len(pending) > max_pending:
-                    # A REAL gap at next_pos (drain() just ran, so nothing
-                    # parked is contiguous) has outlasted the pending budget.
-                    # Dropping any parked point would wedge the series
-                    # forever (stream points are not resent), so instead
-                    # ADVANCE PAST THE GAP: declare [next_pos, min(pending))
-                    # lost, count the loss, and restart scoring at the
-                    # earliest parked point with an empty buffer (a score
-                    # window must never span missing data).  Checking AFTER
-                    # the drain means an in-order point that merely unblocks
-                    # a full pending buffer never resets the buffer.
-                    lo = min(pending)
-                    n_dropped += lo - next_pos
-                    next_pos = lo
-                    buf.clear()
-                    drain()
+        next_pos, n_dropped = _in_order(pdfs, next_pos, pending, n_dropped,
+                                        max_pending, consume, buf.clear)
         state.update((buf, next_pos, list(pending.keys()), list(pending.values()),
                       n_dropped))
         if out_pos:
@@ -182,31 +197,18 @@ def _make_online_fn(algorithm: str, params: dict, max_pending: int = 10_000,
             next_pos, pending, n_dropped = 0, {}, 0
         out_pos, out_score = [], []
 
-        def drain():
-            nonlocal next_pos, kstate
-            while next_pos in pending:
-                score, kstate = algo.stream_step(kstate, pending.pop(next_pos))
-                out_pos.append(next_pos)      # online: score determined NOW
-                out_score.append(score)
-                next_pos += 1
+        def consume(pos, v):
+            nonlocal kstate
+            score, kstate = algo.stream_step(kstate, v)
+            out_pos.append(pos)               # online: score determined NOW
+            out_score.append(score)
 
-        for pdf in pdfs:
-            pdf = pdf.sort_values('pos')
-            for p, v in zip(pdf['pos'].astype('int64'), pdf['value'].astype('float64')):
-                if p < next_pos:
-                    continue
-                pending[int(p)] = float(v)
-                drain()
-                if len(pending) > max_pending:
-                    # same gap-advance semantics as the buffered path: count
-                    # the loss and RESTART the posterior at the earliest
-                    # parked point (an online posterior must never span
-                    # missing data)
-                    lo = min(pending)
-                    n_dropped += lo - next_pos
-                    next_pos = lo
-                    kstate = algo.stream_state(max_run_length)
-                    drain()
+        def reset():
+            nonlocal kstate
+            kstate = algo.stream_state(max_run_length)
+
+        next_pos, n_dropped = _in_order(pdfs, next_pos, pending, n_dropped,
+                                        max_pending, consume, reset)
         mp, pp, lm, t = kstate
         state.update((list(map(float, mp)), list(map(float, pp)),
                       list(map(float, lm)), int(t), next_pos,

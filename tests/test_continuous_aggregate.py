@@ -593,3 +593,90 @@ def test_compact_summary_bounds_lineage_walks(spark, events, tmp_path):
     assert ca_cold._max_stream_batch_id() == 41
     assert len(reads2) <= 2, f'cold walk visited {len(reads2)} snapshots'
     ca_cold.tier.snapshot = orig2
+
+
+# -- one tier-append path: job budgets ----------------------------------------
+
+def _points(spark, i0, n):
+    import datetime
+    base = datetime.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [(f's{i % 3}', base + datetime.timedelta(minutes=7 * i), float(i))
+         for i in range(i0, i0 + n)], 'source string, ts timestamp, value double')
+
+
+def _run_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_watermark_only_refresh_is_a_data_less_commit(spark, tmp_path):
+    """A raw delta with no data files (a compaction of reflected data)
+    advances the watermark with a data-less commit: no Spark job, no
+    ``snap-<n>`` dir, and the tier's own partition spec recorded."""
+    import os
+    raw = IcebergishTable(str(tmp_path / 'raw'))
+    ca = ContinuousAggregate(raw, str(tmp_path / 'tier'), ['source'],
+                             interval='1 hour')
+    assert ca.partition_by == ('source',)
+    raw.append(_points(spark, 0, 40), partition_by=())
+    raw.append(_points(spark, 40, 40), partition_by=())
+    ca.refresh(spark)
+    raw.compact(spark)
+    rep, n_jobs = _run_in_group(spark, 'ca-watermark-only',
+                                lambda: ca.refresh(spark))
+    assert rep == {'mode': 'empty', 'from': 1, 'to': 2, 'rows': 0}
+    assert n_jobs == 0
+    sid = ca.tier.current_snapshot_id()
+    snap = ca.tier.snapshot(sid)
+    assert not os.path.exists(os.path.join(ca.tier.data_dir, f'snap-{sid}'))
+    assert snap['partition_spec'] == ['source']
+    assert snap['manifest']['entries'] == []
+    assert ca.refreshed_through() == raw.current_snapshot_id()
+    # later refreshes stay incremental and exact
+    raw.append(_points(spark, 80, 20), partition_by=())
+    assert ca.refresh(spark)['mode'] == 'incremental'
+    cols = ['source', 'bucket_start', *rollup.AGG_COLS]
+    exp = rollup.rollup_from_points(_points(spark, 0, 100), ['source'],
+                                    interval='1 hour', exact_sum=True)
+    got = sorted(tuple(r) for r in ca.read(spark).select(*cols).collect())
+    assert got == sorted(tuple(r) for r in exp.select(*cols).collect()) and got
+
+
+def test_refresh_and_stream_batch_job_budgets(spark, tmp_path):
+    """The tier append observes its watermark stats on the write job, so
+    an incremental refresh runs at most 2 Spark jobs and a non-empty
+    stream_sink micro-batch at most 5 (one emptiness check, then the
+    write): no separate stats aggregate."""
+    raw = IcebergishTable(str(tmp_path / 'raw'))
+    ca = ContinuousAggregate(raw, str(tmp_path / 'tier'), ['source'],
+                             interval='1 hour')
+    raw.append(_points(spark, 0, 40), partition_by=())
+    ca.refresh(spark)
+    raw.append(_points(spark, 40, 40), partition_by=())
+    rep, n_jobs = _run_in_group(spark, 'ca-incremental',
+                                lambda: ca.refresh(spark))
+    assert rep['mode'] == 'incremental' and rep['rows'] > 0
+    assert n_jobs <= 2, n_jobs
+
+    fed = ContinuousAggregate(raw, str(tmp_path / 'stream_tier'), ['source'],
+                              interval='1 hour')
+    sink = fed.stream_sink()
+    part = rollup.rollup_partial(_points(spark, 0, 30), ['source'],
+                                 interval='1 hour')
+    _, n_jobs = _run_in_group(spark, 'ca-stream-batch', lambda: sink(part, 0))
+    assert n_jobs <= 5, n_jobs
+    props = fed.tier.snapshot()['manifest']['properties']
+    assert props['stream_batch_id'] == 0
+    assert props['points_rolled'] == 30
+    assert props['rollup_watermark'] == '2024-01-01 03:00:00'
+    # a replayed batch id starts no job and commits nothing
+    tip = fed.tier.current_snapshot_id()
+    _, n_jobs = _run_in_group(spark, 'ca-stream-replay', lambda: sink(part, 0))
+    assert n_jobs == 0 and fed.tier.current_snapshot_id() == tip

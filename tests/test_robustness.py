@@ -69,6 +69,24 @@ def test_ngram_jaccard_pairs_requires_a_df_cap(spark, weird_docs):
         dedup.ngram_jaccard_pairs(weird_docs, df_cap=0)
 
 
+@pytest.mark.parametrize('module, op, kw, match', [
+    ('dedup', 'minhash_lsh_pairs', {'num_hashes': 32, 'bands': 5}, 'bands'),
+    ('dedup', 'simhash', {'bits': 65}, 'bits'),
+    ('fused', 'score_rollup', {'output': 'table'}, 'output'),
+    ('bpe', 'learn_bpe_merges_windowed', {'mode': 'greedy'}, 'mode'),
+    ('window_ops', 'moving_window_score', {'method': 'median'}, 'method'),
+    ('window_ops', 'seasonal_decompose', {'keys': ['doc_id'], 'period': 1},
+     'period'),
+])
+def test_operator_input_checks_raise_value_error(weird_docs, module, op, kw, match):
+    """Out-of-contract operator arguments raise ValueError, not an assert
+    (``python -O`` strips asserts and the call would run on)."""
+    import importlib
+    fn = getattr(importlib.import_module(f'changepoynt_spark.operators.{module}'), op)
+    with pytest.raises(ValueError, match=match):
+        fn(weird_docs, **kw)
+
+
 def test_rollup_operators_survive_empty_events(spark):
     from changepoynt_spark.operators import rollup
     ev = spark.createDataFrame([], 'event_id long, ts timestamp, user_id long, '

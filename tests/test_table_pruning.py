@@ -340,25 +340,38 @@ def test_bloom_only_equality_consults_the_bloom(spark, events, bloom_table):
     assert got == exp and len(got) > 0
 
 
+def _file_bloom(path, col):
+    """Bloom of one column of a written parquet file, built the way the
+    write path builds it: batch by batch through ``_BloomAccumulator``
+    (None when the file has no such column)."""
+    import pyarrow.parquet as pq
+    from changepoynt_spark.sources.tables import _BloomAccumulator
+    acc = _BloomAccumulator()
+    pf = pq.ParquetFile(path)
+    if col in pf.schema_arrow.names:
+        for batch in pf.iter_batches(columns=[col]):
+            acc.update(batch.column(0))
+    return acc.finish()
+
+
 def test_bloom_unit_determinism_and_unhashable_probe():
     """Same file -> bit-identical bloom (manifests must be reproducible);
     a probe value the bloom cannot canonicalize never prunes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from changepoynt_spark.sources.tables import (
-        _build_file_bloom, _bloom_may_contain)
+    from changepoynt_spark.sources.tables import _bloom_may_contain
     import tempfile, os
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, 'f.parquet')
         pq.write_table(pa.table({'x': [1, 2, 3, None], 's': ['a', 'b', 'c', 'd']}), p)
-        b1, b2 = _build_file_bloom(p, 'x'), _build_file_bloom(p, 'x')
+        b1, b2 = _file_bloom(p, 'x'), _file_bloom(p, 'x')
         assert b1 == b2
         assert all(_bloom_may_contain(b1, v) for v in (1, 2, 3, 1.0, 2.0))
         assert not _bloom_may_contain(b1, 4)
         assert _bloom_may_contain(b1, True)      # bool canon is None: keep
-        bs = _build_file_bloom(p, 's')
+        bs = _file_bloom(p, 's')
         assert _bloom_may_contain(bs, 'a') and not _bloom_may_contain(bs, 'z')
-        assert _build_file_bloom(p, 'missing') is None
+        assert _file_bloom(p, 'missing') is None
 
 
 def test_in_list_predicate_single_scan(spark, events, bloom_table):
@@ -409,8 +422,7 @@ def test_bloom_soundness_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from changepoynt_spark.sources.tables import (
-        _bloom_may_contain, _build_file_bloom)
+    from changepoynt_spark.sources.tables import _bloom_may_contain
 
     scalars = st.one_of(
         st.integers(min_value=-2**50, max_value=2**50),
@@ -428,7 +440,7 @@ def test_bloom_soundness_property():
             with tempfile.TemporaryDirectory() as d:
                 p = os.path.join(d, 'f.parquet')
                 pq.write_table(pa.table({'x': vals}), p)
-                b = _build_file_bloom(p, 'x')
+                b = _file_bloom(p, 'x')
                 assert b is not None
                 for v in vals:
                     assert _bloom_may_contain(b, v), v
@@ -440,7 +452,7 @@ def test_bloom_soundness_property():
                 # order independence: reversed build is bit-identical
                 p2 = os.path.join(d, 'g.parquet')
                 pq.write_table(pa.table({'x': list(reversed(vals))}), p2)
-                assert _build_file_bloom(p2, 'x') == b
+                assert _file_bloom(p2, 'x') == b
 
     prop()
 
@@ -454,16 +466,15 @@ def test_bloom_declines_unhashable_column_types(tmp_path):
     import os
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from changepoynt_spark.sources.tables import (
-        _build_file_bloom, _bloom_may_contain)
+    from changepoynt_spark.sources.tables import _bloom_may_contain
     p = os.path.join(str(tmp_path), 'dec.parquet')
     vals = [decimal.Decimal('1.5000'), decimal.Decimal('2.0000'), None]
     pq.write_table(pa.table({'x': pa.array(vals, pa.decimal128(18, 4))}), p)
-    assert _build_file_bloom(p, 'x') is None
+    assert _file_bloom(p, 'x') is None
     # nulls alone never poison a hashable column
     p2 = os.path.join(str(tmp_path), 'ok.parquet')
     pq.write_table(pa.table({'x': [1, None, 3]}), p2)
-    b = _build_file_bloom(p2, 'x')
+    b = _file_bloom(p2, 'x')
     assert b is not None and _bloom_may_contain(b, 3)
 
 
@@ -504,14 +515,35 @@ def test_bloom_accumulator_fold_matches_direct_build():
     must be bit-identical to a direct single-shot build (power-of-two
     moduli: H mod 2^j is the low j bits of H), at every size tier and for
     every split of the rows into batches."""
+    import base64
+
     import pyarrow as pa
 
     from changepoynt_spark.sources.tables import (
-        _bloom_from_column, _BloomAccumulator)
+        _BLOOM_K, _BloomAccumulator, _bloom_canon, _bloom_hashes)
+
+    def direct_build(arr):
+        """Single-shot oracle: hash every value straight into a bloom of
+        the row-count-sized power of two (~16 bits/row, 2^10..2^20 bits);
+        None when empty or any non-null value cannot be hashed."""
+        if len(arr) == 0:
+            return None
+        n_bits = 1 << max(10, min(20, (16 * len(arr) - 1).bit_length()))
+        bits = bytearray(n_bits // 8)
+        for v in arr.to_pylist():
+            if v is None:
+                continue
+            c = _bloom_canon(v)
+            if c is None:
+                return None
+            for pos in _bloom_hashes(c, n_bits, _BLOOM_K):
+                bits[pos >> 3] |= 1 << (pos & 7)
+        return {'n_bits': n_bits, 'k': _BLOOM_K,
+                'bits': base64.b64encode(bytes(bits)).decode()}
 
     for n in (3, 70, 5000, 80_000):          # 2^10 floor, mid, 2^20 cap tiers
         vals = [f'v{i}' if i % 7 else None for i in range(n)]
-        direct = _bloom_from_column(pa.chunked_array([vals]))
+        direct = direct_build(pa.chunked_array([vals]))
         for n_batches in (1, 4):
             acc = _BloomAccumulator()
             step = (n + n_batches - 1) // n_batches
@@ -525,7 +557,19 @@ def test_bloom_accumulator_fold_matches_direct_build():
     acc.update(pa.array([1, 2]))
     acc.update(pa.array([True]))             # bool canon is None: unsound
     assert acc.finish() is None
-    assert _bloom_from_column(pa.array([True, False])) is None
+    assert direct_build(pa.array([True, False])) is None
+
+
+def test_bloom_cols_require_an_unpartitioned_write(spark, events, tmp_path):
+    """Blooms are built inside the write task, one file per task, so a
+    bloom table is unpartitioned: a partitioned bloom write raises before
+    anything is written."""
+    import os
+    t = IcebergishTable(str(tmp_path / 'blpart'))
+    with pytest.raises(ValueError, match='bloom_cols'):
+        t.append(events, partition_by=('event_type',), bloom_cols=['event_id'])
+    assert t.current_snapshot_id() == -1
+    assert not os.path.exists(t.data_dir)
 
 
 def test_bloom_write_leaves_no_temp_files(spark, events, tmp_path):

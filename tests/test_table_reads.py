@@ -92,3 +92,24 @@ def test_manifest_without_schema_is_corrupt(spark, tmp_path):
     with pytest.raises(ValueError, match='records no schema'):
         t.read(spark)
 
+
+
+def test_decimal_column_appends_without_footer_stats(spark, tmp_path):
+    """pyarrow cannot decode the footer stats of an INT32/INT64-backed
+    decimal (``decimal(10,2)``, ``decimal(18,4)``): the append records no
+    stats for that column instead of failing, the values round-trip, and a
+    predicate on the column never prunes a file."""
+    import decimal
+    rows = [(i, decimal.Decimal(f'{i}.25'), decimal.Decimal(f'{i}.5'))
+            for i in range(12)]
+    df = spark.createDataFrame(rows, 'doc_id long, price decimal(10,2), '
+                                     'weight decimal(18,4)').repartition(3)
+    t = IcebergishTable(str(tmp_path / 'dec'))
+    t.append(df, partition_by=())
+    entries = t.snapshot()['manifest']['entries']
+    assert all('price' not in e['stats'] and 'doc_id' in e['stats']
+               for e in entries if e['rows'])
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == sorted(rows)
+    plan = t.plan_files([('price', '>', 100)])
+    assert plan['n_kept'] == plan['n_total'] == 3
