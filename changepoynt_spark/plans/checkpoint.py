@@ -62,12 +62,13 @@ class RollupCheckpointJob:
         self.params = dict(params or {})
 
     def completed(self) -> dict:
-        """bucket -> recorded properties (latest snapshot per bucket wins)."""
+        """bucket -> recorded properties of its live snapshot: reprocessing
+        a bucket invalidates the snapshot it replaces (newest wins)."""
         out = {}
-        for snap in self.table.history():
-            props = dict(snap['manifest']['properties'])
+        for sid in reversed(self.table._live_snapshots(self.table.current_snapshot_id())):
+            props = dict(self.table.snapshot(sid)['manifest']['properties'])
             if 'bucket' in props:
-                props['snapshot_id'] = snap['snapshot_id']
+                props['snapshot_id'] = sid
                 out[int(props['bucket'])] = props
         return out
 

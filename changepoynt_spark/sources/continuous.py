@@ -33,9 +33,7 @@ from changepoynt_spark.operators.rollup import (
     dd_rows_merge, dd_rows_to_sketch, dd_sketch_rows, finalize_rollup,
     merge_partials, rebucket_partials, rollup_partial, sketch_estimate,
     sketch_rollup, sketch_rollup_merge)
-from changepoynt_spark.sources.tables import IcebergishTable
-
-WATERMARK_PROP = 'refreshed_through_snapshot'
+from changepoynt_spark.sources.tables import WATERMARK_PROP, IcebergishTable
 
 # source maintenance that only touched reflected data never re-triggers the
 # aggregate: an expiry keeps the TIER's history even after the raw rows age
@@ -193,26 +191,14 @@ class ContinuousAggregate:
         # compaction cost is bounded: it re-reads tier PARTIALS (≤ one row
         # per keys×bucket), never raw history.  None/0 disables.
         self.auto_compact_snapshots = auto_compact_snapshots
-        # stream-sink batch-id cache: (tier tip snapshot id when last
-        # walked, max stream_batch_id found).  Batch ids are monotone per
-        # checkpoint and snapshot manifests are immutable, so each lookup
-        # only walks the lineage segment NEWER than the cached tip —
-        # without this every micro-batch re-walks the full lineage,
-        # O(committed batches) metadata reads per batch, unbounded
-        self._stream_bid_cache = (-1, None)
 
     # -- watermark ---------------------------------------------------------
 
     def refreshed_through(self) -> int:
-        """Raw-table snapshot id the tier reflects (-1 = never refreshed).
-        Walks the tier lineage newest-first so compaction snapshots (which
-        re-record the watermark they preserve) and refresh snapshots both
-        count."""
-        for snap in self.tier.lineage():
-            props = snap['manifest']['properties']
-            if WATERMARK_PROP in props:
-                return int(props[WATERMARK_PROP])
-        return -1
+        """Raw-table snapshot id the tier reflects (-1 = never refreshed):
+        the newest :data:`WATERMARK_PROP` on the tier lineage, read from the
+        current snapshot's summary."""
+        return self.tier.summary().get('refreshed_through', -1)
 
     # -- refresh -----------------------------------------------------------
 
@@ -310,32 +296,19 @@ class ContinuousAggregate:
                                 invalidates=invalidates, properties=properties,
                                 properties_fn=_stats_props)
         k = self.auto_compact_snapshots
-        if k and len(self.tier._live_snapshots(self.tier.current_snapshot_id())) > k:
+        if k and len(snap['live']) > k:
             return snap, self.compact(part.sparkSession)
         return snap, None
 
     def rollup_watermark(self):
         """Max bucket_start ever rolled into the tier (``None`` if the tier
-        never refreshed with data).  Read from the per-snapshot
-        ``rollup_watermark`` properties on the lineage (including
-        invalidated snapshots).  The walk STOPS at the first tier-compact
-        snapshot carrying the property: compaction records the max it
-        preserves, summarizing everything below — so with auto-compaction
-        this is O(snapshots since the last compact), not O(every refresh
-        ever committed) metadata reads per realtime read (a year of
-        minutely refreshes is ~525k snapshot jsons; the bound keeps the
-        read path at ~auto_compact_snapshots of them)."""
+        never refreshed with data): the max per-snapshot
+        ``rollup_watermark`` property on the lineage, invalidated snapshots
+        included, read from the current snapshot's summary — one json
+        however many refreshes were ever committed."""
         import datetime
-        best = None
-        for snap in self.tier.lineage():
-            props = snap['manifest']['properties']
-            w = props.get('rollup_watermark')
-            if w and w != 'None':
-                d = datetime.datetime.fromisoformat(w)
-                best = d if best is None or d > best else best
-                if props.get('operation') == 'tier-compact':
-                    break       # summarizes the whole lineage below it
-        return best
+        w = self.tier.summary().get('rollup_watermark')
+        return datetime.datetime.fromisoformat(w) if w else None
 
     # -- read / maintain -----------------------------------------------------
 
@@ -390,24 +363,14 @@ class ContinuousAggregate:
         Run this when live-snapshot count (not bytes) starts to dominate
         read planning — same rationale as :meth:`IcebergishTable.compact`,
         but merging rows instead of just repacking files."""
-        cur = self.tier._resolve()
-        live = self.tier._live_snapshots(cur)
+        live = self.tier._live_snapshots(self.tier._resolve())
         merged = self.read_partial(spark)
-        # summary properties: the compact snapshot re-records the max
-        # rollup watermark and stream batch id it preserves, so the
-        # per-read/per-batch lineage walks can STOP here instead of
-        # visiting every refresh ever committed (see rollup_watermark /
-        # _max_stream_batch_id)
-        props = {'operation': 'tier-compact',
-                 WATERMARK_PROP: int(self.refreshed_through()),
-                 'rollup_watermark': str(self.rollup_watermark()),
-                 'replaced_snapshots': len(live)}
-        max_bid = self._max_stream_batch_id()
-        if max_bid is not None:
-            props['stream_batch_id'] = int(max_bid)
+        # the watermarks ride the snapshot summary, which the compact
+        # commit carries forward like any other
         snap = self.tier.append(
             merged, partition_by=self.partition_by, invalidates=live,
-            properties=props)
+            properties={'operation': 'tier-compact',
+                        'replaced_snapshots': len(live)})
         return {'snapshot_id': snap['snapshot_id'], 'replaced': len(live),
                 'rows': snap['manifest']['row_count']}
 
@@ -415,31 +378,10 @@ class ContinuousAggregate:
 
     def _max_stream_batch_id(self):
         """Highest Structured-Streaming batch id already committed to the
-        tier ('stream_batch_id' snapshot properties).  Amortized O(new
-        snapshots): walks the lineage only down to the tip of the previous
-        walk (ids are monotone, manifests immutable), so a long-running
-        stream pays one json read per snapshot IT committed, not per batch
-        × history.  A rollback/fork that detaches the cached tip degrades
-        gracefully: the walk runs to the root and the cache re-pins."""
-        tip = self.tier.current_snapshot_id()
-        cached_tip, cached_best = self._stream_bid_cache
-        found = []
-        for snap in self.tier.lineage(tip):
-            if snap['snapshot_id'] == cached_tip:
-                found.append(cached_best)
-                break
-            props = snap['manifest']['properties']
-            b = props.get('stream_batch_id')
-            if b is not None:
-                found.append(int(b))
-                if props.get('operation') == 'tier-compact':
-                    # compaction re-records the max id it preserves: every
-                    # id below is <= this summary, so a COLD walk (fresh
-                    # process, empty cache) is bounded too
-                    break
-        best = max((b for b in found if b is not None), default=None)
-        self._stream_bid_cache = (tip, best)
-        return best
+        tier: the max 'stream_batch_id' snapshot property on the lineage,
+        read from the current snapshot's summary (None when no stream
+        batch was ever committed)."""
+        return self.tier.summary().get('stream_batch_id')
 
     def stream_sink(self):
         """foreachBatch target for ``rollup_partial`` over a watermarked
@@ -472,10 +414,9 @@ class ContinuousAggregate:
         snapshots, it folds the merge-on-read pile (watermark-preserving
         tier-compact), so an always-on stream's read cost and per-batch
         planning stay O(K) instead of growing with committed batches.
-        Exactly-once survives compaction: batch ids live in snapshot
-        properties on the LINEAGE (walked through invalidated snapshots),
-        and the walk itself is amortized O(new snapshots) via the monotone
-        batch-id cache.
+        Exactly-once survives compaction: the max committed batch id rides
+        the snapshot summary, which every commit (a compaction included)
+        carries forward, so the per-batch check reads one json.
 
         A later BATCH refresh on a stream-fed tier is safe by fallback: the
         stream snapshots carry no raw-snapshot watermark, so

@@ -391,6 +391,35 @@ def _partition_eq(pv: str, val):
     return n == c
 
 
+# tier snapshot property: the raw-table snapshot id a continuous aggregate
+# reflects (see changepoynt_spark.sources.continuous)
+WATERMARK_PROP = 'refreshed_through_snapshot'
+
+
+def _fold_summary(prev: dict, props: dict, added: list, removed: list) -> dict:
+    """A commit's snapshot summary from its parent's: ``added`` = the
+    manifest entries of its data files, ``removed`` = the manifests of the
+    live data snapshots it invalidates; the tier state takes the newest
+    :data:`WATERMARK_PROP` and the max ``rollup_watermark`` and
+    ``stream_batch_id`` ever committed."""
+    import datetime
+    out = dict(prev)
+    out['total-data-files'] = (prev.get('total-data-files', 0) + len(added)
+                               - sum(len(m['entries']) for m in removed))
+    out['total-records'] = (prev.get('total-records', 0) + sum(e['rows'] for e in added)
+                            - sum(m['row_count'] for m in removed))
+    if WATERMARK_PROP in props:
+        out['refreshed_through'] = int(props[WATERMARK_PROP])
+    w = props.get('rollup_watermark')
+    if w and w != 'None':
+        out['rollup_watermark'] = max(filter(None, [w, prev.get('rollup_watermark')]),
+                                      key=datetime.datetime.fromisoformat)
+    if props.get('stream_batch_id') is not None:
+        out['stream_batch_id'] = max(int(props['stream_batch_id']),
+                                     prev.get('stream_batch_id', -1))
+    return out
+
+
 # snapshot operations whose data files REWRITE or RETRACT already-committed
 # logical rows (maintenance / overwrite commits): a stream over the table
 # must NOT ingest them — 'compact'/'tier-compact'/'expire' rewrite live rows
@@ -417,14 +446,13 @@ class IcebergishTable:
         self.data_dir = os.path.join(root, 'data')
         self.meta_dir = os.path.join(root, 'metadata')
         # parsed-manifest cache, stat-validated: committed snapshot jsons
-        # are immutable (rewrites land as NEW snapshots), so lineage walks
-        # (_live_snapshots / read_delta / watermark scans) pay one parse per
-        # manifest per process instead of one parse per walk per manifest —
-        # with bloom-carrying manifests that parse is the dominant metadata
-        # cost.  The (mtime_ns, size) signature keeps the cache honest
-        # against out-of-band edits (tests hand-rewrite manifests).  LRU
-        # past _SNAP_CACHE_MAX entries, so a walk longer than the bound
-        # evicts only the coldest manifests, not the whole hot set.
+        # are immutable (rewrites land as NEW snapshots), so live-set reads
+        # and lineage walks (history / publish / the stream source) pay one
+        # parse per manifest per process — with bloom-carrying manifests
+        # that parse is the dominant metadata cost.  The (mtime_ns, size)
+        # signature keeps the cache honest against out-of-band edits (tests
+        # hand-rewrite manifests).  LRU past _SNAP_CACHE_MAX entries, so a
+        # walk longer than the bound evicts only the coldest manifests.
         self._snap_cache: OrderedDict = OrderedDict()
 
     # -- snapshot bookkeeping ------------------------------------------------
@@ -470,6 +498,12 @@ class IcebergishTable:
         if len(self._snap_cache) > _SNAP_CACHE_MAX:
             self._snap_cache.popitem(last=False)
         return snap
+
+    def summary(self, snapshot_id: int = None) -> dict:
+        """Snapshot summary (default: current; see :meth:`_commit`): file
+        and record counts plus the tier state.  {} on an empty table."""
+        snap = self.snapshot(snapshot_id)
+        return snap['summary'] if snap else {}
 
     def lineage(self, snapshot_id: int = None):
         """Snapshots from ``snapshot_id`` (default: current) back to the
@@ -526,6 +560,11 @@ class IcebergishTable:
         return [int(m.group(1)) for m in map(_SNAPSHOT_FILE.match,
                                              os.listdir(self.meta_dir)) if m]
 
+    def _data_dir_ids(self) -> list:
+        """Ids of every ``snap-<n>`` data dir in ``data/``, json or not."""
+        dirs = os.listdir(self.data_dir) if os.path.isdir(self.data_dir) else []
+        return [int(m.group(1)) for m in map(_SNAP_DIR.match, dirs) if m]
+
     def _next_sid(self) -> int:
         """Next unused snapshot id: max of the version hint, every snapshot
         json and every ``snap-<n>`` data dir on disk.  A crashed
@@ -533,9 +572,8 @@ class IcebergishTable:
         past the hint, and a crashed append leaves a data dir with no json;
         ids must skip both or the next append would collide with the
         debris's data dir."""
-        dirs = os.listdir(self.data_dir) if os.path.isdir(self.data_dir) else []
         return max([self.current_snapshot_id(), *self._snapshot_ids_on_disk(),
-                    *(int(m.group(1)) for m in map(_SNAP_DIR.match, dirs) if m)]) + 1
+                    *self._data_dir_ids()]) + 1
 
     def append(self, df: DataFrame, partition_by=('source',), properties: dict = None,
                invalidates=(), cluster_by=None, zorder_by=None, n_files: int = None,
@@ -641,19 +679,27 @@ class IcebergishTable:
         """The one commit path: every snapshot json of this table is
         published here — data appends (``entries`` = the written files) and
         data-less manifest surgery (``entries=[]``, no snap dir) alike.
-        Applies the lineage-barrier rule, writes ``snapshot-<sid>.json``
-        via a temp file + atomic rename, then (unless ``advance_hint`` is
-        False: staged / multi-snapshot commits) flips the version hint."""
+
+        Each json records the table state, folded from the parent's json
+        alone, so no reader replays the lineage: ``live`` (Iceberg's
+        manifest list: ``[sid, 'data'|'delete']`` pairs, newest first — the
+        parent's, minus ``invalidates``, plus this snapshot) and ``summary``
+        (Iceberg's snapshot summary: total data files and records of the
+        live data snapshots, plus the tier state — ``refreshed_through``,
+        the newest :data:`WATERMARK_PROP` on the lineage, and
+        ``rollup_watermark`` / ``stream_batch_id``, each its max there).
+
+        Writes ``snapshot-<sid>.json`` via a temp file + atomic rename, then
+        (unless ``advance_hint`` is False: staged / multi-snapshot commits)
+        flips the version hint."""
         inv = sorted(int(i) for i in invalidates)
         props = dict(properties)
-        if parent >= 0 and set(inv) >= set(self._live_snapshots(parent)):
-            # this commit supersedes EVERY live ancestor (compaction /
-            # full-refresh overwrite / expiry): record it so lineage walks
-            # (_live_snapshots) stop here instead of visiting every
-            # snapshot ever committed — bounds per-refresh/per-micro-batch
-            # metadata reads at O(snapshots since the last barrier).  (A
-            # first snapshot needs no marker: the walk ends at parent -1.)
-            props['lineage_barrier'] = True
+        prev = self.snapshot(parent) if parent >= 0 else {'live': [], 'summary': {}}
+        kind = 'delete' if props.get('operation') == 'delete' else 'data'
+        removed = [self.snapshot(c)['manifest'] for c, k in prev['live']
+                   if c in inv and k == 'data']
+        added = entries if kind == 'data' else []
+        summary = _fold_summary(prev['summary'], props, added, removed)
         snap = {
             'snapshot_id': sid,
             'parent': parent,
@@ -661,6 +707,8 @@ class IcebergishTable:
             'timestamp_ms': int(time.time() * 1000),
             'schema': schema,
             'partition_spec': list(partition_spec or []),
+            'live': [[sid, kind]] + [e for e in prev['live'] if e[0] not in inv],
+            'summary': summary,
             'manifest': {
                 'entries': entries,
                 # exact row count from the parquet footers already parsed
@@ -817,7 +865,7 @@ class IcebergishTable:
 
     def read(self, spark: SparkSession, snapshot_id: int = None) -> DataFrame:
         """Read the table at a snapshot (default: current). Time travel =
-        union of data files of the snapshot's full lineage, minus the rows
+        union of data files of the snapshot's live set, minus the rows
         matched by live equality-delete snapshots (merge-on-read; a delete
         applies only to snapshots that predate it).  The no-deletes fast
         path adds nothing to the plan."""
@@ -881,22 +929,12 @@ class IcebergishTable:
                 .schema(schema).load(self.root))
 
     def _live_snapshots(self, snapshot_id: int) -> list:
-        """Snapshot ids whose data files are visible at ``snapshot_id``
-        (lineage minus everything the lineage invalidates)."""
-        dead, chain = set(), []
-        for snap in self.lineage(snapshot_id):
-            chain.append(snap['snapshot_id'])
-            dead.update(snap.get('invalidates', []))
-            if snap['manifest']['properties'].get('lineage_barrier'):
-                # this snapshot invalidated every then-live ancestor, so
-                # every strict ancestor is dead — stop the walk (keeps
-                # always-on refresh/stream loops at O(snapshots since the
-                # last compaction) metadata reads instead of O(history))
-                break
-        return [c for c in chain if c not in dead]
+        """Snapshot ids whose data files are visible at ``snapshot_id``,
+        newest first: the ``live`` list its json records ([] below 0)."""
+        return [c for c, _ in self._live(snapshot_id)]
 
-    def _snapshot_op(self, sid: int):
-        return self.snapshot(sid)['manifest']['properties'].get('operation')
+    def _live(self, snapshot_id: int) -> list:
+        return self.snapshot(snapshot_id)['live'] if snapshot_id >= 0 else []
 
     def _data_snapshot(self, snapshot_id: int) -> dict:
         """Newest live DATA snapshot at ``snapshot_id`` (the snapshot itself
@@ -910,10 +948,9 @@ class IcebergishTable:
         """Live snapshots split into (data, equality-delete) ids.  A
         'delete' snapshot's files hold KEY TUPLES, not table rows — they
         must never enter a data union."""
-        data, dels = [], []
-        for c in self._live_snapshots(snapshot_id):
-            (dels if self._snapshot_op(c) == 'delete' else data).append(c)
-        return data, dels
+        live = self._live(snapshot_id)
+        return ([c for c, k in live if k == 'data'],
+                [c for c, k in live if k == 'delete'])
 
     # -- row-level deletes -----------------------------------------------------
 
@@ -928,8 +965,8 @@ class IcebergishTable:
 
         The write is O(|keys|) regardless of table size — at 10^12-sequence
         scale that is the difference between committing a purge list and
-        rewriting 100 TB.  The read-time cost is one broadcast anti-join
-        (delete sets are assumed driver-broadcastable; compact() folds them
+        rewriting 100 TB.  The read-time cost is one anti-join per key set,
+        planned from the delete side's size (compact() folds the deletes
         away when they accumulate).  Incremental readers
         (:meth:`read_delta`) RAISE on an in-range delete, so a continuous
         aggregate falls back to full recompute — a delete invalidates
@@ -943,11 +980,12 @@ class IcebergishTable:
 
     def _apply_deletes(self, spark: SparkSession, df: DataFrame, delete_sids) -> DataFrame:
         """Anti-join equality-delete snapshots against ``df`` (which must
-        carry ``_seq`` = origin snapshot id).  One broadcast left_anti per
-        distinct equality-column set; a delete applies only to rows whose
-        snapshot PREDATES it (``_seq < _del_seq``).  Null-safe equality
-        (Iceberg: a null key matches a null value)."""
-        from pyspark.sql import functions as F
+        carry ``_seq`` = origin snapshot id).  One left_anti per distinct
+        equality-column set, with no broadcast hint: the key side grows
+        with the deletes, so the join strategy is the planner's (and AQE's)
+        choice from its size.  A delete applies only to rows whose snapshot
+        PREDATES it (``_seq < _del_seq``).  Null-safe equality (Iceberg: a
+        null key matches a null value)."""
         groups = {}
         for c in delete_sids:
             cols = tuple(self.snapshot(c)['manifest']['properties']['equality_cols'])
@@ -961,7 +999,7 @@ class IcebergishTable:
             cond = df['_seq'] < dels['_del_seq']
             for k in cols:
                 cond = cond & df[k].eqNullSafe(dels[k])
-            df = df.join(F.broadcast(dels), on=cond, how='left_anti')
+            df = df.join(dels, on=cond, how='left_anti')
         return df
 
     def delete_where(self, spark: SparkSession, predicates) -> dict:
@@ -1297,6 +1335,10 @@ class IcebergishTable:
         removed snapshot ids.  Metadata is kept (history stays auditable);
         time travel to a vacuumed snapshot raises on read.
 
+        A data dir with no snapshot json is a crashed append's: reclaimed
+        when its id is below the version hint.  Above the hint it may be an
+        in-flight :meth:`upsert` or :meth:`stage` write, and is left alone.
+
         Staged-but-unpublished WAP snapshots (``wap.staged`` property) are
         deliberately unreachable between :meth:`stage` and :meth:`publish`
         — they are RETAINED by default (Iceberg branch/ref retention), not
@@ -1308,7 +1350,11 @@ class IcebergishTable:
         for snap in self.lineage():
             reachable.add(snap['snapshot_id'])
             dead.update(snap.get('invalidates', []))
-        for sid in self._snapshot_ids_on_disk():
+        on_disk = set(self._snapshot_ids_on_disk())
+        hint = self.current_snapshot_id()
+        dead.update(n for n in self._data_dir_ids()
+                    if n < hint and n not in on_disk)
+        for sid in on_disk:
             if sid in reachable:
                 continue
             if retain_staged and sid not in dead:
@@ -1333,7 +1379,7 @@ class IcebergishTable:
         live file count grows linearly with commits while file sizes stay
         tiny — the classic small-files problem: at 10^12-sequence scale the
         scan's task count (and the driver's split planning) is dominated by
-        file count, not bytes.  Compaction reads the live lineage once,
+        file count, not bytes.  Compaction reads the live snapshots once,
         repartitions to ceil(live_bytes / target_file_bytes) output files,
         and commits the rewrite as a snapshot that ``invalidates`` every
         prior live snapshot — readers atomically switch to the packed

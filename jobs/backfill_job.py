@@ -73,8 +73,7 @@ def main(argv=None, spark=None):
         if args.compact:
             live = table.read(spark)
             merged = merge_partials(live, keys)
-            prev = [s['snapshot_id'] for s in table.history()
-                    if s['snapshot_id'] != table.current_snapshot_id() + 1]
+            prev = table._live_snapshots(table.current_snapshot_id())
             snap = table.append(merged, partition_by=None,
                                 properties={'kind': 'compaction',
                                             'input': f'compact-{len(prev)}'},

@@ -536,12 +536,10 @@ def test_auto_compaction_bounds_live_snapshots(spark, events, tmp_path):
 
 
 def test_compact_summary_bounds_lineage_walks(spark, events, tmp_path):
-    """r8: rollup_watermark()/​_max_stream_batch_id() walked EVERY snapshot
-    ever committed (O(refresh history) metadata reads per realtime read).
-    compact() now re-records the max rollup watermark + stream batch id it
-    preserves, and the walks stop at that summary — with auto-compaction
-    the per-read metadata cost is O(auto_compact_snapshots), not O(every
-    minutely refresh of the past year)."""
+    """rollup_watermark() and _max_stream_batch_id() read the current
+    snapshot's summary: one json, however many refreshes, stream batches
+    and compactions the tier has committed, and the values survive a
+    compact (which re-records nothing)."""
     raw = IcebergishTable(str(tmp_path / 'raw'))
     b = F.pmod('user_id', F.lit(8))
     raw.append(events.filter(b == 0), partition_by=())
@@ -556,7 +554,7 @@ def test_compact_summary_bounds_lineage_walks(spark, events, tmp_path):
     assert wm_full is not None
     ca.compact(spark)
 
-    # the compact snapshot summarizes: value unchanged, walk bounded
+    # the compact snapshot carries the summary: value unchanged, one json
     reads = []
     orig = ca.tier.snapshot
 
@@ -566,7 +564,7 @@ def test_compact_summary_bounds_lineage_walks(spark, events, tmp_path):
 
     ca.tier.snapshot = counting
     assert ca.rollup_watermark() == wm_full
-    assert len(reads) <= 2, f'walk visited {len(reads)} snapshots past compact'
+    assert len(reads) == 1, f'read {len(reads)} snapshot jsons past compact'
     ca.tier.snapshot = orig
 
     # a post-compact refresh still advances the watermark correctly
@@ -575,8 +573,8 @@ def test_compact_summary_bounds_lineage_walks(spark, events, tmp_path):
     assert ca.refresh(spark)['mode'] == 'incremental'
     assert ca.rollup_watermark() > wm_full
 
-    # stream batch ids survive a compact via the summary property (fresh
-    # CA instance = cold cache, walk from the tip)
+    # stream batch ids survive a compact via the summary (fresh CA
+    # instance: nothing cached on the aggregate)
     sink = ca.stream_sink()
     sink(ca._partial(late.limit(100)), 41)
     ca.compact(spark)
@@ -591,8 +589,77 @@ def test_compact_summary_bounds_lineage_walks(spark, events, tmp_path):
 
     ca_cold.tier.snapshot = counting2
     assert ca_cold._max_stream_batch_id() == 41
-    assert len(reads2) <= 2, f'cold walk visited {len(reads2)} snapshots'
+    assert len(reads2) == 1, f'read {len(reads2)} snapshot jsons'
     ca_cold.tier.snapshot = orig2
+
+
+def _walked_tier_state(tier):
+    """Oracle for the snapshot summary: the lineage walks it replaced, run
+    to the root — the newest watermark property, the max rollup watermark
+    and the max stream batch id on the tier lineage."""
+    import datetime
+    from changepoynt_spark.sources.continuous import WATERMARK_PROP
+    through, wm, bid = None, None, None
+    for snap in tier.lineage():                       # newest first
+        props = snap['manifest']['properties']
+        if through is None and WATERMARK_PROP in props:
+            through = int(props[WATERMARK_PROP])
+        w = props.get('rollup_watermark')
+        if w and w != 'None':
+            d = datetime.datetime.fromisoformat(w)
+            wm = d if wm is None or d > wm else wm
+        b = props.get('stream_batch_id')
+        if b is not None:
+            bid = int(b) if bid is None else max(bid, int(b))
+    return (-1 if through is None else through), wm, bid
+
+
+def test_summary_tier_state_matches_lineage_walks(spark, events, tmp_path):
+    """refreshed_through, rollup_watermark and _max_stream_batch_id read
+    the current snapshot's summary; after every commit of a mixed history
+    they equal the full lineage walks: stream batches (one replayed), a
+    full-recompute takeover of the stream-fed tier, incremental refreshes,
+    an empty refresh, a tier compact, and stream batches after it."""
+    raw = IcebergishTable(str(tmp_path / 'raw'))
+    ca = ContinuousAggregate(raw, str(tmp_path / 'tier'), KEYS,
+                             interval='1 hour', partition_by=(),
+                             auto_compact_snapshots=None)
+    b0, b1, b2 = _batches(events)
+    sink = ca.stream_sink()
+    late = events.withColumn('ts', F.col('ts') + F.expr('INTERVAL 40 DAYS'))
+    modes = []
+
+    def check():
+        assert (ca.refreshed_through(), ca.rollup_watermark(),
+                ca._max_stream_batch_id()) == _walked_tier_state(ca.tier)
+
+    steps = [
+        lambda: sink(ca._partial(b0.limit(200)), 0),
+        lambda: sink(ca._partial(late.limit(50)), 1),
+        lambda: sink(ca._partial(b1.limit(200)), 1),       # replayed id
+        lambda: raw.append(b0, partition_by=()),
+        lambda: modes.append(ca.refresh(spark)['mode']),   # takeover
+        lambda: raw.append(b1, partition_by=()),
+        lambda: modes.append(ca.refresh(spark)['mode']),
+        lambda: raw.compact(spark),
+        lambda: modes.append(ca.refresh(spark)['mode']),   # no new data
+        lambda: ca.compact(spark),
+        lambda: raw.append(b2, partition_by=()),
+        lambda: modes.append(ca.refresh(spark)['mode']),
+        lambda: sink(ca._partial(b2.limit(100)), 2),
+        lambda: sink(ca._partial(b2.limit(100)), 1),       # replayed id
+    ]
+    n_commits = 0
+    for step in steps:
+        step()
+        n = len(ca.tier.history())
+        assert n - n_commits <= 1                # one commit per step at most
+        n_commits = n
+        check()
+    assert modes == ['full', 'incremental', 'empty', 'incremental']
+    assert ca._max_stream_batch_id() == 2
+    assert ca.refreshed_through() == raw.current_snapshot_id()
+    assert ca.rollup_watermark() is not None
 
 
 # -- one tier-append path: job budgets ----------------------------------------

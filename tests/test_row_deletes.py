@@ -383,10 +383,10 @@ def test_expire_before_keeps_null_ts_rows(spark, tmp_path):
     assert sorted(r['id'] for r in t.read(spark).collect()) == [3, 5, 6, 7, 8, 9]
 
 
-def test_metadata_only_commit_sets_barrier_and_hint_like_a_data_commit(
+def test_metadata_only_commit_records_live_set_and_hint_like_a_data_commit(
         spark, events, tmp_path):
     """A data-less commit (every target dropped whole) goes through the same
-    commit path as a data commit: same lineage-barrier rule, same hint flip."""
+    commit path as a data commit: same recorded live set, same hint flip."""
     def two_slices(name):
         t = IcebergishTable(str(tmp_path / name))
         t.append(events.filter(F.dayofmonth('ts') <= 10), partition_by=())
@@ -404,19 +404,26 @@ def test_metadata_only_commit_sets_barrier_and_hint_like_a_data_commit(
             assert f.read() == '2'
         assert snap['snapshot_id'] == 2 and snap['parent'] == 1
         assert snap['invalidates'] == [0, 1]
-        assert snap['manifest']['properties']['lineage_barrier'] is True
+        assert snap['live'] == [[2, 'data']]
         assert t._live_snapshots(2) == [2]
     assert meta.snapshot()['manifest']['entries'] == []
     assert meta.snapshot()['manifest']['row_count'] == 0
     assert meta.read(spark).count() == 0
-    # superseding only part of the live set: no barrier on either path
+    # the running summary counts the live data snapshots' files and rows
+    assert meta.summary()['total-records'] == meta.summary()['total-data-files'] == 0
+    assert data.summary() == {
+        'total-records': events.count(),
+        'total-data-files': len(data.snapshot()['manifest']['entries'])}
+    # superseding only part of the live set: the untouched snapshot stays
+    # live on either path
     partial = two_slices('partial')
     partial.delete_where(spark, [('ts', '<', datetime.datetime(2024, 1, 11))])
     rewrite = two_slices('rewrite')
     rewrite.delete_where(spark, [('ts', '<', datetime.datetime(2024, 1, 5))])
     for t in (partial, rewrite):
         assert t.current_snapshot_id() == 2
-        assert 'lineage_barrier' not in t.snapshot()['manifest']['properties']
+        assert t.snapshot()['live'] == [[2, 'data'], [1, 'data']]
+        assert t.summary()['total-records'] == t.read(spark).count()
     assert partial.snapshot()['manifest']['entries'] == []
     assert rewrite.snapshot()['manifest']['entries'] != []
 
@@ -435,3 +442,41 @@ def test_data_less_delete_keeps_the_data_schema(spark, tmp_path):
     got = t.read(spark)
     assert got.count() == 0
     assert got.schema == df.schema
+
+
+def test_equality_delete_join_is_not_hinted_to_broadcast(spark, sliced):
+    """The equality-delete key side grows with the deletes, so the anti-join
+    carries no broadcast hint: with broadcast joins switched off, a read of
+    a table with live deletes plans no BroadcastExchange (a hint would plan
+    one regardless of the threshold)."""
+    assert sliced._split_live(sliced.current_snapshot_id())[1]   # live deletes
+    key = 'spark.sql.autoBroadcastJoinThreshold'
+    old = spark.conf.get(key)
+    spark.conf.set(key, '-1')
+    try:
+        plan = sliced.read(spark)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert 'LeftAnti' in plan
+    assert 'BroadcastExchange' not in plan
+
+
+def test_vacuum_reclaims_json_less_dirs_below_the_hint(spark, events, tmp_path):
+    """A crashed append leaves a ``snap-<n>`` data dir with no json; once a
+    later commit moves the hint past it, vacuum reclaims it and reads are
+    unchanged.  A json-less dir above the hint may be an in-flight upsert
+    or stage write: it stays."""
+    import shutil
+    t = IcebergishTable(str(tmp_path / 'debris'))
+    t.append(events.filter(F.dayofmonth('ts') <= 15), partition_by=())
+    crashed = os.path.join(t.data_dir, 'snap-1')
+    shutil.copytree(os.path.join(t.data_dir, 'snap-0'), crashed)
+    t.append(events.filter(F.dayofmonth('ts') > 15), partition_by=())
+    assert t.current_snapshot_id() == 2
+    in_flight = os.path.join(t.data_dir, 'snap-3')
+    shutil.copytree(os.path.join(t.data_dir, 'snap-0'), in_flight)
+    before = _rows(t.read(spark))
+    assert before == _rows(events)
+    assert t.vacuum() == [1]
+    assert not os.path.exists(crashed) and os.path.isdir(in_flight)
+    assert _rows(t.read(spark)) == before

@@ -268,3 +268,84 @@ def test_snapshot_cache_is_lru_over_long_lineages(tmp_path, monkeypatch):
     assert len(parsed) == n - window                   # one new manifest per walk
     assert 1 - len(parsed) / visits > 0.999
     assert len(t._snap_cache) == tables._SNAP_CACHE_MAX
+
+
+def _grow(table, n, props_fn, schema):
+    """n data-less commits, commit i replacing the previous one of slot
+    i % 8 (as checkpoint resumes replace their bucket's snapshot): each
+    invalidates only part of the live set, so the live set stays small
+    while the history grows."""
+    last = {}
+    for i in range(n):
+        sid = table._next_sid()
+        table._commit(sid, table.current_snapshot_id(),
+                      [last[i % 8]] if i % 8 in last else (),
+                      props_fn(i), schema, [], [])
+        last[i % 8] = sid
+
+
+def test_metadata_reads_are_o_live_not_o_history(spark, tmp_path, monkeypatch):
+    """Commits and reads take the table state from the snapshot json's
+    recorded live set and summary: the snapshot jsons read by a commit, a
+    read's plan, _split_live, a continuous-aggregate refresh and its
+    watermark reads, and RollupCheckpointJob.completed() are the same
+    count after 50 and after 500 commits."""
+    import datetime
+    from changepoynt_spark.sources.continuous import (WATERMARK_PROP,
+                                                      ContinuousAggregate)
+    base = datetime.datetime(2024, 1, 1)
+    pts = spark.createDataFrame(
+        [(u, base + datetime.timedelta(minutes=7 * i), float(i))
+         for i in range(40) for u in (1, 2)], 'user_id long, ts timestamp, value double')
+
+    def counts(n):
+        root = tmp_path / f'n{n}'
+        job = RollupCheckpointJob(str(root / 'blocks'), n_buckets=8)
+        t = job.table
+        t.append(pts, partition_by=())
+        t.delete_keys(pts.filter('user_id = 2 and value < 3'), ['user_id', 'value'])
+        schema = pts.schema.jsonValue()
+        _grow(t, n, lambda i: {'bucket': i % 8, 'fingerprint': i}, schema)
+        raw = IcebergishTable(str(root / 'raw'))
+        raw.append(pts.filter('value < 20'), partition_by=())
+        _grow(raw, n, lambda i: {}, schema)
+        ca = ContinuousAggregate(raw, str(root / 'tier'), ['user_id'],
+                                 interval='1 hour', partition_by=(),
+                                 auto_compact_snapshots=None)
+        tier_schema = ca._partial(pts).schema.jsonValue()
+        through = raw.current_snapshot_id()
+        _grow(ca.tier, n, lambda i: {
+            WATERMARK_PROP: through, 'stream_batch_id': i,
+            'rollup_watermark': str(base + datetime.timedelta(hours=i % 5))},
+            tier_schema)
+        raw.append(pts.filter('value >= 20'), partition_by=())
+
+        reads = []
+        orig = IcebergishTable.snapshot
+
+        def counting(self, snapshot_id=None):
+            reads.append(snapshot_id)
+            return orig(self, snapshot_id)
+        monkeypatch.setattr(IcebergishTable, 'snapshot', counting)
+        out = {}
+        ops = {
+            '_commit': lambda: _grow(t, 1, lambda i: {'bucket': 0}, schema),
+            'read': lambda: t.read(spark),
+            '_split_live': lambda: t._split_live(t.current_snapshot_id()),
+            'refresh': lambda: ca.refresh(spark),
+            'rollup_watermark': ca.rollup_watermark,
+            '_max_stream_batch_id': ca._max_stream_batch_id,
+            'completed': job.completed,
+        }
+        for name, op in ops.items():
+            del reads[:]
+            op()
+            out[name] = len(reads)
+        monkeypatch.setattr(IcebergishTable, 'snapshot', orig)
+        assert sorted(job.completed()) == list(range(8))
+        assert ca._max_stream_batch_id() == n - 1
+        assert t.read(spark).count() == pts.count() - 3
+        return out
+
+    small, large = counts(50), counts(500)
+    assert small == large, (small, large)
