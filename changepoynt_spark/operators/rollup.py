@@ -13,10 +13,10 @@ Scale design notes:
 - groupBy(keys, window) is one hash-aggregate shuffle per tier keyed by
   (series, bucket) — the unavoidable minimum. AQE coalesces the post-shuffle
   partitions.
-- Gap-fill generates the time spine per key natively (sequence + explode) and
-  left-joins observed buckets on the same (key, bucket) partitioning, so the
-  join reuses the rollup's shuffle keys; LOCF/linear fill is native running
-  window expressions (bit-matches np.interp; no Python grouped-map).
+- Gap-fill windows and sorts only the observed buckets (one key-hash
+  exchange); each gap is generated once, by one explode per observed row,
+  with its LOCF/linear fill computed from running-window anchors
+  (bit-matches np.interp; no Python grouped-map, no spine join).
 """
 from __future__ import annotations
 
@@ -108,21 +108,10 @@ def rollup_cascade(df: DataFrame, keys, ts_col: str = 'ts', value_col: str = 'va
 # gap fill
 # ---------------------------------------------------------------------------
 
-def time_spine(df: DataFrame, keys, bucket_col: str = 'bucket_start',
-               interval_seconds: int = 60) -> DataFrame:
-    """Per-key dense bucket spine from min to max observed bucket, generated
-    natively (sequence + explode — no driver loop, no UDF)."""
-    keys = list(keys)
-    bounds = df.groupBy(*keys).agg(F.min(bucket_col).alias('_lo'), F.max(bucket_col).alias('_hi'))
-    return bounds.select(
-        *keys,
-        F.explode(F.sequence('_lo', '_hi',
-                             F.expr(f'INTERVAL {interval_seconds} SECOND'))).alias(bucket_col))
-
-
 def gap_fill(df: DataFrame, keys, value_cols=('avg_value',), bucket_col: str = 'bucket_start',
              interval_seconds: int = 60, method: str = 'linear') -> DataFrame:
-    """Join the dense spine against observed buckets and fill the holes.
+    """Densify each key's buckets from its first to its last observed one
+    and fill the holes.
 
     method: 'null' (leave missing), 'locf' (last observation carried
     forward), 'linear' (interpolation between observed buckets; ends stay at
@@ -134,36 +123,24 @@ def gap_fill(df: DataFrame, keys, value_cols=('avg_value',), bucket_col: str = '
     would materialize a key's entire multi-year history in one pandas frame:
     the JVM window operator is spillable, so a decade-long 1m series fills
     without a 5M-row Python group.
+
+    Contract: observed buckets lie on the global ``interval_seconds`` grid
+    (epoch-floor rollup buckets, before or after 1970); an off-grid bucket
+    raises.
     """
     if method not in ('null', 'locf', 'linear'):
         raise ValueError(f"gap_fill method must be 'null', 'locf' or 'linear', got {method!r}")
     keys = list(keys)
     value_cols = list(value_cols)
-    if method == 'null':
-        spine = time_spine(df, keys, bucket_col, interval_seconds)
-        observed = df.select(*keys, bucket_col, *value_cols,
-                             F.lit(False).alias('is_gap'))
-        return (spine.join(observed, on=keys + [bucket_col], how='left')
-                     .withColumn('is_gap', F.coalesce('is_gap', F.lit(True))))
 
-    # SEGMENT form (r9): every window/sort/join runs over the OBSERVED rows
-    # only; the dense spine exists solely inside one Generate (explode) that
-    # emits each inter-observation gap with its fill value computed
-    # arithmetically.  The round-2..8 form materialized the full spine
-    # first and then sorted/windowed it twice — at a 1000x gap ratio that
-    # is 1000x more rows through every exchange, sort and window frame
-    # (guide §2.3/§2.4: decide on the small rows, generate the heavy rows
-    # once).  Fill values are BIT-identical: anchors are the same last/
-    # first-non-null observations, and the lerp abscissa differences are
-    # the same exact small-integer doubles (positions shift by a per-key
-    # constant, which subtraction cancels exactly), so the float expression
-    # sees identical operands — asserted against np.interp and the
-    # streaming twin in tests.
-    #
-    # Contract note (unchanged for every engine caller): observed buckets
-    # lie on the global interval grid (epoch-floor rollup buckets).  The
-    # old spine-join silently DROPPED off-grid observations; the segment
-    # form keeps an off-grid row as its own k=0 emission.
+    # SEGMENT form: every window/sort runs over the OBSERVED rows only; the
+    # dense spine exists solely inside one Generate (explode) that emits
+    # each inter-observation gap with its fill value computed
+    # arithmetically, so a 1000x gap ratio never means 1000x more rows
+    # through an exchange, sort or window frame.  Linear fills bit-match
+    # np.interp and the streaming twin: positions shift by a per-key
+    # constant, which the lerp's subtractions cancel exactly (asserted in
+    # tests).
     from pyspark.sql import Window
 
     # Explicit key-hash exchange before the windows: the observed table is
@@ -172,11 +149,17 @@ def gap_fill(df: DataFrame, keys, value_cols=('avg_value',), bucket_col: str = '
     # core; the windows reuse this partitioning (no second exchange).
     n_part = int(df.sparkSession.conf.get('spark.sql.shuffle.partitions', '200'))
     step_us = int(interval_seconds) * 1_000_000
+    us = f'unix_micros(cast(`{bucket_col}` as timestamp))'
+    # grid position; every row evaluates the grid check, so an off-grid
+    # bucket fails the query instead of becoming its own emission
+    off_grid = F.raise_error(F.concat(
+        F.lit(f'gap_fill: {bucket_col} '), F.col(bucket_col).cast('string'),
+        F.lit(f' is off the {int(interval_seconds)}-second grid')))
+    x = (F.when(F.expr(f'{us} % {step_us}') != 0, off_grid)
+          .otherwise(F.expr(f'div({us}, {step_us})')).cast('double'))
     obs = (df.select(*keys, bucket_col, *value_cols)
              .repartition(n_part, *keys)
-             .withColumn('_x', F.expr(
-                 f'div(unix_micros(cast(`{bucket_col}` as timestamp)), '
-                 f'{step_us})').cast('double')))
+             .withColumn('_x', x))
     order = Window.partitionBy(*keys).orderBy(bucket_col)
     order_desc = Window.partitionBy(*keys).orderBy(F.col(bucket_col).desc())
     w_prev = order.rowsBetween(Window.unboundedPreceding, 0)
@@ -184,15 +167,13 @@ def gap_fill(df: DataFrame, keys, value_cols=('avg_value',), bucket_col: str = '
     # sort — first(...).over(UNBOUNDED FOLLOWING) recomputes the frame per
     # row, O(n^2) per key (measured 24/79/314 s at 20/40/80 k buckets)
     w_next = order_desc.rowsBetween(Window.unboundedPreceding, 0)
-    acols = []
-    for col in value_cols:
+    for col in value_cols if method != 'null' else ():
         v = F.col(col)
         nn_x = F.when(v.isNotNull(), F.col('_x'))
         obs = (obs.withColumn(f'_pa_{col}',
                               F.last(v, ignorenulls=True).over(w_prev))
                   .withColumn(f'_pax_{col}',
                               F.last(nn_x, ignorenulls=True).over(w_prev)))
-        acols += [f'_pa_{col}', f'_pax_{col}']
         if method == 'linear':
             obs = (obs.withColumn(f'_na_{col}',
                                   F.last(v, ignorenulls=True).over(w_next))
@@ -204,18 +185,18 @@ def gap_fill(df: DataFrame, keys, value_cols=('avg_value',), bucket_col: str = '
                                   F.lead(f'_na_{col}').over(order))
                       .withColumn(f'_nnax_{col}',
                                   F.lead(f'_nax_{col}').over(order)))
-            acols += [f'_na_{col}', f'_nax_{col}', f'_nna_{col}', f'_nnax_{col}']
     obs = obs.withColumn('_nx', F.lead('_x').over(order))
-    gap_len = F.when(F.col('_nx').isNotNull(),
-                     F.greatest((F.col('_nx') - F.col('_x')).cast('long'),
-                                F.lit(1))).otherwise(F.lit(1))
+    # greatest() skips nulls: a key's last row emits just itself
+    gap_len = F.greatest((F.col('_nx') - F.col('_x')).cast('long'), F.lit(1))
     out = obs.withColumn(
         '_k', F.explode(F.sequence(F.lit(0).cast('long'), gap_len - 1)))
     fill_exprs = []
     for col in value_cols:
         v = F.col(col)
         pa, pax = F.col(f'_pa_{col}'), F.col(f'_pax_{col}')
-        if method == 'locf':
+        if method == 'null':
+            filled = F.when(F.col('_k') == 0, v)
+        elif method == 'locf':
             filled = F.when(F.col('_k') == 0, F.coalesce(v, pa)).otherwise(pa)
         else:
             na_s, nax_s = F.col(f'_na_{col}'), F.col(f'_nax_{col}')
@@ -585,9 +566,9 @@ def dd_sketch_rows(df: DataFrame, keys, ts_col: str = 'ts',
 
 
 def dd_rows_merge(rows: DataFrame, keys, interval: str = None) -> DataFrame:
-    """Merge DD exchange rows by bucket-count addition — the exchange-row
-    twin of :func:`dd_sketch_merge` (commutative + exact, so merge-on-read
-    piles and cascade steps are both just this one aggregate).  With
+    """Merge DD exchange rows by bucket-count addition (commutative +
+    exact, so merge-on-read piles, cascade steps and
+    :func:`dd_sketch_merge` are all just this one aggregate).  With
     ``interval``, rows fold into COARSER buckets (the cascade/hierarchical
     step); without, same-bucket rows from different snapshots collapse."""
     keys = list(keys)
@@ -639,40 +620,24 @@ def dd_sketch_from_points(df: DataFrame, keys, ts_col: str = 'ts',
                                             interval), keys)
 
 
-def _dd_merge_map(col: str):
-    """Merge map<int,long> histograms by key-wise addition: explode to
-    entries, re-aggregate.  Returns the exploded (idx, cnt) projection
-    helper used by dd_sketch_merge."""
-    return F.explode_outer(F.map_entries(col))
-
-
 def dd_sketch_merge(df: DataFrame, keys, interval: str = '1 day') -> DataFrame:
     """Cascade step: finer quantile sketches into coarser buckets by
     bucket-count addition — the quantile twin of sketch_rollup_merge.
+    The sketch maps go back to exchange rows (a zero row carries
+    ``zero_cnt``), so the merge is :func:`dd_rows_merge` itself.
     Identical to sketching the raw points directly (asserted in tests)."""
     keys = list(keys)
-    w = F.window('bucket_start', interval).alias('w')
 
-    def side(col):
-        ex = (df.select(*keys, w, _dd_merge_map(col).alias('e'))
-                .groupBy(*keys, 'w', F.col('e.key').alias('_idx'))
-                .agg(F.sum('e.value').alias('_cnt')))
-        return (ex.filter(F.col('_idx').isNotNull())
-                  .groupBy(*keys, 'w')
-                  .agg(F.map_from_entries(F.sort_array(F.collect_list(
-                      F.struct('_idx', '_cnt')))).alias(col)))
+    def rows(col, sgn):
+        return F.transform(F.map_entries(col), lambda e: F.struct(
+            F.lit(sgn).alias('_sgn'), e['key'].alias('_idx'),
+            e['value'].alias('_cnt')))
 
-    base = (df.groupBy(*keys, w)
-              .agg(F.sum('zero_cnt').alias('zero_cnt'),
-                   F.sum('n_points').alias('n_points')))
-    out = base.join(side('pos_sketch'), [*keys, 'w'], 'left') \
-              .join(side('neg_sketch'), [*keys, 'w'], 'left')
-    empty = F.map_from_entries(F.array().cast('array<struct<_idx:int,_cnt:bigint>>'))
-    return (out.withColumn('bucket_start', F.col('w.start')).drop('w')
-               .withColumn('pos_sketch', F.coalesce('pos_sketch', empty))
-               .withColumn('neg_sketch', F.coalesce('neg_sketch', empty))
-               .select(*keys, 'bucket_start', 'zero_cnt', 'pos_sketch',
-                       'neg_sketch', 'n_points'))
+    zero = F.array(F.struct(F.lit(0).alias('_sgn'), F.lit(0).alias('_idx'),
+                            F.col('zero_cnt').cast('long').alias('_cnt')))
+    ex = df.select(*keys, 'bucket_start', F.inline(F.concat(
+        zero, rows('pos_sketch', 1), rows('neg_sketch', -1))))
+    return dd_rows_to_sketch(dd_rows_merge(ex, keys, interval), keys)
 
 
 def dd_sketch_quantiles(df: DataFrame, keys, qs=(0.5, 0.95, 0.99)) -> DataFrame:

@@ -78,6 +78,8 @@ class RollupCheckpointJob:
                 'kernel_version': KERNEL_VERSION}
 
     def pending_buckets(self, tokens: DataFrame) -> list:
+        """[(bucket, fingerprint, stale snapshot id or None)] for every
+        bucket to (re)process; reprocessing replaces the stale snapshot."""
         done = self.completed()
         bucketed = with_bucket(tokens, self.n_buckets)
         fps = all_bucket_fingerprints(bucketed, self.n_buckets)  # one Spark job
@@ -92,19 +94,17 @@ class RollupCheckpointJob:
             if rec and rec.get('fingerprint') == fp and \
                     all(rec.get(k) == v for k, v in cur.items()):
                 continue
-            pending.append((b, fp))
+            pending.append((b, fp, rec['snapshot_id'] if rec else None))
         return pending
 
     def run(self, spark: SparkSession, tokens: DataFrame, max_buckets: int = None) -> dict:
         """Process pending buckets (optionally capped — lets tests simulate a
         crash mid-job).  Returns {'processed': [...], 'skipped': [...]}."""
         pending = self.pending_buckets(tokens)
-        done = self.completed()
-        skipped = [b for b in range(self.n_buckets) if b in done and
-                   b not in [p[0] for p in pending]]
+        skipped = sorted(set(range(self.n_buckets)) - {p[0] for p in pending})
         processed = []
         bucketed = with_bucket(tokens, self.n_buckets)
-        for b, fp in pending[:max_buckets]:
+        for b, fp, stale in pending[:max_buckets]:
             sub = bucketed.filter(F.col(BUCKET_COL) == b)
             blocks = score_rollup(sub.drop(BUCKET_COL), algorithm=self.algorithm,
                                   params=self.params, output='blocks')
@@ -113,10 +113,9 @@ class RollupCheckpointJob:
             obs = Observation()
             blocks = (blocks.withColumn(BUCKET_COL, F.lit(b))
                       .observe(obs, F.max('block_start').alias('wm')))
-            stale = done.get(b)  # reprocessing a changed bucket replaces its snapshot
             self.table.append(
                 blocks, partition_by=('source', BUCKET_COL, 'tier'),
-                invalidates=[stale['snapshot_id']] if stale else (),
+                invalidates=[stale] if stale is not None else (),
                 properties={'bucket': b, 'fingerprint': fp, **self._props_current()},
                 properties_fn=lambda obs=obs: {'watermark': str(obs.get['wm'])})
             processed.append(b)

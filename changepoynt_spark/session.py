@@ -4,10 +4,13 @@ Arrow on (all kernel execution crosses the JVM->Python boundary as Arrow
 batches), AQE on (runtime skew-join/partition coalescing), shuffle
 partitions sized for the local harness but overridable for cluster runs.
 ``release`` frees the blocks of a cached or localCheckpoint'ed frame.
+The ``jobs/`` entries share the job lifecycle below (a streaming job is its
+``build_stream`` plus a sink and a trigger).
 """
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -64,3 +67,30 @@ def release(df: DataFrame) -> None:
     if plan.getClass().getSimpleName() == 'LogicalRDD':
         plan.rdd().unpersist(False)
     df.unpersist()
+
+
+def job_session(spark: SparkSession = None, app_name: str = 'changepoynt-spark'):
+    """A job's session as a context manager: ``spark=None`` (spark-submit)
+    creates one, which the ``with`` block stops on exit (SparkSession's own
+    ``__exit__``); an injected session (pytest, a driver) is left running."""
+    return nullcontext(spark) if spark is not None else get_spark(app_name=app_name)
+
+
+def parquet_stream(spark: SparkSession, path: str) -> DataFrame:
+    """readStream over a parquet dir; a file stream needs its schema up
+    front, so it is taken from the files already there."""
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+
+
+def run_stream(writer, checkpoint: str, available_now: bool) -> None:
+    """Start a checkpointed streaming query: ``available_now`` drains the
+    current input and returns; otherwise the query runs until killed."""
+    writer = writer.option('checkpointLocation', checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    writer.start().awaitTermination()
+
+
+def comma_list(value: str) -> list:
+    """argparse ``type`` of a comma-separated flag: 'a, b,' -> ['a', 'b']."""
+    return [v.strip() for v in value.split(',') if v.strip()]

@@ -88,11 +88,12 @@ def streaming_gap_fill(tier_stream: DataFrame, keys, value_cols=('avg_value',),
     stream (the append-mode output of ``rollup_from_points`` over
     :func:`watermarked`, e.g. its parquet sink re-read as a stream).
 
-    The batch operator joins a per-key dense spine and fills with running
-    window frames; the streaming form is the same recurrence as per-key
-    state: state holds the last observed bucket and its values, and when the
-    next observed bucket arrives every missing bucket strictly between them
-    is emitted with ``is_gap=true`` and the fill value —
+    The batch operator explodes each gap after an observed bucket and fills
+    it from running-window anchors; the streaming form is the same
+    recurrence as per-key state: state holds the last observed bucket and
+    its values, and when the next observed bucket arrives every missing
+    bucket strictly between them is emitted with ``is_gap=true`` and the
+    fill value —
 
     * ``locf``   — the stored previous value,
     * ``linear`` — ``v0 + (v1 - v0) / dx * di`` in IEEE-double op order,

@@ -26,6 +26,8 @@ from __future__ import annotations
 import argparse
 import json
 
+from changepoynt_spark.session import comma_list, job_session
+
 
 def read_tier(spark, table, keys):
     """Merge-on-read view of a partial tier table -> finalized tier."""
@@ -37,23 +39,19 @@ def main(argv=None, spark=None):
     p = argparse.ArgumentParser()
     p.add_argument('--table', required=True, help='Iceberg-style tier table root')
     p.add_argument('--late', required=True, help='parquet of late/new raw points')
-    p.add_argument('--keys', default='user_id', help='comma-separated series keys')
+    p.add_argument('--keys', default='user_id', type=comma_list,
+                   help='comma-separated series keys')
     p.add_argument('--ts-col', default='ts')
     p.add_argument('--value-col', default='value')
     p.add_argument('--interval', default='1 minute')
     p.add_argument('--compact', action='store_true',
                    help='also merge all live snapshots into one (rewrite)')
     args = p.parse_args(argv)
-    keys = [k for k in args.keys.split(',') if k]
 
     from changepoynt_spark.operators.rollup import merge_partials, rollup_partial
-    from changepoynt_spark.session import get_spark
     from changepoynt_spark.sources.tables import IcebergishTable
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name='changepoynt-backfill-job')
-    try:
+    with job_session(spark, 'changepoynt-backfill-job') as spark:
         table = IcebergishTable(args.table)
         done = {props.get('input') for props in table.properties_by_snapshot().values()}
         if args.late in done:
@@ -62,7 +60,7 @@ def main(argv=None, spark=None):
                        'snapshot': table.current_snapshot_id()}
         else:
             late = spark.read.parquet(args.late)
-            part = rollup_partial(late, keys, ts_col=args.ts_col,
+            part = rollup_partial(late, args.keys, ts_col=args.ts_col,
                                   value_col=args.value_col, interval=args.interval)
             snap = table.append(part, partition_by=None,
                                 properties={'input': args.late,
@@ -72,7 +70,7 @@ def main(argv=None, spark=None):
                        'rows_appended': snap['manifest']['row_count']}
         if args.compact:
             live = table.read(spark)
-            merged = merge_partials(live, keys)
+            merged = merge_partials(live, args.keys)
             prev = table._live_snapshots(table.current_snapshot_id())
             snap = table.append(merged, partition_by=None,
                                 properties={'kind': 'compaction',
@@ -82,9 +80,6 @@ def main(argv=None, spark=None):
             summary['rows_after_compaction'] = snap['manifest']['row_count']
         print(json.dumps(summary))
         return 0
-    finally:
-        if own_session:
-            spark.stop()
 
 
 if __name__ == '__main__':

@@ -31,12 +31,15 @@ import argparse
 import json
 import sys
 
+from changepoynt_spark.session import comma_list, job_session
+
 
 def main(argv=None, spark=None):
     p = argparse.ArgumentParser()
     p.add_argument('--raw', required=True, help='Iceberg-style raw points table root')
     p.add_argument('--tier', required=True, help='Iceberg-style tier table root')
-    p.add_argument('--keys', default='user_id', help='comma-separated series keys')
+    p.add_argument('--keys', default='user_id', type=comma_list,
+                   help='comma-separated series keys')
     p.add_argument('--ts-col', default='ts')
     p.add_argument('--value-col', default='value')
     p.add_argument('--interval', default='1 hour')
@@ -66,17 +69,12 @@ def main(argv=None, spark=None):
         if retention is None:
             p.error(f'bad --raw-retention {args.raw_retention!r}')
 
-    from changepoynt_spark.session import get_spark
     from changepoynt_spark.sources.continuous import ContinuousAggregate
     from changepoynt_spark.sources.tables import IcebergishTable
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name='changepoynt-continuous-agg')
-    try:
-        keys = [k for k in args.keys.split(',') if k]
+    with job_session(spark, 'changepoynt-continuous-agg') as spark:
         raw = IcebergishTable(args.raw)
-        ca = ContinuousAggregate(raw, args.tier, keys, ts_col=args.ts_col,
+        ca = ContinuousAggregate(raw, args.tier, args.keys, ts_col=args.ts_col,
                                  value_col=args.value_col,
                                  interval=args.interval, partition_by=(),
                                  agg_form=args.agg_form,
@@ -109,9 +107,6 @@ def main(argv=None, spark=None):
         }
         print(json.dumps(summary))
         return 0
-    finally:
-        if own_session:
-            spark.stop()
 
 
 if __name__ == '__main__':

@@ -25,6 +25,8 @@ import argparse
 import json
 import sys
 
+from changepoynt_spark.session import job_session
+
 
 def _write_text(spark, path: str, content: str) -> None:
     """Write a small text file via the Hadoop FileSystem of ``path``'s URI
@@ -55,60 +57,55 @@ def main(argv=None, spark=None):
 
     from pyspark.sql import functions as F
     from changepoynt_spark.operators import dedup
-    from changepoynt_spark.session import get_spark
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name='changepoynt-dedup-job')
     docs = exact_survivors = None
-    try:
-        docs = spark.read.parquet(args.input)
-        par = spark.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            docs = docs.repartition(par)
-        docs = docs.cache()
-        n_input = docs.count()
+    with job_session(spark, 'changepoynt-dedup-job') as spark:
+        try:
+            docs = spark.read.parquet(args.input)
+            par = spark.sparkContext.defaultParallelism
+            if docs.rdd.getNumPartitions() < par:
+                docs = docs.repartition(par)
+            docs = docs.cache()
+            n_input = docs.count()
 
-        # 1. exact dedup (to count the stage separately)
-        keep_exact = (docs.groupBy(F.md5('text').alias('_h'))
-                          .agg(F.min('doc_id').alias('doc_id')))
-        exact_survivors = docs.join(keep_exact.select('doc_id'), 'doc_id', 'left_semi') \
-                              .cache()
-        n_exact = exact_survivors.count()
+            # 1. exact dedup (to count the stage separately)
+            keep_exact = (docs.groupBy(F.md5('text').alias('_h'))
+                              .agg(F.min('doc_id').alias('doc_id')))
+            exact_survivors = docs.join(keep_exact.select('doc_id'), 'doc_id', 'left_semi') \
+                                  .cache()
+            n_exact = exact_survivors.count()
 
-        # 2.-3. near-dup candidates + clustering + representative selection
-        # (the same composition as dedup.dedupe_corpus, staged here so the
-        # report can attribute drops per stage)
-        pairs = dedup.minhash_lsh_pairs(exact_survivors, num_hashes=args.num_hashes,
-                                        bands=args.bands, n=args.ngram,
-                                        threshold=args.threshold)
-        clusters = dedup.dup_clusters(pairs)
-        drop_near = clusters.filter(F.col('doc_id') != F.col('cluster_id')) \
-                            .select('doc_id')
-        survivors = exact_survivors.join(drop_near, 'doc_id', 'left_anti')
+            # 2.-3. near-dup candidates + clustering + representative selection
+            # (the same composition as dedup.dedupe_corpus, staged here so the
+            # report can attribute drops per stage)
+            pairs = dedup.minhash_lsh_pairs(exact_survivors, num_hashes=args.num_hashes,
+                                            bands=args.bands, n=args.ngram,
+                                            threshold=args.threshold)
+            clusters = dedup.dup_clusters(pairs)
+            drop_near = clusters.filter(F.col('doc_id') != F.col('cluster_id')) \
+                                .select('doc_id')
+            survivors = exact_survivors.join(drop_near, 'doc_id', 'left_anti')
 
-        survivors.write.mode('overwrite').parquet(args.output)
-        n_out = spark.read.parquet(args.output).count()
-        report = {
-            'input_docs': n_input,
-            'exact_dups_dropped': n_input - n_exact,
-            'near_dups_dropped': n_exact - n_out,
-            'surviving_docs': n_out,
-            'threshold': args.threshold,
-        }
-        # write through the Hadoop FileSystem API so the report lands next to
-        # the parquet under ANY --output scheme (hdfs://, s3a://, file:/...),
-        # not on the driver's local disk
-        _write_text(spark, f'{args.output}_report.json',
-                    json.dumps(report, indent=1))
-        print(json.dumps(report))
-        return report
-    finally:
-        for cached in (docs, exact_survivors):
-            if cached is not None:
-                cached.unpersist()
-        if own_session:
-            spark.stop()
+            survivors.write.mode('overwrite').parquet(args.output)
+            n_out = spark.read.parquet(args.output).count()
+            report = {
+                'input_docs': n_input,
+                'exact_dups_dropped': n_input - n_exact,
+                'near_dups_dropped': n_exact - n_out,
+                'surviving_docs': n_out,
+                'threshold': args.threshold,
+            }
+            # write through the Hadoop FileSystem API so the report lands next to
+            # the parquet under ANY --output scheme (hdfs://, s3a://, file:/...),
+            # not on the driver's local disk
+            _write_text(spark, f'{args.output}_report.json',
+                        json.dumps(report, indent=1))
+            print(json.dumps(report))
+            return report
+        finally:
+            for cached in (docs, exact_survivors):
+                if cached is not None:
+                    cached.unpersist()
 
 
 if __name__ == '__main__':

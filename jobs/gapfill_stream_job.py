@@ -30,6 +30,9 @@ from __future__ import annotations
 
 import argparse
 
+from changepoynt_spark.session import (comma_list, job_session, parquet_stream,
+                                       run_stream)
+
 
 def build_stream(spark, input_path: str, keys, value_cols,
                  bucket_col: str = 'bucket_start',
@@ -38,8 +41,7 @@ def build_stream(spark, input_path: str, keys, value_cols,
     shared by main() and the tests (the ingest job's pattern)."""
     from pyspark.sql import functions as F
     from changepoynt_spark.streaming.rollup_stream import streaming_gap_fill
-    schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
+    stream = parquet_stream(spark, input_path)
     # the fill contract is double arithmetic (bit-matching the batch window
     # expressions); tiers that store decimals are cast on the way in
     stream = stream.select(
@@ -58,9 +60,9 @@ def main(argv=None, spark=None):
                     help='closed-bucket tier directory (parquet)')
     ap.add_argument('--output', required=True)
     ap.add_argument('--checkpoint', required=True)
-    ap.add_argument('--keys', default='user_id',
+    ap.add_argument('--keys', default='user_id', type=comma_list,
                     help='comma-separated key columns')
-    ap.add_argument('--value-cols', default='avg_value',
+    ap.add_argument('--value-cols', default='avg_value', type=comma_list,
                     help='comma-separated value columns to fill')
     ap.add_argument('--bucket-col', default='bucket_start')
     ap.add_argument('--interval-seconds', type=int, default=60)
@@ -69,28 +71,14 @@ def main(argv=None, spark=None):
     ap.add_argument('--available-now', action='store_true',
                     help='drain the current input and stop')
     args = ap.parse_args(argv)
-    keys = [k.strip() for k in args.keys.split(',') if k.strip()]
-    value_cols = [c.strip() for c in args.value_cols.split(',') if c.strip()]
 
-    own_session = spark is None
-    if own_session:
-        from changepoynt_spark.session import get_spark
-        spark = get_spark(app_name='gapfill-stream')
-    try:
-        dense = build_stream(spark, args.input, keys, value_cols,
+    with job_session(spark, 'gapfill-stream') as spark:
+        dense = build_stream(spark, args.input, args.keys, args.value_cols,
                              args.bucket_col, args.interval_seconds,
                              args.method)
-        writer = (dense.writeStream.outputMode('append').format('parquet')
-                  .option('path', args.output)
-                  .option('checkpointLocation', args.checkpoint))
-        if args.available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            writer.start().awaitTermination()
-    finally:
-        if own_session:
-            spark.stop()
+        run_stream(dense.writeStream.outputMode('append').format('parquet')
+                   .option('path', args.output),
+                   args.checkpoint, args.available_now)
 
 
 if __name__ == '__main__':

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import argparse
 
+from changepoynt_spark.session import job_session, parquet_stream, run_stream
+
 
 def build_stream(spark, input_path: str, quality_threshold: float = 0.5,
                  watermark: str = '10 minutes', ts_col: str = 'ts',
@@ -38,8 +40,7 @@ def build_stream(spark, input_path: str, quality_threshold: float = 0.5,
     from changepoynt_spark.operators.text import quality_score_linear
     from changepoynt_spark.streaming.dedup_stream import streaming_exact_dedup
 
-    schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
+    stream = parquet_stream(spark, input_path)
     if ts_col not in stream.columns:
         stream = stream.withColumn(ts_col, F.current_timestamp())
     weights = list(np.random.default_rng(weights_seed).standard_normal(dim))
@@ -64,25 +65,13 @@ def main(argv=None, spark=None):
                          'of the streaming pipeline; otherwise runs forever)')
     args = ap.parse_args(argv)
 
-    own_session = spark is None
-    if own_session:
-        from changepoynt_spark.session import get_spark
-        spark = get_spark(app_name='ingest-stream')
-    try:
+    with job_session(spark, 'ingest-stream') as spark:
         clean = build_stream(spark, args.input, args.quality_threshold,
                              args.watermark, args.ts_col,
                              args.weights_seed, args.dim)
-        writer = (clean.writeStream.outputMode('append').format('parquet')
-                  .option('path', args.output)
-                  .option('checkpointLocation', args.checkpoint))
-        if args.available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            writer.start().awaitTermination()
-    finally:
-        if own_session:
-            spark.stop()
+        run_stream(clean.writeStream.outputMode('append').format('parquet')
+                   .option('path', args.output),
+                   args.checkpoint, args.available_now)
 
 
 if __name__ == '__main__':

@@ -21,10 +21,10 @@ import argparse
 import json
 import sys
 
+from changepoynt_spark.session import job_session
+
 
 def main(argv=None, spark=None):
-    """``spark=None`` (spark-submit) creates and owns a session; an injected
-    session (pytest) is left running for the caller."""
     p = argparse.ArgumentParser()
     p.add_argument('--input', help='tokens parquet path (doc_id, tokens, n_tok, source)')
     p.add_argument('--synth-docs', type=int, default=0,
@@ -41,13 +41,8 @@ def main(argv=None, spark=None):
         p.error('need --input or --synth-docs')
 
     from changepoynt_spark.plans.checkpoint import RollupCheckpointJob
-    from changepoynt_spark.session import get_spark
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name='changepoynt-rollup-job')
-    tokens = None
-    try:
+    with job_session(spark, 'changepoynt-rollup-job') as spark:
         if args.synth_docs:
             from changepoynt_spark.sources.datagen import tokens_table_distributed
             tokens = tokens_table_distributed(spark, n_docs=args.synth_docs,
@@ -61,24 +56,22 @@ def main(argv=None, spark=None):
             else:
                 tokens = spark.read.parquet(args.input)
         tokens = tokens.cache()
-        job = RollupCheckpointJob(args.output, n_buckets=args.buckets,
-                                  algorithm=args.algorithm,
-                                  params=json.loads(args.params))
-        result = job.run(spark, tokens, max_buckets=args.max_buckets)
-        summary = {
-            'processed': result['processed'],
-            'skipped': result['skipped'],
-            'remaining': result['remaining'],
-            'snapshots': job.table.current_snapshot_id() + 1,
-            'watermarks': {k: v.get('watermark') for k, v in job.completed().items()},
-        }
-        print(json.dumps(summary))
-        return 0
-    finally:
-        if tokens is not None:
+        try:
+            job = RollupCheckpointJob(args.output, n_buckets=args.buckets,
+                                      algorithm=args.algorithm,
+                                      params=json.loads(args.params))
+            result = job.run(spark, tokens, max_buckets=args.max_buckets)
+            summary = {
+                'processed': result['processed'],
+                'skipped': result['skipped'],
+                'remaining': result['remaining'],
+                'snapshots': job.table.current_snapshot_id() + 1,
+                'watermarks': {k: v.get('watermark') for k, v in job.completed().items()},
+            }
+            print(json.dumps(summary))
+            return 0
+        finally:
             tokens.unpersist()
-        if own_session:
-            spark.stop()
 
 
 if __name__ == '__main__':

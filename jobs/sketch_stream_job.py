@@ -22,6 +22,9 @@ from __future__ import annotations
 
 import argparse
 
+from changepoynt_spark.session import (comma_list, job_session, parquet_stream,
+                                       run_stream)
+
 
 def build_stream(spark, input_path: str, keys, interval: str = '1 hour',
                  watermark: str = '2 minutes', ts_col: str = 'ts',
@@ -31,8 +34,7 @@ def build_stream(spark, input_path: str, keys, interval: str = '1 hour',
     job's pattern)."""
     from changepoynt_spark.operators.rollup import dd_sketch_rows
     from changepoynt_spark.streaming.rollup_stream import watermarked
-    schema = spark.read.parquet(input_path).schema
-    stream = spark.readStream.schema(schema).parquet(input_path)
+    stream = parquet_stream(spark, input_path)
     return dd_sketch_rows(watermarked(stream, ts_col, watermark),
                           keys=list(keys), ts_col=ts_col,
                           value_col=value_col, interval=interval)
@@ -53,7 +55,7 @@ def main(argv=None, spark=None):
     ap.add_argument('--input', required=True)
     ap.add_argument('--output', required=True)
     ap.add_argument('--checkpoint', required=True)
-    ap.add_argument('--keys', default='user_id',
+    ap.add_argument('--keys', default='user_id', type=comma_list,
                     help='comma-separated key columns')
     ap.add_argument('--interval', default='1 hour')
     ap.add_argument('--watermark', default='2 minutes')
@@ -65,29 +67,16 @@ def main(argv=None, spark=None):
                     help='with --available-now: also write the assembled '
                          'quantile view here (batch post-pass)')
     args = ap.parse_args(argv)
-    keys = [k.strip() for k in args.keys.split(',') if k.strip()]
 
-    own_session = spark is None
-    if own_session:
-        from changepoynt_spark.session import get_spark
-        spark = get_spark(app_name='sketch-stream')
-    try:
-        rows = build_stream(spark, args.input, keys, args.interval,
+    with job_session(spark, 'sketch-stream') as spark:
+        rows = build_stream(spark, args.input, args.keys, args.interval,
                             args.watermark, args.ts_col, args.value_col)
-        writer = (rows.writeStream.outputMode('append').format('parquet')
-                  .option('path', args.output)
-                  .option('checkpointLocation', args.checkpoint))
-        if args.available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-            if args.quantiles_output:
-                assemble_quantiles(spark, args.output, keys) \
-                    .write.mode('overwrite').parquet(args.quantiles_output)
-        else:
-            writer.start().awaitTermination()
-    finally:
-        if own_session:
-            spark.stop()
+        run_stream(rows.writeStream.outputMode('append').format('parquet')
+                   .option('path', args.output),
+                   args.checkpoint, args.available_now)
+        if args.available_now and args.quantiles_output:
+            assemble_quantiles(spark, args.output, args.keys) \
+                .write.mode('overwrite').parquet(args.quantiles_output)
 
 
 if __name__ == '__main__':

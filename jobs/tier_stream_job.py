@@ -52,6 +52,8 @@ from __future__ import annotations
 import argparse
 import json
 
+from changepoynt_spark.session import comma_list, job_session, run_stream
+
 
 def main(argv=None, spark=None):
     ap = argparse.ArgumentParser()
@@ -60,7 +62,7 @@ def main(argv=None, spark=None):
     ap.add_argument('--tier', required=True,
                     help='Iceberg-style tier table root')
     ap.add_argument('--checkpoint', required=True)
-    ap.add_argument('--keys', default='user_id')
+    ap.add_argument('--keys', default='user_id', type=comma_list)
     ap.add_argument('--ts-col', default='ts')
     ap.add_argument('--value-col', default='value')
     ap.add_argument('--interval', default='1 hour')
@@ -96,13 +98,8 @@ def main(argv=None, spark=None):
     args = ap.parse_args(argv)
     if args.transform is not None and args.source_kind == 'partial':
         ap.error('--transform applies to raw sources, not --source-kind partial')
-    keys = [k for k in args.keys.split(',') if k]
 
-    own_session = spark is None
-    if own_session:
-        from changepoynt_spark.session import get_spark
-        spark = get_spark(app_name='tier-stream')
-    try:
+    with job_session(spark, 'tier-stream') as spark:
         from changepoynt_spark.sources.continuous import ContinuousAggregate
         from changepoynt_spark.sources.tables import IcebergishTable
         from changepoynt_spark.operators.rollup import (rebucket_partials,
@@ -114,12 +111,12 @@ def main(argv=None, spark=None):
         if args.transform == 'tokens-points':
             from changepoynt_spark.operators.scoring import tokens_to_points
 
-            def transform(df, _keys=tuple(keys), _epoch=args.epoch):
+            def transform(df, _keys=tuple(args.keys), _epoch=args.epoch):
                 return tokens_to_points(df, keys=_keys, epoch=_epoch,
                                         ts_col=args.ts_col,
                                         value_col=args.value_col)
         ca = ContinuousAggregate(
-            raw, args.tier, keys,
+            raw, args.tier, args.keys,
             # a partial source's event time IS its bucket_start (used by
             # realtime reads to cut the on-the-fly tail)
             ts_col='bucket_start' if partial_src else args.ts_col,
@@ -131,37 +128,27 @@ def main(argv=None, spark=None):
             # state-free ingest: raw micro-batches roll up batch-locally in
             # the sink (through the transform hook) — no watermark, nothing
             # dropped as late, merge-on-read carries exactness
-            writer = (stream.writeStream
-                      .foreachBatch(ca.stream_sink_raw())
-                      .option('checkpointLocation', args.checkpoint))
+            writer = stream.writeStream.foreachBatch(ca.stream_sink_raw())
         else:
             if partial_src:
                 tier = rebucket_partials(
                     watermarked(stream, 'bucket_start', args.watermark_delay),
-                    keys=keys, interval=args.interval)
+                    keys=args.keys, interval=args.interval)
             else:
                 if transform is not None:
                     stream = transform(stream)
                 tier = rollup_partial(
                     watermarked(stream, args.ts_col, args.watermark_delay),
-                    keys=keys, ts_col=args.ts_col, value_col=args.value_col,
+                    keys=args.keys, ts_col=args.ts_col, value_col=args.value_col,
                     interval=args.interval)
             writer = (tier.writeStream.outputMode('append')
-                      .foreachBatch(ca.stream_sink())
-                      .option('checkpointLocation', args.checkpoint))
-        if args.available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:                                          # pragma: no cover
-            writer.start().awaitTermination()
+                      .foreachBatch(ca.stream_sink()))
+        run_stream(writer, args.checkpoint, args.available_now)
         print(json.dumps({
             'tier_snapshots': ca.tier.current_snapshot_id() + 1,
             'rollup_watermark': str(ca.rollup_watermark()),
             'stream_batch_id': ca._max_stream_batch_id(),
         }))
-    finally:
-        if own_session:
-            spark.stop()
 
 
 if __name__ == '__main__':

@@ -28,6 +28,8 @@ from __future__ import annotations
 import argparse
 import json
 
+from changepoynt_spark.session import job_session
+
 
 def main(argv=None, spark=None):
     ap = argparse.ArgumentParser()
@@ -50,11 +52,7 @@ def main(argv=None, spark=None):
 
     from pyspark.sql import functions as F
 
-    own_session = spark is None
-    if own_session:
-        from changepoynt_spark.session import get_spark
-        spark = get_spark(app_name='tokenize-job')
-    try:
+    with job_session(spark, 'tokenize-job') as spark:
         from changepoynt_spark.operators import bpe
         from changepoynt_spark.sources.tables import IcebergishTable
         docs = spark.read.parquet(args.docs)
@@ -92,9 +90,6 @@ def main(argv=None, spark=None):
             'merge_table': provenance,
         }))
         return 0
-    finally:
-        if own_session:
-            spark.stop()
 
 
 if __name__ == '__main__':

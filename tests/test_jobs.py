@@ -4,13 +4,14 @@ identical survivors) and staged drop-report counts vs a DuckDB brute-force +
 recursive-CTE oracle on the same parquet."""
 import json
 import os
+import subprocess
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                                'jobs'))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_REPO, 'jobs'))
 
 import dedup_job  # noqa: E402
 import rollup_job  # noqa: E402
@@ -651,3 +652,62 @@ def test_jobs_reject_bad_cli_input_before_committing(spark, tmp_path, job,
     assert exc.value.code == 2
     assert not os.path.exists(out) and not os.path.exists(ckpt)
     assert IcebergishTable(raw).current_snapshot_id() == 0
+
+
+def test_continuous_agg_job_strips_spaces_in_comma_list_keys(spark, tmp_path,
+                                                               capsys):
+    """Every list-valued flag goes through one parser: ``--keys 'user_id,
+    source'`` names the ``source`` column, not ``' source'`` (which
+    groupBy cannot resolve), as the sketch, SAX and gap-fill jobs always
+    accepted."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from jobs import continuous_agg_job
+    from changepoynt_spark.sources.continuous import ContinuousAggregate
+    from changepoynt_spark.sources.tables import IcebergishTable
+
+    rows = [(i % 2, 'ab'[i % 3 % 2], dt.datetime(2026, 2, 1, i % 3, i % 60),
+             float(i)) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, 'user_id long, source string, ts timestamp, value double')
+    p = str(tmp_path / 'arrive.parquet')
+    df.write.parquet(p)
+    raw_root, tier_root = str(tmp_path / 'raw'), str(tmp_path / 'tier')
+    assert continuous_agg_job.main(
+        ['--raw', raw_root, '--tier', tier_root, '--keys', 'user_id, source',
+         '--interval', '1 hour', '--ingest', p], spark=spark) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep['refresh']['mode'] == 'incremental'
+    ca = ContinuousAggregate(IcebergishTable(raw_root), tier_root,
+                             ['user_id', 'source'], interval='1 hour',
+                             partition_by=())
+    got = ca.read(spark).select('user_id', 'source', 'bucket_start',
+                                'cnt_points').collect()
+    want = (df.groupBy('user_id', 'source', F.date_trunc('hour', 'ts')
+                       .alias('bucket_start')).count().collect())
+    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
+
+
+@pytest.fixture(scope='module')
+def engine_zip(tmp_path_factory):
+    out = tmp_path_factory.mktemp('pkg') / 'engine.zip'
+    subprocess.run(['bash', os.path.join(_REPO, 'scripts', 'package.sh'),
+                    str(out)], check=True, capture_output=True)
+    return out
+
+
+@pytest.mark.parametrize('job', sorted(
+    f for f in os.listdir(os.path.join(_REPO, 'jobs')) if f.endswith('.py')))
+def test_job_runs_as_a_script_from_engine_zip(engine_zip, tmp_path, job):
+    """``spark-submit --py-files engine.zip jobs/<job>.py`` imports the
+    engine from the zip and puts ``jobs/`` itself on ``sys.path``; run each
+    job that way (outside the repo, only the zip on PYTHONPATH) up to its
+    ``--help``."""
+    env = dict(os.environ, PYTHONPATH=str(engine_zip))
+    res = subprocess.run(
+        [sys.executable, os.path.join(_REPO, 'jobs', job), '--help'],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120)
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.startswith('usage:')

@@ -150,6 +150,45 @@ def test_chunked_scoring_spreads_whale_chunks_across_tasks(spark):
     assert parts >= 8, f'whale chunks landed on only {parts} partitions'
 
 
+@pytest.mark.parametrize('day', ['2026-01-01', '1969-12-31'])
+@pytest.mark.parametrize('method', ['null', 'locf', 'linear'])
+def test_gap_fill_off_grid_bucket_raises(spark, method, day):
+    """A bucket that is not on the interval grid is out of contract for
+    every method: the query fails instead of dropping the row (the old
+    null spine join) or emitting it as its own segment."""
+    pdf = pd.DataFrame({
+        'k': ['a'] * 3,
+        'bucket_start': pd.to_datetime([f'{day} 00:00:00', f'{day} 00:01:30',
+                                        f'{day} 00:03:00']),
+        'avg_value': [1.0, 2.0, 3.0],
+    })
+    filled = rollup.gap_fill(spark.createDataFrame(pdf), keys=['k'],
+                             interval_seconds=60, method=method)
+    with pytest.raises(Exception, match='off the 60-second grid'):
+        filled.collect()
+
+
+@pytest.mark.parametrize('method, want', [
+    ('null', [1.0, 2.0, None, None, 8.0]),
+    ('locf', [1.0, 2.0, 2.0, 2.0, 8.0]),
+    ('linear', [1.0, 2.0, 4.0, 6.0, 8.0]),
+])
+def test_gap_fill_pre_1970_series_crossing_the_epoch(spark, method, want):
+    pdf = pd.DataFrame({
+        'k': ['a'] * 3,
+        'bucket_start': pd.to_datetime(['1969-12-31 23:57', '1969-12-31 23:58',
+                                        '1970-01-01 00:01']),
+        'avg_value': [1.0, 2.0, 8.0],
+    })
+    got = (rollup.gap_fill(spark.createDataFrame(pdf), keys=['k'],
+                           interval_seconds=60, method=method)
+           .toPandas().sort_values('bucket_start'))
+    assert got['bucket_start'].tolist() == list(
+        pd.date_range('1969-12-31 23:57', periods=5, freq='min'))
+    assert got['is_gap'].tolist() == [False, False, True, True, False]
+    assert [None if pd.isna(v) else v for v in got['avg_value']] == want
+
+
 def test_gap_fill_linear_native_bitmatches_np_interp(spark):
     """The window-function linear fill (no Python, spillable at decade-long
     series scale) must reproduce np.interp bit-for-bit, edges included."""

@@ -409,7 +409,7 @@ def test_streaming_sax_frames_finalize_to_batch_tier(spark, events_dir):
 def test_streaming_gap_fill_matches_batch(spark, events_dir, tmp_path, method):
     """Closed-bucket tier (append mode, out-of-order input files, watermark
     drops late rows) relayed to parquet, then gap-filled two ways: the batch
-    spine-join+window operator vs the stateful streaming recurrence fed one
+    segment-form window operator vs the stateful streaming recurrence fed one
     file per micro-batch.  Row-for-row equal; linear fills BIT-identical."""
     import pandas as pd
 
